@@ -15,8 +15,8 @@ This package re-expresses every stage Spark-first:
 - scaling / noise / anomalies as DataFrame transforms with deterministic
   hash-derived randomness (partition-stable, reproducible at any scale),
 - replay as Structured Streaming / batched slot dispatch,
-- sinks as ``foreachBatch`` / ``foreachPartition`` writers (local parquet /
-  JSON-lines by default; boto-backed variants gated behind import-try),
+- sinks as local writers (parquet / JSON-lines tables, one file per
+  object),
 - plus large-scale training-data-pipeline extensions: dedup (exact,
   MinHash-LSH, SimHash, n-gram Jaccard, embedding cosine), similarity
   search (brute-force + LSH-bucketed ANN), multimodal binary columns, and

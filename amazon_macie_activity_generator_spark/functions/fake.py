@@ -56,7 +56,7 @@ def _u(key: Column, salt: object) -> Column:
     return F.pmod(_h(key, salt), F.lit(1 << 53)) / F.lit(float(1 << 53))
 
 
-def _choice(key: Column, salt: object, options: list[str]) -> Column:
+def choice(key: Column, salt: object, options: list[str]) -> Column:
     arr = F.array(*[F.lit(o) for o in options])
     return F.element_at(arr, (F.pmod(_h(key, salt), F.lit(len(options))) + 1).cast("int"))
 
@@ -112,7 +112,7 @@ def swift_code(key: Column) -> Column:
     (main.py:126-139)."""
     base = F.concat(
         rand_string(key, "sw1", 4, UPPER),
-        _choice(key, "sw2", _SWIFT_COUNTRIES),
+        choice(key, "sw2", _SWIFT_COUNTRIES),
         rand_string(key, "sw3", 2, UPPER),
     )
     return F.when(
@@ -124,7 +124,7 @@ def cve(key: Column, year: int | None = None) -> Column:
     """F3 — 'CVE-%d-%04d', year in [1999, now], id in [1, choice(1e4-1e7-1)]
     (main.py:141-149)."""
     max_year = year or datetime.now(timezone.utc).year
-    ub = _choice(key, "cve2", ["9999", "99999", "999999", "9999999"]).cast("long")
+    ub = choice(key, "cve2", ["9999", "99999", "999999", "9999999"]).cast("long")
     return F.format_string(
         "CVE-%d-%04d",
         _randint(key, "cve1", 1999, max_year),
@@ -154,7 +154,7 @@ def aws_creds(key: Column) -> Column:
 
 def slack_creds(key: Column) -> Column:
     """F5 — 'slack_token=xox[apbo]-' + digit groups (main.py:186-205)."""
-    prefix = F.concat(F.lit("slack_token="), _choice(key, "sl1", ["xoxa-", "xoxp-", "xoxb-", "xoxo-"]))
+    prefix = F.concat(F.lit("slack_token="), choice(key, "sl1", ["xoxa-", "xoxp-", "xoxb-", "xoxo-"]))
     four = F.format_string(
         "%s-%s-%s-%s",
         rand_string(key, "sl2", 4, DIGITS), rand_string(key, "sl3", 4, DIGITS),
@@ -175,7 +175,7 @@ _GITHUB_KEYS = [
 def github_creds(key: Column) -> Column:
     """F6 — '<name>:"<40 alnum>"' (main.py:207-216)."""
     return F.concat(
-        _choice(key, "gh1", _GITHUB_KEYS), F.lit(':"'),
+        choice(key, "gh1", _GITHUB_KEYS), F.lit(':"'),
         rand_string(key, "gh2", 40, ALNUM), F.lit('"' + CRLF),
     )
 
@@ -186,7 +186,7 @@ _FACEBOOK_KEYS = ["facebook_secret", "FACEBOOK_SECRET", "facebook_app_secret", "
 def facebook_creds(key: Column) -> Column:
     """F7 — '<name>="<32 hex>"' (main.py:218-226)."""
     return F.concat(
-        _choice(key, "fb1", _FACEBOOK_KEYS), F.lit('="'),
+        choice(key, "fb1", _FACEBOOK_KEYS), F.lit('="'),
         rand_string(key, "fb2", 32, HEX_LOWER), F.lit('"' + CRLF),
     )
 
@@ -216,7 +216,7 @@ def linux_passwd(key: Column) -> Column:
         names,
         lambda nm: F.format_string(
             "%s:%s:%d:%d:%s:/usr/%s:/sbin/nologin" + CRLF,
-            nm, _choice(nm, _h(key, "pw2"), ["*", "x"]),
+            nm, choice(nm, _h(key, "pw2"), ["*", "x"]),
             F.pmod(_h(key, "pw3", nm), F.lit(65535)) + 1,
             F.pmod(_h(key, "pw4", nm), F.lit(65535)) + 1,
             nm, nm,
@@ -234,7 +234,7 @@ def linux_shadow(key: Column) -> Column:
         names,
         lambda nm: F.format_string(
             "%s:%s:%d:%d:%d:%d:%d:%d:" + CRLF,
-            nm, _choice(nm, _h(key, "sh2"), ["*", "!!", "*LOCK*"]),
+            nm, choice(nm, _h(key, "sh2"), ["*", "!!", "*LOCK*"]),
             F.pmod(_h(key, "sh3", nm), F.lit(9001)) + 1000,
             F.pmod(_h(key, "sh4", nm), F.lit(10)) + 1,
             F.pmod(_h(key, "sh5", nm), F.lit(10)) + 1,
@@ -325,7 +325,7 @@ _CARD_TYPES = ["VISA 16 digit", "Mastercard", "American Express", "Discover"]
 
 
 def _word(key: Column, salt: object) -> Column:
-    return _choice(key, salt, _WORDS)
+    return choice(key, salt, _WORDS)
 
 
 def sentence(key: Column) -> Column:
@@ -338,11 +338,11 @@ def sentence(key: Column) -> Column:
 
 
 def first_name(key: Column) -> Column:
-    return F.initcap(_choice(key, "fn", _FIRST_NAMES))
+    return F.initcap(choice(key, "fn", _FIRST_NAMES))
 
 
 def last_name(key: Column) -> Column:
-    return F.initcap(_choice(key, "ln", _LAST_NAMES))
+    return F.initcap(choice(key, "ln", _LAST_NAMES))
 
 
 def name(key: Column) -> Column:
@@ -351,8 +351,8 @@ def name(key: Column) -> Column:
 
 def email(key: Column) -> Column:
     return F.concat(
-        _choice(key, "em1", _FIRST_NAMES), F.lit("."), _choice(key, "em2", _LAST_NAMES),
-        F.lit("@"), _choice(key, "em3", _DOMAINS),
+        choice(key, "em1", _FIRST_NAMES), F.lit("."), choice(key, "em2", _LAST_NAMES),
+        F.lit("@"), choice(key, "em3", _DOMAINS),
     )
 
 
@@ -384,9 +384,9 @@ def zipcode(key: Column) -> Column:
 def address(key: Column) -> Column:
     return F.format_string(
         "%d %s %s, %s, %s %s",
-        _randint(key, "ad1", 1, 9999), _choice(key, "ad2", _STREETS),
-        _choice(key, "ad3", _STREET_TYPES), _choice(key, "ad4", _CITIES),
-        _choice(key, "ad5", _STATES), zipcode(key),
+        _randint(key, "ad1", 1, 9999), choice(key, "ad2", _STREETS),
+        choice(key, "ad3", _STREET_TYPES), choice(key, "ad4", _CITIES),
+        choice(key, "ad5", _STATES), zipcode(key),
     )
 
 
@@ -460,7 +460,7 @@ def credit_card_number(key: Column) -> Column:
 def credit_card_full(key: Column) -> Column:
     """Multi-line card blob like Faker's credit_card_full."""
     return F.concat(
-        _choice(key, "ccf1", _CARD_TYPES), F.lit(CRLF),
+        choice(key, "ccf1", _CARD_TYPES), F.lit(CRLF),
         name(key), F.lit(CRLF),
         credit_card_number(key),
         F.format_string(" %02d/%02d", _randint(key, "ccf2", 1, 12), _randint(key, "ccf3", 26, 34)),
@@ -470,7 +470,7 @@ def credit_card_full(key: Column) -> Column:
 
 
 def file_name(key: Column) -> Column:
-    return F.concat(_word(key, "fi1"), F.lit("."), _choice(key, "fi2", _FILE_EXTS))
+    return F.concat(_word(key, "fi1"), F.lit("."), choice(key, "fi2", _FILE_EXTS))
 
 
 def file_path(key: Column) -> Column:
@@ -490,7 +490,7 @@ _JOBS = ["Engineer", "Teacher", "Nurse", "Accountant", "Designer", "Chemist", "P
 
 
 def job(key: Column) -> Column:
-    return _choice(key, "job", _JOBS)
+    return choice(key, "job", _JOBS)
 
 
 _COMPANY_SUFFIXES = ["Inc", "LLC", "Group", "Ltd", "PLC", "and Sons"]
@@ -499,17 +499,17 @@ _COMPANY_SUFFIXES = ["Inc", "LLC", "Group", "Ltd", "PLC", "and Sons"]
 def company(key: Column) -> Column:
     """Faker .company() analog: 'Capitalized-Lastname Suffix'."""
     return F.concat(
-        F.initcap(_choice(key, "co1", _LAST_NAMES)), F.lit(" "),
-        F.initcap(_choice(key, "co2", _WORDS)), F.lit(" "),
-        _choice(key, "co3", _COMPANY_SUFFIXES),
+        F.initcap(choice(key, "co1", _LAST_NAMES)), F.lit(" "),
+        F.initcap(choice(key, "co2", _WORDS)), F.lit(" "),
+        choice(key, "co3", _COMPANY_SUFFIXES),
     )
 
 
 def user_name(key: Column) -> Column:
     """Faker .user_name() analog: first-initial + last name + 2 digits."""
     return F.concat(
-        F.substring(_choice(key, "un1", _FIRST_NAMES), 1, 1),
-        _choice(key, "un2", _LAST_NAMES),
+        F.substring(choice(key, "un1", _FIRST_NAMES), 1, 1),
+        choice(key, "un2", _LAST_NAMES),
         F.lpad(_randint(key, "un3", 0, 99).cast("string"), 2, "0"),
     )
 
@@ -518,7 +518,7 @@ def url(key: Column) -> Column:
     """Faker .url() analog on reserved example domains."""
     return F.concat(
         F.lit("https://"), _word(key, "u1"), F.lit("."),
-        _choice(key, "u2", _DOMAINS), F.lit("/"), _word(key, "u3"),
+        choice(key, "u2", _DOMAINS), F.lit("/"), _word(key, "u3"),
     )
 
 
@@ -610,7 +610,7 @@ def fake_document(
     """
     fake_types = fake_types or ["sentence"]
 
-    provider = _choice(key, "prov", fake_types)
+    provider = choice(key, "prov", fake_types)
     # content: dispatch the chosen provider via a when-chain; line i keyed
     # by (key, line, i) so repeated lines differ. Names outside the
     # curated registry fall back to the seeded generic provider, mirroring

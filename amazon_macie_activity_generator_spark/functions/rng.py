@@ -118,14 +118,3 @@ def counter_gauss(counter: Column, spread: int = 1 << 20) -> Column:
     u1 = F.greatest(counter_unit(counter), F.lit(1e-16))
     u2 = counter_unit(counter + F.lit(spread))
     return F.sqrt(F.lit(-2.0) * F.log(u1)) * F.cos(F.lit(2.0 * math.pi) * u2)
-
-
-def hash_choice(options: list[str], *identity: Column | str, salt: int | str = 0) -> Column:
-    """Deterministic uniform choice from a small list of string options.
-
-    Replaces ``random.choice`` (provider pick main.py:989, content-type
-    main.py:1012-1016) with a hash-indexed lookup.
-    """
-    idx = hash_int(*identity, n=len(options), salt=salt)
-    arr = F.array(*[F.lit(o) for o in options])
-    return F.element_at(arr, (idx + 1).cast("int"))

@@ -43,7 +43,9 @@ from amazon_macie_activity_generator_spark.formula import translate_formula
 from amazon_macie_activity_generator_spark.functions.rng import hash_int
 
 
-def _anomaly_value_expr(spec: dict, t_col: str = "t") -> tuple[Column, set[str]]:
+def anomaly_value_expr(spec: dict, t_col: str = "t") -> tuple[Column, set[str]]:
+    """The injected anomaly value and the per-series stats it needs
+    (``attach_series_stats`` adds them before it is evaluated)."""
     formula = spec.get("formula")
     if formula:
         sql, needed = translate_formula(str(formula), t_col=t_col)
@@ -61,7 +63,7 @@ def _anomaly_value_expr(spec: dict, t_col: str = "t") -> tuple[Column, set[str]]
     )
 
 
-def _attach_series_stats(
+def attach_series_stats(
     df: DataFrame,
     needed: set[str],
     value_col: str,
@@ -151,7 +153,7 @@ def apply_anomalies(
         is_hit = anomaly_hit_expr(spec, n_points, spec_idx, t_col, identity, mode)
         if is_hit is None:
             continue
-        val_expr, needed = _anomaly_value_expr(spec, t_col=t_col)
+        val_expr, needed = anomaly_value_expr(spec, t_col=t_col)
         if needed and applied_any:
             # checkpoint the post-previous-spec frame before aggregating
             # over it: without the barrier, spec k's stats groupBy replays
@@ -159,7 +161,7 @@ def apply_anomalies(
             # S-spec blueprints (the bpe_merges round-persist pattern;
             # single-spec configs never persist)
             df = scoped_persist(df, "apply_anomalies", keep=2)
-        df = _attach_series_stats(df, needed, value_col, by)
+        df = attach_series_stats(df, needed, value_col, by)
         df = df.withColumn(value_col, F.when(is_hit, val_expr.cast("double")).otherwise(F.col(value_col)))
         df = df.drop(*[c for c in needed])
         applied_any = True

@@ -42,9 +42,9 @@ def tokens_expr(text: Column) -> Column:
 
 
 # DuckDB twin of tokens_expr, co-located so a tokenizer change edits the
-# Spark expression and its oracle fragment in the SAME file. Every
-# queries_ext* module imports this — never re-declare it (r7 review: the
-# JAVA_WS fix had to touch four identical copies).
+# Spark expression and its oracle fragment in the SAME file. Oracles
+# import this — never re-declare it (r7 review: the JAVA_WS fix had to
+# touch four identical copies).
 DUCK_TOKS_SQL = (
     rf"list_filter(string_split_regex(lower(trim(text)), '[{JAVA_WS}]+'),"
     rf" x -> x <> '')"
@@ -163,7 +163,7 @@ def _banded_self_pairs(
     r13 (guide §2.4): bucket membership is gathered with ONE
     (band, bh)-keyed aggregation — ``sort_array(collect_list(id))`` —
     and pairs explode in-task over the sorted list (the
-    ``_order_part_pairs`` construction, queries_ext4.py). The previous
+    ``_order_part_pairs`` construction, queries_warehouse.py). The previous
     form tagged bucket sizes with a partitioned window and SELF-JOINED
     the banded table on (band, bh): one shuffle for the window plus a
     re-shuffle of each join side. This form shuffles the banded table
@@ -558,10 +558,7 @@ def _simhash64_expr(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.select(F.col(id_col).alias("id"), sig.alias("simhash"))
 
 
-def simhash64_md5(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    use_arrow: bool = True,
-) -> DataFrame:
+def simhash64_md5(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """63-bit SimHash from md5 token digests — the ORACLE BRIDGE twin of
     ``simhash64`` (same Charikar vote fold, same 63-bit layout, so
     ``simhash_near_pairs`` consumes it unchanged): md5 hex digests are
@@ -571,28 +568,19 @@ def simhash64_md5(
     one xxhash64; keep this for correctness anchoring, ``simhash64`` for
     production scale (the ``minhash_signature_md5`` convention).
 
-    ``use_arrow=True`` (r13, guide §4) computes the digests with Python
-    hashlib (byte-identical to JVM md5) and runs the vote fold as the
-    same vectorized Arrow batch kernel as ``_simhash64_arrow`` — the
-    expression form below spent its time in the non-codegen nibble-parse
-    higher-order chain, not in md5 itself. ``use_arrow=False`` keeps the
-    pure-expression fold (same signatures bit-for-bit, asserted in
-    tests/test_arrow_parity.py).
+    The digests come from Python hashlib (byte-identical to JVM md5) and
+    the vote fold runs as the same vectorized Arrow batch kernel as
+    ``_simhash64_arrow``. The ``dedup_simhash_md5`` oracle re-derives the
+    signatures in DuckDB, and tests/test_extensions.py pins the
+    degenerate ones.
 
-    Bit b of a token's vote vector is bit b of its md5 digest, parsed
-    nibble-by-nibble with ``// [8,4,2,1] % 2`` arithmetic — no dynamic
-    shifts (Spark's shiftright takes only literal amounts), mirrored
-    verbatim in the oracle SQL. Tie rule matches the production fold
-    exactly: bit set iff votes STRICTLY > 0 (= strict majority of ones,
-    ``2*ones > n`` above), so empty-token AND null-text docs fold to
-    signature 0 in both paths and both engines (the null coalesce below
-    and the oracle's ``coalesce(sig, 0)`` pin the null case)."""
-    if use_arrow:
-        return _simhash64_md5_arrow(df, text_col, id_col)
-    return _simhash64_md5_expr(df, text_col, id_col)
-
-
-def _simhash64_md5_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    Bit b of a token's vote vector is bit b of its md5 digest (MSB-first),
+    which the oracle SQL parses nibble-by-nibble with ``// [8,4,2,1] % 2``
+    arithmetic. Tie rule matches the production fold exactly: bit set iff
+    votes STRICTLY > 0 (= strict majority of ones, ``2*ones > n``), so
+    empty-token AND null-text docs fold to signature 0 in both engines
+    (the null coalesce below and the oracle's ``coalesce(sig, 0)`` pin
+    the null case)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
@@ -605,7 +593,7 @@ def _simhash64_md5_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame
         # np.add.reduceat. Hex-nibble bit order == np.unpackbits order:
         # vote bit b is bit (3 - b%4) of hex nibble b//4, which IS
         # MSB-first bit b of the digest bytes, so bits[:, :63] maps
-        # 1:1 onto the expression form's [8,4,2,1]-divisor parse.
+        # 1:1 onto the oracle's [8,4,2,1]-divisor parse.
         out = np.zeros(len(tok_lists), dtype=np.int64)
         lens = np.fromiter(
             (0 if t is None else len(t) for t in tok_lists),
@@ -635,55 +623,6 @@ def _simhash64_md5_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame
 
     toks = F.coalesce(tokens_expr(F.col(text_col)), F.array())
     return df.select(F.col(id_col).alias("id"), md5_vote_fold(toks).alias("simhash"))
-
-
-def _simhash64_md5_expr(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Pure-expression md5 vote fold (see ``simhash64_md5``)."""
-    toks_nib = F.transform(
-        F.coalesce(tokens_expr(F.col(text_col)), F.array()),
-        lambda t: F.element_at(
-            F.transform(
-                F.array(F.md5(t)),  # bind the digest once (array-wrap trick)
-                lambda h: F.transform(
-                    F.sequence(F.lit(0), F.lit(15)),
-                    lambda i: F.conv(
-                        F.substr(h, i + F.lit(1), F.lit(1)), 16, 10
-                    ).cast("int"),
-                ),
-            ),
-            1,
-        ),
-    )
-    divisors = F.array(F.lit(8), F.lit(4), F.lit(2), F.lit(1))
-
-    def bits63(nv):
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(62)),
-            lambda b: (
-                F.element_at(nv, (b / F.lit(4)).cast("int") + F.lit(1))
-                / F.element_at(divisors, F.pmod(b, F.lit(4)).cast("int") + F.lit(1))
-            ).cast("int")
-            % F.lit(2),
-        )
-
-    votes = F.aggregate(
-        toks_nib,
-        F.array_repeat(F.lit(0), 63),
-        lambda acc, nv: F.zip_with(
-            acc, bits63(nv), lambda a, bt: a + bt * F.lit(2) - F.lit(1)
-        ),
-    )
-    base = df.select(F.col(id_col).alias("id"), votes.alias("_v"))
-    sig = None
-    for b in range(63):  # static unroll: 63 literal-shift terms, codegen-able
-        term = (
-            F.when(F.element_at(F.col("_v"), b + 1) > 0, F.lit(1 << b).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-        )
-        sig = term if sig is None else sig + term
-    return base.select("id", sig.alias("simhash"))
 
 
 def simhash_near_pairs(sig_df: DataFrame, max_hamming: int = 3) -> DataFrame:

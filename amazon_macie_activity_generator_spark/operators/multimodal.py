@@ -585,7 +585,7 @@ def _wav_encode_ms_adpcm(samples, rate: int, samples_per_block: int,
     tracks the decoder's reconstruction exactly, so the decoded output
     is the predictor track this encoder computed — the property that
     lets the DuckDB oracle replay the LOSSY codec as a recursive state
-    machine (the IMA pattern, queries_ext5.py). ``predictor`` selects
+    machine (the IMA pattern, queries_media.py). ``predictor`` selects
     which standard coefficient pair every block uses (a real encoder
     picks per-block; fixing it keeps the oracle a single recurrence),
     ``init_delta`` (>= 16) is each block's starting iDelta."""

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 # reference parity: the queue/payload bodies come from json.dumps, which
 # KEEPS null-valued fields (main.py:686-709) — Spark's to_json drops
 # them by default, which silently diverges on any null datapoint
-_JSON_OPTS = {"ignoreNullFields": "false"}
+JSON_OPTS = {"ignoreNullFields": "false"}
 
 SOURCE_NAME = "amazon-macie-activity-generator"  # payload `source`, main.py:824
 
@@ -56,7 +56,7 @@ def slot_row_json(
     queue entry body (main.py:704). Deterministic key order via sort_array."""
     entries = F.sort_array(F.collect_list(F.struct(F.col(series_col), F.col(value_col))))
     return df.groupBy(t_col).agg(
-        F.to_json(F.map_from_entries(entries), _JSON_OPTS).alias("body")
+        F.to_json(F.map_from_entries(entries), JSON_OPTS).alias("body")
     )
 
 
@@ -114,6 +114,6 @@ def payload_envelope(
                 F.col(datapoints_col).alias("datapoints"),
                 tgt_struct.alias("target"),
             ),
-            _JSON_OPTS,
+            JSON_OPTS,
         ).alias("payload")
     )

@@ -179,38 +179,13 @@ def _infer_dim(df: DataFrame, vec_col: str) -> int:
     return row["d"] if row is not None and row["d"] else 1
 
 
-def _bucket_from(dv: Column, mat: list[list[float]]) -> Column:
-    """Bucket id from a *bound* double-vector lambda variable. Planes are
-    literal arrays (constant-folded once by Catalyst, never per row)."""
-    bucket = F.lit(0).cast("long")
-    for p, row in enumerate(mat):
-        plane = F.array(*[F.lit(s) for s in row])
-        dot = F.aggregate(
-            F.zip_with(dv, plane, lambda x, s: x * s), F.lit(0.0), lambda acc, x: acc + x
-        )
-        bucket = bucket + F.when(dot >= 0, F.lit(1 << p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return bucket
-
-
-def srp_bucket_expr(vec: Column, planes: int = 12, salt: str = "srp", dim: int = 64) -> Column:
-    """Signed-random-projection bucket id (Charikar '02 SRP) as a pure
-    expression. The cast vector is bound once as a lambda argument so the
-    per-plane dots share one evaluation of it."""
-    mat = srp_planes(dim, planes, salt)
-    return F.element_at(
-        F.transform(F.array(_dvec(vec)), lambda dv: _bucket_from(dv, mat)), 1
-    )
-
-
 def srp_buckets_arrow(mats: list[list[list[float]]]):
     """All tables' bucket ids in ONE vectorized pass: a pandas UDF whose
     body is a single (batch x dim) @ (dim x tables*planes) matmul + sign
     bit-pack. Higher-order-function lambdas evaluate interpreted at ~1us
-    per element — the 4-table expression form measured 11s on 2k vectors
-    where this takes milliseconds. Bit convention identical to
-    ``_bucket_from`` (dot >= 0 sets bit p), asserted in tests.
+    per element — a 4-table expression form measured 11s on 2k vectors
+    where this takes milliseconds. Bit p is set iff the dot with plane p
+    is >= 0; the LSH entries' DuckDB oracles re-derive the same buckets.
 
     NULL- and RAGGED-safe: a NULL vector row, or one whose length is not
     the plane dim (ragged encodes happen at crawl scale), buckets as the
@@ -503,6 +478,36 @@ def ivf_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(query_id_col, id_col, "sim", "rank")
+    )
+
+
+def recall_at_k(exact: DataFrame, ann: DataFrame) -> DataFrame:
+    """Per-query recall of ``ann`` against ``exact``, both top-k
+    ``(query_id, vec_id)`` frames: ``(query_id, n_exact, n_overlap,
+    recall_at_k)``.
+
+    ``ann`` must be duplicate-free on (query_id, vec_id), or the left
+    join fans out and inflates both counts. The catalog's producers
+    guarantee it upstream: ``lsh_scored_candidates`` and ``ivf_topk``
+    each ``dropDuplicates`` their candidate pairs before ranking (the
+    ``row_number`` cut alone would not dedupe).
+
+    ONE left join + ONE aggregation: the left join preserves every exact
+    row once (n_exact = count(*)) and marks the matched ones
+    (n_overlap = count(match)); a query with zero ANN hits gets
+    n_overlap = 0. Counting exact and overlap separately and joining
+    the counts would consume the exact top-k subtree twice."""
+    marked = ann.select("query_id", "vec_id", F.lit(1).alias("__m"))
+    return (
+        exact.join(marked, ["query_id", "vec_id"], "left")
+        .groupBy("query_id")
+        .agg(F.count(F.lit(1)).alias("n_exact"), F.count("__m").alias("n_overlap"))
+        .select(
+            "query_id",
+            "n_exact",
+            "n_overlap",
+            F.round(F.col("n_overlap") / F.col("n_exact"), 4).alias("recall_at_k"),
+        )
     )
 
 

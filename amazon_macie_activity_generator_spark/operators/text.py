@@ -34,11 +34,6 @@ def stopword_hits_tokens(toks: Column, lang: str) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
 
 
-def stopword_hits(text: Column, lang: str) -> Column:
-    """Count of tokens (with repeats) in `lang`'s stopword list."""
-    return stopword_hits_tokens(tokens_expr(text), lang)
-
-
 def lang_id_expr(text: Column) -> Column:
     """Heuristic language-ID: argmax of stopword hit counts; ties and
     zero-evidence fall back to 'und'. Deterministic tie-break by the
@@ -117,7 +112,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 # (functions/fake.py F1-F11) — generation's defensive complement for
 # training-data hygiene. Patterns restricted to syntax shared by Java
 # regex (Spark) and RE2 (DuckDB) so detection oracle-checks.
-# ONE pattern table for both engines — queries_ext.py interpolates these
+# ONE pattern table for both engines — queries_text.py interpolates these
 # same strings into the DuckDB oracle, so a tweak can never drift.
 #
 # The email quantifiers are BOUNDED (RFC 5321 caps: local part <= 64,

@@ -196,9 +196,9 @@ def generate(
     """
     from amazon_macie_activity_generator_spark.functions.rng import hash_gauss
     from amazon_macie_activity_generator_spark.operators.anomalies import (
-        _anomaly_value_expr,
-        _attach_series_stats,
         anomaly_hit_expr,
+        anomaly_value_expr,
+        attach_series_stats,
     )
     from amazon_macie_activity_generator_spark.operators.noise import noise_enabled
     from amazon_macie_activity_generator_spark.operators.scaling import scale_expr
@@ -326,7 +326,7 @@ def generate(
         needed_all: set[str] = set()
         branches = []
         for formula, series_ids in formulas.items():
-            val_expr, needed = _anomaly_value_expr({"formula": formula} if formula else {})
+            val_expr, needed = anomaly_value_expr({"formula": formula} if formula else {})
             needed_all |= needed
             cond = F.col("__hit").isNotNull() & F.col("series_id").isin(series_ids)
             branches.append((cond, val_expr))
@@ -336,7 +336,7 @@ def generate(
             from amazon_macie_activity_generator_spark.cache import scoped_persist
 
             df = scoped_persist(df, "generate_anomaly_layers", keep=2)
-        df = _attach_series_stats(df, needed_all, "value", ["series_id"])
+        df = attach_series_stats(df, needed_all, "value", ["series_id"])
         chain = F.col("value")
         for cond, val_expr in reversed(branches):
             chain = F.when(cond, val_expr.cast("double")).otherwise(chain)

@@ -1,17 +1,13 @@
-"""K1-K8 — sinks, local-mode first (SURVEY.md §2.5, §7.5).
+"""K1-K6 — sinks, local mode (SURVEY.md §2.5, §7.5).
 
 Every reference sink is a side-effecting per-datapoint AWS call loop; the
-Spark shape is the same interface twice over:
+Spark shape splits it in two:
 
 - a **row builder** (pure DataFrame -> DataFrame, unit-testable, oracle-
   friendly) that produces exactly the rows/payloads the reference would
   send, and
-- a **writer** that materializes them — parquet/JSON-lines tables in
-  local mode, or ``foreachPartition`` with a per-partition client factory
-  for real remote sinks (clients are unserializable, so they are built
-  inside the partition — the same constraint that forces the reference to
-  build its boto clients on the main thread, main.py:1168-1172; K8
-  per-target credentials resolve inside the factory).
+- a local **writer** that materializes them as parquet / JSON-lines
+  tables or one file per object.
 
 At-most-once (main.py:726-731): side-effecting writers run with idempotent
 keys (object_key / partitioned overwrite) rather than task retries.
@@ -20,14 +16,14 @@ keys (object_key / partitioned overwrite) rather than task retries.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from amazon_macie_activity_generator_spark.functions.fake import (
-    _choice,
+    choice,
     fake_document,
     uuid4_expr,
 )
@@ -61,8 +57,8 @@ def metrics_rows(
     """K3 row builder — CloudWatch put_metric_data members
     (execute_datapoints_on_cloudwatch, main.py:884-913): metric
     'Timeseries', dims {Shape, Id}, unit Count, parsed timestamp. The
-    10-member batching (main.py:909-913) is an API-limit detail that the
-    remote writer applies per partition."""
+    10-member batching (main.py:909-913) is an API-limit detail of the
+    remote call; local mode appends whole tables."""
     return df.select(
         F.lit(namespace).alias("namespace"),
         F.lit(metric_name).alias("metric_name"),
@@ -72,10 +68,6 @@ def metrics_rows(
         F.col("value").cast("double").alias("value"),
         F.lit("Count").alias("unit"),
     )
-
-
-def write_metrics(df: DataFrame, path: str) -> None:
-    metrics_rows(df).write.mode("append").parquet(path)
 
 
 # ----------------------------------------------------- K4 lambda payloads
@@ -115,7 +107,7 @@ def s3_get_activity_rows(
     key = F.xxhash64(*[F.col(c) for c in key_cols], F.col("act_idx"))
     if real_keys:
         pool = real_keys[:1000]  # S3_LIST_OBJECTS_MAX, main.py:57
-        chosen = _choice(key, "getkey", pool)
+        chosen = choice(key, "getkey", pool)
     else:
         chosen = F.concat(F.lit("fake/"), uuid4_expr(key, "fakekey"))
     return acts.select(*key_cols, "act_idx", chosen.alias("object_key"), F.lit("get").alias("action"))
@@ -150,8 +142,8 @@ def s3_put_activity_rows(
     return acts.withColumn("d", doc).select(
         *key_cols, "act_idx", F.col("d.object_key").alias("object_key"),
         F.col("d.provider").alias("provider"), F.col("d.content").alias("content"),
-        _choice(key, "ctype", [str(c) for c in content_types]).alias("content_type"),
-        _choice(key, "acl", [str(a) for a in acls]).alias("acl"),
+        choice(key, "ctype", [str(c) for c in content_types]).alias("content_type"),
+        choice(key, "acl", [str(a) for a in acls]).alias("acl"),
         F.lit("put").alias("action"),
     )
 
@@ -174,28 +166,3 @@ def write_objects_local(
                 fh.write(row[content_col])
 
     df.select(key_col, content_col).foreachPartition(_write)
-
-
-def write_objects_remote(
-    df: DataFrame,
-    client_factory: Callable[[], Any],
-    bucket: str,
-    batch_size: int = 1,
-) -> None:
-    """K6/K8 remote writer — per-partition client construction (clients
-    are not serializable; per-target credentials resolve inside the
-    factory, set_target_client main.py:830-869), per-row try/except
-    (errors swallowed like touch_bucket_object main.py:970-975)."""
-
-    def _put(rows: Iterator[Any]) -> None:
-        client = client_factory()
-        for row in rows:
-            try:
-                client.put_object(
-                    Bucket=bucket, Key=row["object_key"], Body=row["content"],
-                    ContentType=row["content_type"], ACL=row["acl"],
-                )
-            except Exception:  # noqa: BLE001 — best-effort by design
-                pass
-
-    df.foreachPartition(_put)

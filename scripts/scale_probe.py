@@ -16,7 +16,7 @@ Two replication modes per table family:
   manufacturing K-sized exact-duplicate clusters and identical-vector
   LSH buckets — the giant-bucket / boilerplate-shingle worst case the
   salted joins in operators/dedup.py, operators/similarity.py, and
-  queries_ext4.dedup_containment exist for. Output pair count
+  queries_text.dedup_containment exist for. Output pair count
   necessarily grows ~K^2 per cluster; the probe checks the jobs
   COMPLETE with bounded task sizes rather than that time stays linear,
   and --count-output shows time tracking the OUTPUT, not a quadratic

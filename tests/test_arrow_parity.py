@@ -7,11 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from amazon_macie_activity_generator_spark.operators.dedup import simhash64
-from amazon_macie_activity_generator_spark.operators.similarity import (
-    srp_bucket_expr,
-    srp_buckets_arrow,
-    srp_planes,
-)
+from amazon_macie_activity_generator_spark.operators.similarity import srp_planes
 from amazon_macie_activity_generator_spark.sources.tables import load_table
 
 
@@ -21,38 +17,6 @@ def test_simhash_arrow_matches_expression(spark, sf_dir):
     b = simhash64(docs, use_arrow=False).orderBy("id").toPandas()
     assert a.equals(b)
     assert (a.simhash >= 0).all()  # bit 63 unused
-
-
-def test_simhash_md5_arrow_matches_expression(spark, sf_dir):
-    """The hashlib-md5 Arrow vote fold (r13) must reproduce the
-    expression form's signatures bit-for-bit — the md5-bridge entries'
-    oracle hashes ride on it. Includes the empty/NULL-text rows of the
-    driver corpus folding to signature 0 in both paths."""
-    from amazon_macie_activity_generator_spark.operators.dedup import simhash64_md5
-
-    docs = load_table(spark, sf_dir, "documents").limit(200)
-    a = simhash64_md5(docs, use_arrow=True).orderBy("id").toPandas()
-    b = simhash64_md5(docs, use_arrow=False).orderBy("id").toPandas()
-    assert a.equals(b)
-    assert (a.simhash >= 0).all()  # 63-bit layout, bit 63 unused
-
-
-def test_srp_buckets_arrow_matches_expression(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings").limit(300)
-    mats = [srp_planes(64, 10, "srp0"), srp_planes(64, 10, "srp1")]
-    arrow = emb.select(
-        "vec_id",
-        F.element_at(srp_buckets_arrow(mats)(F.col("embedding")), 1).alias("b0"),
-        F.element_at(srp_buckets_arrow(mats)(F.col("embedding")), 2).alias("b1"),
-    ).orderBy("vec_id").toPandas()
-    expr = emb.select(
-        "vec_id",
-        srp_bucket_expr(F.col("embedding"), 10, "srp0", 64).alias("b0"),
-        srp_bucket_expr(F.col("embedding"), 10, "srp1", 64).alias("b1"),
-    ).orderBy("vec_id").toPandas()
-    assert arrow.equals(expr)
-    # buckets stay in [0, 2^planes)
-    assert ((arrow.b0 >= 0) & (arrow.b0 < 1 << 10)).all()
 
 
 def test_srp_planes_deterministic():

@@ -1,4 +1,4 @@
-"""BPE merge-trick correctness pins (queries_ext5.bpe_merges/bpe_encode).
+"""BPE merge-trick correctness pins (queries_text.bpe_merges/bpe_encode).
 
 The catalog entries encode the greedy non-overlapping left-to-right pair
 merge as a STRING operation: join tokens with double spaces, literal
@@ -21,7 +21,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from amazon_macie_activity_generator_spark.queries_ext5 import _bpe_apply
+from amazon_macie_activity_generator_spark.queries_text import _bpe_apply
 
 
 def greedy_merge(tokens: list[str], w1: str, w2: str) -> list[str]:
@@ -39,7 +39,7 @@ def greedy_merge(tokens: list[str], w1: str, w2: str) -> list[str]:
 
 
 def string_trick_merge(tokens: list[str], w1: str, w2: str) -> list[str]:
-    """The exact transform both engines run (queries_ext5._bpe_apply /
+    """The exact transform both engines run (queries_text._bpe_apply /
     _BPE_DUCK_APPLY), in pure Python."""
     s = "  " + "  ".join(tokens) + "  "
     s = s.replace(f" {w1}  {w2} ", f" {w1}_{w2} ")
@@ -100,7 +100,7 @@ def test_degenerate_corpus_matches_oracle(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from amazon_macie_activity_generator_spark.queries_ext5 import (
+    from amazon_macie_activity_generator_spark.queries_text import (
         SQL_BPE_ENCODE,
         SQL_BPE_MERGES,
         q_bpe_encode,

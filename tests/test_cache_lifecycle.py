@@ -55,8 +55,8 @@ def _drain_to(spark, n: int, timeout_s: float = 15.0) -> int:
 def test_repeat_invocations_bounded(spark, sf_dir):
     """Running bpe_merges + bpe_encode + triangle_count twice each caches
     no more than one invocation's frames per builder."""
-    from amazon_macie_activity_generator_spark.queries_ext4 import q_triangle_count
-    from amazon_macie_activity_generator_spark.queries_ext5 import (
+    from amazon_macie_activity_generator_spark.queries_warehouse import q_triangle_count
+    from amazon_macie_activity_generator_spark.queries_text import (
         q_bpe_encode,
         q_bpe_merges,
     )
@@ -107,8 +107,8 @@ def test_keep_trims_oldest(spark):
 def test_release_all_after_operator_helpers(spark, sf_dir):
     """Operator helpers (minhash/banded/embedding bases) register with a
     keep bound and release_all() drops everything they cached."""
-    from amazon_macie_activity_generator_spark.queries_ext import q_dedup_minhash
-    from amazon_macie_activity_generator_spark.queries_ext3 import q_dedup_incremental
+    from amazon_macie_activity_generator_spark.queries_text import q_dedup_minhash
+    from amazon_macie_activity_generator_spark.queries_text import q_dedup_incremental
 
     release_all()
     spark.catalog.clearCache()

@@ -1,4 +1,4 @@
-"""Semantic invariants for the second extension catalog (queries_ext2):
+"""Semantic invariants for catalog entries (retrieval, clustering, warehouse):
 properties the DuckDB hash-oracle can't express — planted-positive recall,
 structural guarantees, cross-operator consistency."""
 
@@ -167,11 +167,11 @@ def test_scd2_intervals_chain_per_user(spark, sf_dir):
 
 
 def test_recall_at_5_matches_two_count_formulation(spark):
-    """r14: the fused one-join recall tail (_recall_at_5) must equal the
+    """r14: the fused one-join recall tail (recall_at_k) must equal the
     old two-count/left-semi/left-outer formulation on every edge the old
     code handled — including a query with ZERO ann hits (old path:
     left-outer NULL -> coalesce(0))."""
-    from amazon_macie_activity_generator_spark.queries_ext import _recall_at_5
+    from amazon_macie_activity_generator_spark.operators.similarity import recall_at_k
 
     exact = spark.createDataFrame(
         [(1, 10), (1, 11), (1, 12), (2, 20), (2, 21), (3, 30)],
@@ -182,7 +182,7 @@ def test_recall_at_5_matches_two_count_formulation(spark):
     ann = spark.createDataFrame(
         [(1, 10), (1, 99), (3, 30)], "query_id int, vec_id int"
     )
-    got = {r.query_id: r for r in _recall_at_5(exact, ann).collect()}
+    got = {r.query_id: r for r in recall_at_k(exact, ann).collect()}
 
     overlap = exact.join(ann, ["query_id", "vec_id"], "left_semi")
     old = {
@@ -200,11 +200,11 @@ def test_recall_at_5_matches_two_count_formulation(spark):
             F.coalesce("n_overlap", F.lit(0)).alias("n_overlap"),
             F.round(
                 F.coalesce("n_overlap", F.lit(0)) / F.col("n_exact"), 4
-            ).alias("recall_at_5"),
+            ).alias("recall_at_k"),
         )
         .collect()
     }
     assert set(got) == set(old) == {1, 2, 3}
     for q in got:
         assert got[q] == old[q]
-    assert got[2].n_overlap == 0 and got[2].recall_at_5 == 0.0
+    assert got[2].n_overlap == 0 and got[2].recall_at_k == 0.0

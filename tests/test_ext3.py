@@ -1,4 +1,4 @@
-"""Semantic invariants for the third extension catalog (queries_ext3):
+"""Semantic invariants for catalog entries (text, warehouse and graph):
 properties the DuckDB hash-oracle can't express — bounds, structural
 guarantees, cross-operator consistency."""
 
@@ -116,7 +116,7 @@ def test_winnowing_survives_short_documents(spark, tmp_path):
     """A doc with fewer than k=5 tokens must contribute zero fingerprints,
     not crash the job (sequence(1, 0) is descending and slice(tk, 0, k)
     is an illegal start — regression for the short-doc guard)."""
-    from amazon_macie_activity_generator_spark.queries_ext3 import q_winnowing_fingerprint
+    from amazon_macie_activity_generator_spark.queries_text import q_winnowing_fingerprint
 
     rows = [
         (1, "a b c", "en", "srcA", 5),                       # < k tokens
@@ -135,7 +135,7 @@ def test_winnowing_survives_short_documents(spark, tmp_path):
 def test_event_funnel_monotone(spark, sf_dir):
     """Funnel stages can only shrink: users >= viewed >= clicked-after-
     view >= purchased-after-click."""
-    from amazon_macie_activity_generator_spark.queries_ext3 import q_event_funnel
+    from amazon_macie_activity_generator_spark.queries_warehouse import q_event_funnel
 
     r = q_event_funnel(spark, sf_dir).first()
     assert r.n_users >= r.viewed >= r.clicked_after_view >= r.purchased_after_click
@@ -222,7 +222,7 @@ def test_containment_null_doc_id_counts_toward_df_cap(spark, tmp_path):
     NULL-id doc sits at the cap and keeps its C(3,2) pairs."""
     import pandas as pd
 
-    from amazon_macie_activity_generator_spark.queries_ext4 import (
+    from amazon_macie_activity_generator_spark.queries_text import (
         q_dedup_containment,
     )
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from amazon_macie_activity_generator_spark.queries_ext5 import (
+from amazon_macie_activity_generator_spark.queries_vectors import (
     q_hard_negatives,
     q_hard_negatives_lsh,
 )

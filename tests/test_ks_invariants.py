@@ -11,7 +11,7 @@ import os
 
 import pytest
 
-from amazon_macie_activity_generator_spark.queries_ext5 import q_ks_value_drift
+from amazon_macie_activity_generator_spark.queries_warehouse import q_ks_value_drift
 
 
 def _write_events(spark, tmp_path, rows):

@@ -120,7 +120,7 @@ def test_minhash_md5_join_is_keyed(spark, sf_dir):
     """LSH candidate generation must join on (band, bh) buckets — a
     nested-loop/cartesian plan would be the all-pairs comparison LSH
     exists to avoid."""
-    from amazon_macie_activity_generator_spark.queries_ext import q_dedup_minhash_md5
+    from amazon_macie_activity_generator_spark.queries_text import q_dedup_minhash_md5
 
     df = q_dedup_minhash_md5(spark, sf_dir)
     plan = _plan(df)
@@ -132,7 +132,7 @@ def test_minhash_md5_join_is_keyed(spark, sf_dir):
 def test_interval_join_avoids_nested_loop(spark, sf_dir):
     """Range-containment via time-bucket discretization must plan as a
     keyed join — BNLJ/Cartesian is the quadratic trap it exists to avoid."""
-    from amazon_macie_activity_generator_spark.queries_ext import q_interval_join
+    from amazon_macie_activity_generator_spark.queries_warehouse import q_interval_join
 
     plan = _plan(q_interval_join(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan
@@ -595,7 +595,7 @@ def test_source_overlap_df_cap_guard(spark, sf_dir):
     one boilerplate shingle. Below the cap it is a no-op (hash evidence
     stays valid); at cap=1 every SHARED shingle (df >= 2 by definition)
     is excluded, so no pair can form at all."""
-    from amazon_macie_activity_generator_spark.queries_ext5 import q_source_overlap
+    from amazon_macie_activity_generator_spark.queries_text import q_source_overlap
 
     default = q_source_overlap(spark, sf_dir).toPandas()
     uncapped = q_source_overlap(spark, sf_dir, source_df_cap=10**9).toPandas()
@@ -614,7 +614,7 @@ def test_source_overlap_oracle_tracks_cap(spark, sf_dir):
     still hash-agree — a hardcoded oracle cap would diverge here."""
     import duckdb
 
-    from amazon_macie_activity_generator_spark.queries_ext5 import (
+    from amazon_macie_activity_generator_spark.queries_text import (
         _sql_source_overlap,
         q_source_overlap,
     )
