@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -659,6 +659,21 @@ def simhash_near_pairs(sig_df: DataFrame, max_hamming: int = 3) -> DataFrame:
 
 # ------------------------------------------------- connected components
 
+def _without_size_estimate(df: DataFrame) -> DataFrame:
+    """``df`` over the same rows, planned with Spark's default size
+    estimate instead of one derived from its plan. A checkpoint keeps
+    its plan's estimate and a join estimates the product of its inputs,
+    so a loop that joins its previous checkpoint squares the estimate
+    every round; past about 18 rounds the planner spends seconds, then
+    minutes, then the whole heap multiplying integers of millions of
+    digits. The rows go through the JVM's public ``createDataFrame(
+    JavaRDD[Row], schema)`` — no Python, no extra job."""
+    spark = df.sparkSession
+    return DataFrame(
+        spark._jsparkSession.createDataFrame(df._jdf.javaRDD(), df._jdf.schema()), spark
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src_col: str = "id_a",
@@ -670,12 +685,27 @@ def connected_components(
     document. The step that turns candidate pairs into actual dedup
     decisions (keep group_id, drop the rest).
 
-    Min-label propagation: every node starts labeled with itself; each
-    round takes the min of its own and its neighbors' labels; converges
-    in O(cluster diameter) rounds (near-dup clusters are shallow).
-    Per round: one join + one groupBy — all shuffles on the node id, and
-    ``localCheckpoint`` cuts lineage so plans don't grow per iteration.
-    Stops early when a round changes nothing (one count() per round)."""
+    Min-label propagation with pointer jumping and hooking, so the
+    rounds grow with log(diameter), not with the diameter (measured on
+    chains below; no bound is proven for every id order). Every node
+    starts labeled with itself. A
+    round gives each node the min of its own label, its neighbors'
+    labels and its label's label (the jump), and gives each node's
+    label the labels of the node's neighbors (the hook). A chain whose
+    ids ascend from its minimum converges in ceil(log2 diameter) + 2
+    rounds, the last (unchanged) one included: 6 for 16 nodes, 16 for
+    10,000; ``max_iter`` rounds resolve such a chain up to diameter
+    2^(max_iter-2). Without the hook, other id orders fall back toward
+    one round per hop (a shuffled 1,000-node chain: 250-730 rounds);
+    with it a shuffled 10,000-node chain takes about 20.
+
+    Per round: two joins against the label table — the edge join, then
+    ONE label lookup that serves the edge, hook and jump rows — and one
+    groupBy on the node id, all shuffled on node ids. Each node's own
+    row alone carries its old label into that groupBy, so the round's
+    change count is an observed metric of the round's checkpoint — no
+    second join, no extra count job. ``localCheckpoint`` cuts lineage
+    so plans don't grow per iteration."""
     # both directions from ONE evaluation of the (possibly expensive)
     # edge pipeline: explode a 2-element array instead of a self-union
     bidir = (
@@ -697,36 +727,67 @@ def connected_components(
         .withColumn("label", F.col("id"))
         .localCheckpoint()
     )
+    null_label = F.lit(None).cast(labels.schema["label"].dataType)
     changed = 0
     for _ in range(max_iter):
-        neighbor_min = (
-            bidir.join(labels, bidir.src == labels.id)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("label").alias("nlabel"))
+        lab = labels.alias("lab")
+        # a request looks up label(key) and sends its value — val, else
+        # label(key) — to node and to label(key). Edge (s, d) requests
+        # with key d and val label(s): d gets its neighbor's label and
+        # label(d) is hooked to it. Node v requests with key label(v)
+        # and no val: v gets label(label(v)), the jump (its second row
+        # hands label(label(v)) to itself, a no-op).
+        requests = (
+            bidir.join(lab, F.col("src") == F.col("lab.id"))
+            .select(
+                F.col("dst").alias("key"),
+                F.col("dst").alias("node"),
+                F.col("lab.label").alias("val"),
+            )
+            .unionByName(
+                labels.select(
+                    F.col("label").alias("key"), F.col("id").alias("node"), null_label.alias("val")
+                )
+            )
         )
-        new_labels = (
-            labels.join(neighbor_min, on="id", how="left")
-            .select("id", F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"))
+        sent = F.coalesce("val", "lab.label")
+        received = (
+            requests.join(lab, F.col("key") == F.col("lab.id"))
+            .select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col("node").alias("id"), sent.alias("label")),
+                        F.struct(F.col("lab.label").alias("id"), sent.alias("label")),
+                    )
+                ).alias("r")
+            )
+            .select("r.id", "r.label", null_label.alias("old"))
+        )
+        merged = (
+            labels.select("id", "label", F.col("label").alias("old"))
+            .unionByName(received)
+            .groupBy("id")
+            .agg(F.min("label").alias("label"), F.max("old").alias("old"))
+        )
+        obs = Observation()
+        labels = (
+            _without_size_estimate(merged)
+            .observe(obs, F.count_if(F.col("label") != F.col("old")).alias("changed"))
+            .select("id", "label")
             .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on="id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
+        changed = obs.get["changed"]
         if changed == 0:
             break
     if changed != 0:
         # no silent caps: returning intermediate labels would split one
         # duplicate cluster into many groups and downstream keep-one
-        # dedup would silently retain duplicates. A diameter beyond
-        # max_iter (chain-shaped near-dup graphs) must surface.
+        # dedup would silently retain duplicates
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing): component diameter "
-            "exceeds max_iter — raise max_iter for chain-shaped graphs"
+            f"({changed} labels still changing): it needs O(log diameter) "
+            f"rounds, and max_iter={max_iter} bounds the diameter at about "
+            f"2^{max_iter - 2} — raise max_iter"
         )
     return labels.select(F.col("id"), F.col("label").alias("group_id"))
 

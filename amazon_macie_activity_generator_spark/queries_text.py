@@ -271,7 +271,8 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup GROUP resolution: connected components over the exact
     ngram-Jaccard pairs — (doc_id, group_id = canonical min id). The
     pairs are deterministic, so the whole iterative algorithm
-    oracle-checks against DuckDB's recursive CTE."""
+    oracle-checks against DuckDB's unrolled label propagation
+    (``SQL_DEDUP_GROUPS``)."""
     from amazon_macie_activity_generator_spark.operators.dedup import connected_components
 
     pairs = q_dedup_ngram_jaccard(spark, sf_dir)
@@ -286,14 +287,18 @@ def _make_sql_dedup_groups(rounds: int = 24) -> str:
     reachability CTE, whose working set is sum-of-component-size-squared
     (it enumerates every (node, reachable-label) pair) and which timed
     out at sf1. Each round takes, per node, the min label over
-    self, neighbors, and label-of-label (the pointer jump); after
-    round t every node's label is the min id within graph radius r_t
-    where r_(t+1) >= 2*r_t + 1, so ``rounds=24`` converges for any
-    component with diameter < 2^24 — far beyond the corpus size, and
-    the per-round cost is one edge join + one self join over the
-    node-sized label table (linear, the same shape the engine's
-    label-propagation loop shuffles). An unconverged oracle cannot pass
-    silently: the driver value-hashes the full result."""
+    self, neighbors, and label-of-label (the pointer jump). On a chain
+    whose ids ascend from its minimum, after round t every node's label
+    is the min id within graph radius 2^(t-1) (r_(t+1) = 2*r_t: the
+    jump reaches r_t past a label that is itself r_t away), so a 6-node
+    chain needs 4 changing rounds, a 17-node chain 5, and ``rounds=24``
+    covers diameter <= 2^23. Other id orders can need more rounds (the
+    jump alone gains little when the min within reach is nearby; the
+    engine's loop adds a hook for them). The per-round cost is one edge join +
+    one self join over the node-sized label table (linear, the same
+    shape the engine's label-propagation loop shuffles). An unconverged
+    oracle cannot pass silently: the driver value-hashes the full
+    result."""
     parts = [
         f"WITH pairs AS MATERIALIZED ({SQL_DEDUP_NGRAM}),",
         """edges AS MATERIALIZED (

@@ -36,10 +36,11 @@ _EAGER_CAPS = {
     "streaming_left_join": 6,
     "streaming_append_windows": 6,
     "sessionize_stateful": 8,
-    # connected-components convergence loops: per-round early-stop count
-    # + localCheckpoint materialization (data-dependent round count)
-    "dedup_groups": 60,
-    "dedup_keep_best": 60,
+    # connected-components convergence loops: localCheckpoint
+    # materialization per round (data-dependent, O(log diameter) round
+    # count); 19-21 measured at sf0.001, 32-33 with one round per hop
+    "dedup_groups": 26,
+    "dedup_keep_best": 26,
     # driver-side model state embedded as plan literals: IVF centroids,
     # auto-planes occupancy count, k-means Lloyd iterations
     "embedding_near_dup": 16,

@@ -3,6 +3,8 @@ text heuristics, sessionization properties, multimodal plumbing."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -231,15 +233,69 @@ def test_multimodal_real_decode_unrecognized_bytes_yield_nulls(spark, sf_dir):
         assert r.n_bytes > 0 and len(r.content_hash) == 64
 
 
+def _union_find_groups(pairs):
+    """Reference components: node -> min id of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        # the smaller root wins, so every root is its component's min id
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 def test_connected_components_small_graph(spark):
     from amazon_macie_activity_generator_spark.operators.dedup import connected_components
 
-    # two clusters {1,2,3,9} (chain) and {5,7}, singleton edges only
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 9), (5, 7)], "id_a long, id_b long"
-    )
-    got = {r.id: r.group_id for r in connected_components(edges).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 9: 1, 5: 5, 7: 5}
+    shuffled = [40, 17, 93, 8, 61, 2, 75, 30, 88, 11, 54]  # min mid-chain
+    graphs = {
+        # two clusters {1,2,3,9} (chain) and {5,7}, singleton edges only
+        "two_clusters": [(1, 2), (2, 3), (3, 9), (5, 7)],
+        "shuffled_chain": list(zip(shuffled, shuffled[1:])),
+        "cycle": [(10 + i, 10 + (i + 1) % 6) for i in range(6)],
+        # the center is not the min: a leaf's id must reach the others
+        "star": [(55, leaf) for leaf in range(50, 61) if leaf != 55],
+        "dup_and_reversed": [(20, 21), (21, 20), (20, 21), (22, 21), (21, 22)],
+        "self_loop": [(30, 30), (31, 31), (31, 32)],
+        "empty": [],
+    }
+    for name, pairs in graphs.items():
+        edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+        got = {r.id: r.group_id for r in connected_components(edges).collect()}
+        assert got == _union_find_groups(pairs), name
+    assert _union_find_groups(graphs["two_clusters"]) == {1: 1, 2: 1, 3: 1, 9: 1, 5: 5, 7: 5}
+
+
+def test_connected_components_log_rounds_on_16_node_chain(spark):
+    # ascending ids: ceil(log2 15) + 2 = 6 rounds; one round per hop
+    # would need 16
+    from amazon_macie_activity_generator_spark.operators.dedup import connected_components
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(15)], "id_a long, id_b long")
+    got = {r.id: r.group_id for r in connected_components(chain, max_iter=6).collect()}
+    assert got == {i: 0 for i in range(16)}
+
+
+@pytest.mark.parametrize("order", ["ascending", "shuffled"])
+def test_connected_components_converges_on_10k_node_chain(spark, order):
+    # default max_iter=25: ascending ids take 16 rounds; shuffled ids
+    # take about 20 and need the hook (label jumps alone take hundreds of
+    # rounds) and a planner that does not slow down round after round
+    from amazon_macie_activity_generator_spark.operators.dedup import connected_components
+
+    ids = list(range(10_000))
+    if order == "shuffled":
+        random.Random(0).shuffle(ids)
+    chain = spark.createDataFrame(list(zip(ids, ids[1:])), "id_a long, id_b long")
+    got = connected_components(chain).groupBy("group_id").count().collect()
+    assert [(r.group_id, r["count"]) for r in got] == [(0, 10_000)]
 
 
 def test_connected_components_raises_on_non_convergence(spark):
