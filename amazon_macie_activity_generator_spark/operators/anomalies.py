@@ -63,6 +63,20 @@ def anomaly_value_expr(spec: dict, t_col: str = "t") -> tuple[Column, set[str]]:
     )
 
 
+def series_stat_aggs(needed: set[str], value_col: str) -> dict[str, Column]:
+    """The per-series aggregates behind the ``needed`` formula
+    placeholders, by placeholder name (grouped or windowed by the caller).
+    The length is a sum of 1.0s, a double count that stays an aggregate
+    (``count(...).cast`` would put the cast outside the window)."""
+    aggs = {
+        "__datapoints_max__": F.max(value_col),
+        "__datapoints_min__": F.min(value_col),
+        "__datapoints_len__": F.sum(F.lit(1.0)),
+        "__datapoints_sum__": F.sum(value_col),
+    }
+    return {name: agg for name, agg in aggs.items() if name in needed}
+
+
 def attach_series_stats(
     df: DataFrame,
     needed: set[str],
@@ -72,15 +86,7 @@ def attach_series_stats(
     """Broadcast-join per-series scalar aggregates used by formulas,
     computed from ``df`` itself — the current, post-previous-spec
     series, matching main.py:628's in-loop ``int(np.max(datapoints))``."""
-    aggs = []
-    if "__datapoints_max__" in needed:
-        aggs.append(F.max(value_col).alias("__datapoints_max__"))
-    if "__datapoints_min__" in needed:
-        aggs.append(F.min(value_col).alias("__datapoints_min__"))
-    if "__datapoints_len__" in needed:
-        aggs.append(F.count(F.lit(1)).cast("double").alias("__datapoints_len__"))
-    if "__datapoints_sum__" in needed:
-        aggs.append(F.sum(value_col).alias("__datapoints_sum__"))
+    aggs = [agg.alias(name) for name, agg in series_stat_aggs(needed, value_col).items()]
     if not aggs:
         return df
     stats = df.groupBy(*by).agg(*aggs)

@@ -777,6 +777,9 @@ def q_s3_put_activities(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s3_put_activity_rows(dp, target, key_cols=("event_id",))
 
 
+REPLAY_DRAIN_TIMEOUT_S = 300
+
+
 def q_streaming_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K1/K2 — full queue round-trip: generate a blueprint cycle, enqueue
     slot rows (twice — dedup ids must absorb the duplicate), replay with
@@ -822,7 +825,12 @@ def q_streaming_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(work, "ckpt"), available_now=True,
         max_files_per_trigger=128,
     )
-    sq.awaitTermination(300)
+    if not sq.awaitTermination(REPLAY_DRAIN_TIMEOUT_S):
+        # the delivered directory of an unfinished drain is a partial result
+        sq.stop()
+        raise TimeoutError(
+            f"streaming_replay: the queue drain did not finish in {REPLAY_DRAIN_TIMEOUT_S} s"
+        )
     return spark.read.parquet(os.path.join(work, "delivered")).select("run_id", "t", "body")
 
 

@@ -5,8 +5,9 @@ zero-pad to num_points, truncate beyond, then signal-scale.
 
 Two ingestion paths:
 - ``real_series_from_file``: small config-attached text files (the
-  reference's case — the whole object fits in Lambda memory). Parsed
-  driver-side for a deterministic line index, then parallelized.
+  reference's case — the whole object fits in Lambda memory). Parsed,
+  padded and truncated driver-side for a deterministic line index, then
+  parallelized — no grid, no join.
 - ``real_series_from_df``: the scale path — any DataFrame with an
   explicit slot column (e.g. parquet with (t, value) or an events table
   via ``events_as_series``). Pad/truncate happens relationally.
@@ -32,8 +33,9 @@ def parse_real_lines(text: str) -> list[int]:
 
 def real_series_from_file(spark: SparkSession, path: str | Path, n_points: int) -> DataFrame:
     values = parse_real_lines(Path(path).read_text())[:n_points]
-    df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], schema=_SCHEMA)
-    return pad_truncate(spark, df, n_points)
+    values += [0] * (n_points - len(values))
+    df = spark.createDataFrame(list(enumerate(values)), schema=_SCHEMA)
+    return df.withColumn("value", F.col("value").cast("double"))
 
 
 def real_series_from_df(spark: SparkSession, df: DataFrame, n_points: int) -> DataFrame:

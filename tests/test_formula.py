@@ -134,3 +134,20 @@ def test_recurrence_generator_end_to_end(spark):
     assert len(vals) == 10
     assert vals[0] == 1 and vals[-1] == 20
     assert vals == sorted(vals)
+
+
+def test_non_finite_recurrence_raises_on_both_entry_points(spark):
+    """``sum(datapoints) + 1`` doubles every slot and passes the largest
+    double after about 1024 slots. Min-max scaling of a series holding
+    inf has no defined result, so the product path must fail loudly, not
+    emit a series of 1s and 0s."""
+    from amazon_macie_activity_generator_spark.config import GeneratorSpec, parse_blueprint
+    from amazon_macie_activity_generator_spark.plans.generate import generate, generate_series
+
+    cfg = {"formula": "sum(datapoints) + 1", "num_points": 1100}
+    bp = parse_blueprint({"generators": [{"id": "rec", "shape": "custom", "config": cfg}],
+                          "targets": []})
+    with pytest.raises(ValueError, match="finite"):
+        generate(spark, bp, run_id="run").collect()
+    with pytest.raises(ValueError, match="finite"):
+        generate_series(spark, GeneratorSpec("rec", "custom", cfg), "run").collect()

@@ -4,6 +4,8 @@ a refactor that silently degrades the plan fails CI, not the cluster."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 from amazon_macie_activity_generator_spark.queries import QUERIES
 
 
@@ -57,6 +59,69 @@ def test_generation_stays_expression_only(spark):
     })
     plan = _plan(generate(spark, bp, run_id="plantest"))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def _node_counts(df) -> Counter:
+    """Node names of ``df``'s physical plan before execution. A persisted
+    frame's plan is counted once, however many times it is scanned."""
+    jvm = df.sparkSession._jvm
+    counts: Counter = Counter()
+    seen: set[int] = set()
+    todo = [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        counts[name] += 1
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif name == "InMemoryTableScan":
+            relation = node.relation()
+            key = jvm.java.lang.System.identityHashCode(relation.cacheBuilder())
+            if key not in seen:
+                seen.add(key)
+                todo.append(relation.cachedPlan())
+    return counts
+
+
+def test_generation_plan_grows_linearly(spark):
+    """Each stage of the fact plan reads the stage before it once: G
+    range-backed generators give exactly G ``Range`` leaves, whatever the
+    anomaly layers, and the broadcasts do not grow with G and grow at
+    most linearly with the anomaly layers. A design that joins each
+    per-series statistic back onto its own input replays every earlier
+    stage once per statistic, which multiplies the ``Range`` leaves."""
+    from amazon_macie_activity_generator_spark.config import parse_blueprint
+    from amazon_macie_activity_generator_spark.plans.generate import generate
+
+    shapes = [
+        ("sinusoidal", {"frequency": 0.2}),
+        ("random", {"type": "uniform"}),
+        ("custom", {"formula": "t % 7 + 1"}),
+        ("square", {"low_value": 1, "high_value": 5}),
+    ]
+    layers = [{"start": 2, "end": 20, "counts": 3},
+              {"start": 0, "end": 29, "counts": 2, "formula": "max(datapoints) + t"}]
+    broadcasts = {}
+    for n_layers in (0, 1, 2):
+        for n_gens in (2, 4, 8):
+            bp = parse_blueprint({
+                "commons": {"num_points": 30, "noise_min": -1, "noise_max": 2,
+                            "anomalies": layers[:n_layers]},
+                "generators": [
+                    {"id": f"g{i}", "shape": shapes[i % 4][0], "config": shapes[i % 4][1]}
+                    for i in range(n_gens)
+                ],
+                "targets": [],
+            })
+            counts = _node_counts(generate(spark, bp, run_id="lin"))
+            assert counts["Range"] == n_gens, (n_gens, n_layers, counts["Range"])
+            broadcasts[n_layers, n_gens] = counts["BroadcastExchange"]
+    for n_layers in (0, 1, 2):
+        assert len({broadcasts[n_layers, g] for g in (2, 4, 8)}) == 1, broadcasts
+    b0, b1, b2 = (broadcasts[n_layers, 2] for n_layers in (0, 1, 2))
+    assert b2 - b1 <= b1 - b0, broadcasts
 
 
 def test_bucketed_join_needs_no_shuffle(spark, sf_dir, tmp_path):

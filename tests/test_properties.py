@@ -182,25 +182,41 @@ def test_generate_deterministic_across_runs_and_partitionings(spark):
     assert one != other  # run_id participates in every draw
 
 
-def test_generate_batched_matches_sequential_multi_spec_anomalies(spark):
-    """The batched anomaly path in generate() must be value-identical to
-    the sequential apply_anomalies path: per-layer stats from the CURRENT
-    frame (later specs see earlier specs' writes, compounding like
-    main.py:628's in-loop recompute) and the same [0, n) clamps for
-    negative starts."""
+def test_generate_batched_matches_sequential_multi_spec_anomalies(spark, tmp_path):
+    """generate() must equal, series by series, the reference chain built
+    from the public operators: shape expression -> scale_signal ->
+    apply_noise -> apply_anomalies -> int cast, zero-filled to the longest
+    series. The blueprint covers all six shapes (a recurrence and a real
+    file among them), noise, two anomaly layers whose stats come from the
+    CURRENT frame (later specs see earlier specs' writes, compounding like
+    main.py:628's in-loop recompute), starts clamped into [0, n), and
+    unequal lengths, in both anomaly modes."""
     from amazon_macie_activity_generator_spark.config import parse_blueprint
-    from amazon_macie_activity_generator_spark.plans.generate import (
-        generate,
-        generate_series,
-    )
+    from amazon_macie_activity_generator_spark.formula import eval_recurrence
+    from amazon_macie_activity_generator_spark.operators import generators as G
+    from amazon_macie_activity_generator_spark.operators.anomalies import apply_anomalies
+    from amazon_macie_activity_generator_spark.operators.noise import apply_noise
+    from amazon_macie_activity_generator_spark.operators.scaling import scale_signal
+    from amazon_macie_activity_generator_spark.plans.generate import generate
+    from amazon_macie_activity_generator_spark.sources.real_series import real_series_from_file
 
+    real = tmp_path / "real.dat"
+    real.write_text("\n".join(str(i * 7 % 19) for i in range(20)) + "\n\n4\n")
+    quiet = {"noise_min": 0, "noise_max": 0}
     bp = parse_blueprint({
-        "commons": {"num_points": 8},
+        "commons": {
+            "num_points": 40, "signal_min": 1, "signal_max": 15,
+            "noise_min": -2, "noise_max": 3,
+            "anomalies": [
+                {"start": -5, "end": 20, "counts": 4},
+                {"start": 10, "end": 39, "counts": 3, "formula": "max(datapoints) + t"},
+            ],
+        },
         "generators": [
             {
                 "id": "a", "shape": "constant",
                 "config": {
-                    "constant": 2,
+                    "constant": 2, "num_points": 8, **quiet,
                     "anomalies": [
                         {"start": 0, "end": 7, "counts": 8},
                         {"start": -10, "end": 3, "counts": 4, "formula": "t * 100 + 7"},
@@ -212,33 +228,71 @@ def test_generate_batched_matches_sequential_multi_spec_anomalies(spark):
                 # 0's (2+1)^2 = 9 writes and inject (9+1)^2 = 100
                 "id": "b", "shape": "constant",
                 "config": {
-                    "constant": 2,
+                    "constant": 2, "num_points": 8, **quiet,
                     "anomalies": [
                         {"start": 4, "end": 7, "counts": 4},
                         {"start": 0, "end": 1, "counts": 2},
                     ],
                 },
             },
+            {"id": "q", "shape": "square",
+             "config": {"low_value": 1, "high_value": 6, "low_width": 3, "high_width": 2,
+                        "num_points": 33}},
+            {"id": "s", "shape": "sinusoidal", "config": {"frequency": 0.07, "amplitude": 2.0}},
+            {"id": "r", "shape": "random", "config": {"type": "gauss"}},
+            {"id": "rt", "shape": "random", "config": {"type": "triangular", "num_points": 27}},
+            {"id": "cu", "shape": "custom", "config": {"formula": "t % 7 + 1"}},
+            {"id": "rec", "shape": "custom",
+             "config": {"formula": "sum(datapoints) % 13 + 1", "num_points": 31}},
+            {"id": "re", "shape": "real", "config": {"path": str(real), "num_points": 25}},
         ],
         "targets": [],
     })
-    batched = {
-        (r.series_id, r.t): r.value
-        for r in generate(spark, bp, run_id="par", anomaly_mode="stride").collect()
-    }
-    seq = {
-        (g.id, r.t): float(int(r.value))  # T5 int cast applied by generate()
-        for g in bp.generators
-        for r in generate_series(spark, g, "par", anomaly_mode="stride").collect()
-    }
-    assert batched == seq
-    # series b: spec 1 compounds — slots 0-1 get (9+1)^2, slots 4-7 keep 9
-    assert batched[("b", 0)] == 100.0 and batched[("b", 1)] == 100.0
-    assert batched[("b", 4)] == 9.0 and batched[("b", 2)] == 2.0
+    run_id, n_grid = "par", bp.num_points
+
+    def reference(g, mode):
+        cfg, n, t = g.config, g.num_points, F.col("t")
+        scaled = g.shape in ("sinusoidal", "custom", "real")
+        if g.shape == "real":
+            df = real_series_from_file(spark, cfg["path"], n)
+        elif g.shape == "custom" and G.custom_expr(cfg)[1]:
+            df = spark.createDataFrame(
+                list(enumerate(eval_recurrence(cfg["formula"], n))), "t long, value double"
+            )
+        else:
+            if g.shape == "random":
+                expr, scaled = G.random_expr(cfg, g.id, run_id, t)
+            elif g.shape == "sinusoidal":
+                expr = G.sinusoidal_expr(cfg, t, n)
+            elif g.shape == "custom":
+                expr = G.custom_expr(cfg)[0]
+            else:
+                expr = {"constant": G.constant_expr, "square": G.square_expr}[g.shape](cfg, t)
+            df = G.time_grid(spark, n).withColumn("value", expr.cast("double"))
+        df = df.withColumn("run_id", F.lit(run_id)).withColumn("series_id", F.lit(g.id))
+        if scaled:
+            df = scale_signal(df, cfg, by=["series_id"])
+            df = df.withColumn("value", F.col("value").cast("double"))
+        df = apply_noise(df, cfg, by=["series_id"])
+        df = apply_anomalies(df, g.anomalies, n, by=["series_id"], mode=mode)
+        got = {(g.id, r.t): r.value for r in df.select("t", F.col("value").cast("long")).collect()}
+        assert len(got) == n
+        return {**got, **{(g.id, t): 0 for t in range(n, n_grid)}}
+
+    for mode in ("hash", "stride"):
+        batched = {
+            (r.series_id, r.t): r.value
+            for r in generate(spark, bp, run_id=run_id, anomaly_mode=mode).collect()
+        }
+        expected = {k: v for g in bp.generators for k, v in reference(g, mode).items()}
+        assert batched == expected, mode
+    # stride mode, series b: spec 1 compounds — slots 0-1 get (9+1)^2,
+    # slots 4-7 keep 9
+    assert batched[("b", 0)] == 100 and batched[("b", 1)] == 100
+    assert batched[("b", 4)] == 9 and batched[("b", 2)] == 2
     # spec 0 injects (2+1)^2 = 9 everywhere; spec 1 overwrites clamped
     # slots 0..3 with t*100+7 — NOT ((9+1)^2-style compounded values
-    assert batched[("a", 0)] == 7.0 and batched[("a", 3)] == 307.0
-    assert batched[("a", 7)] == 9.0
+    assert batched[("a", 0)] == 7 and batched[("a", 3)] == 307
 
 
 def test_fake_providers_partition_invariant(spark):
