@@ -12,24 +12,39 @@ any *composed* use (several builders called in one long-lived session).
 ``scoped_persist(df, scope)`` makes the leak bounded instead: each frame
 registers under its builder's scope, and ``begin_scope(scope)`` — called
 on entry to the builder — releases every frame the same builder
-registered on its PREVIOUS invocation. Unpersisting a frame a
-still-uncollected older result depends on only costs recompute, never
-correctness (lineage is intact), so the worst case of interleaved use is
-a cache miss. Net contract: at most one invocation's worth of cached
-state per builder per SESSION, regardless of how many times the catalog
-runs; ``release_all()`` drops even that (the bench harness equivalent of
-``clearCache`` scoped to what this package created).
+registered on its PREVIOUS invocation. Net contract: at most one
+invocation's worth of cached state per builder per SESSION, regardless
+of how many times the catalog runs; ``release_all()`` drops even that
+(the bench harness equivalent of ``clearCache`` scoped to what this
+package created).
+
+Spark's ``unpersist`` is keyed by plan, not by DataFrame: a second
+``persist()`` of an equal plan reuses the first one's cache entry, and
+unpersisting EITHER frame drops that entry for both. So a frame leaving
+the registry (evicted by a ``keep`` bound or the session cap, or
+released) is unpersisted only when no live tracked frame shares its
+entry (``sameSemantics``). The guarantee: a frame ``scoped_persist``
+returned stays cached until it is itself evicted or released, or the
+caller unpersists or clears the cache — eviction or release of an older
+frame with the same plan never un-caches it, so repeat calls of a
+``keep=N`` helper on equal inputs keep reading their base from the
+cache. Frames persisted outside the registry are not seen: releasing a
+tracked frame still drops an equal plan that other code persisted on its
+own. Unpersisting a frame that an older, still uncollected result reads
+costs that result a recompute, never correctness (lineage is intact).
 
 Registry shape (hardened for long-lived multi-session services): keys
 are ``(session token, scope)``, so two sessions running the same builder
 never evict each other's live frames; entries whose owning session has
 been stopped are pruned on every registry operation (the DataFrame
 references would otherwise linger forever — unpersist on a dead session
-is a no-op the old code swallowed silently); and all registry mutation
-holds a process lock, so concurrent builder use from two threads cannot
-corrupt the per-scope lists. Two threads sharing ONE session and ONE
-builder can still evict each other mid-plan — that stays recompute-only
-by the lineage argument above.
+is a no-op the old code swallowed silently); and every registry
+mutation, with the persist and unpersist calls it makes, holds a process
+lock, so concurrent builder use from two threads cannot corrupt the
+per-scope lists or unpersist an entry a frame is being registered on.
+Two threads sharing ONE session and ONE builder can still evict each
+other mid-plan — that stays recompute-only by the lineage argument
+above.
 """
 
 from __future__ import annotations
@@ -52,8 +67,9 @@ _LOCK = threading.RLock()
 # wrapper, and wrappers are never individually "stopped" (stop() kills
 # the shared context) — so without this cap every wrapper's frames and
 # the wrapper object itself would be pinned forever. Evicting the oldest
-# session's frames is recompute-only (lineage intact), like every other
-# eviction in this module.
+# session's frames leaves a cache entry a newer session's live frame
+# shares in place; otherwise it costs their pending readers a recompute
+# (lineage intact), like every other eviction in this module.
 _MAX_SESSIONS_PER_SCOPE = 4
 
 
@@ -86,6 +102,31 @@ def _prune_stopped_locked() -> None:
             _TRACKED.pop(key, None)
 
 
+def _shares_entry(df: DataFrame, other: DataFrame) -> bool:
+    try:
+        return df.sameSemantics(other)
+    except Exception:
+        # a frame whose session is gone cannot hold a live entry
+        return False
+
+
+def _unpersist_unshared_locked(frames: list[DataFrame]) -> None:
+    """Unpersist ``frames`` that have left the registry, except those
+    whose plan-keyed cache entry a live tracked frame shares (caller
+    holds _LOCK, so no frame can register on an entry between the check
+    and the unpersist). Non-blocking: the RPC only drops the entry."""
+    live = [df for tracked in _TRACKED.values() for df in tracked]
+    for df in frames:
+        if any(_shares_entry(df, other) for other in live):
+            continue
+        try:
+            df.unpersist(blocking=False)
+        except Exception:
+            # the owning SparkSession may already be stopped (test
+            # teardown) — nothing left to release
+            pass
+
+
 def scoped_persist(df: DataFrame, scope: str, keep: int | None = None) -> DataFrame:
     """Persist ``df`` and register it under ``scope`` for later release.
 
@@ -95,13 +136,16 @@ def scoped_persist(df: DataFrame, scope: str, keep: int | None = None) -> DataFr
     corpus index and the batch index from the same helper), so a
     begin_scope() on entry would evict a frame the pending plan still
     wants cached. N is chosen per helper as (frames per call) x (a small
-    number of concurrently-pending plans); overflow eviction only costs
-    recompute, never correctness.
+    number of concurrently-pending plans). An evicted frame is
+    unpersisted only if no live tracked frame shares its cache entry, so
+    repeat calls on equal inputs keep the newest frame cached (see the
+    module docstring); overflow eviction of a distinct plan only costs
+    its pending readers a recompute.
     """
     sess = df.sparkSession
-    df = df.persist()
     with _LOCK:
         _prune_stopped_locked()
+        df = df.persist()
         tok = id(sess)
         _SESSIONS[tok] = sess
         frames = _TRACKED.setdefault((tok, scope), [])
@@ -118,21 +162,17 @@ def scoped_persist(df: DataFrame, scope: str, keep: int | None = None) -> DataFr
             evicted.extend(_TRACKED.pop((old_tok, scope), []))
             if not any(t == old_tok for (t, _s) in _TRACKED):
                 _SESSIONS.pop(old_tok, None)
-    for old in evicted:  # unpersist outside the lock — it can RPC
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass
+        _unpersist_unshared_locked(evicted)
     return df
 
 
-def _pop_keys_locked(keys: list[tuple[int, str]]) -> list[list[DataFrame]]:
-    """Pop ``keys`` and trim orphaned session pins. Caller holds _LOCK
-    (snapshot and pop MUST share one acquisition — a frame registered
-    between them would be popped and unpersisted while its registering
-    call still considers it tracked). Returned batches are unpersisted
-    by the caller OUTSIDE the lock (unpersist can RPC)."""
-    batches = [_TRACKED.pop(key, []) for key in keys]
+def _pop_keys_locked(keys: list[tuple[int, str]]) -> list[DataFrame]:
+    """Pop ``keys`` and trim orphaned session pins; returns the popped
+    frames. Caller holds _LOCK (snapshot and pop MUST share one
+    acquisition — a frame registered between them would be popped and
+    unpersisted while its registering call still considers it
+    tracked)."""
+    popped = [df for key in keys for df in _TRACKED.pop(key, [])]
     # Drop the session pin once its last tracked scope is gone —
     # newSession() wrappers are never individually "stopped" (stop()
     # kills the shared context), so stopped-pruning alone would pin
@@ -141,22 +181,12 @@ def _pop_keys_locked(keys: list[tuple[int, str]]) -> list[list[DataFrame]]:
     for tok, _ in keys:
         if tok not in live_tokens:
             _SESSIONS.pop(tok, None)
-    return batches
-
-
-def _unpersist_batches(batches: list[list[DataFrame]]) -> None:
-    for frames in batches:
-        for df in frames:
-            try:
-                df.unpersist(blocking=False)
-            except Exception:
-                # the owning SparkSession may already be stopped (test
-                # teardown) — nothing left to release
-                pass
+    return popped
 
 
 def release_scope(scope: str, spark: SparkSession | None = None) -> None:
-    """Unpersist every frame registered under ``scope`` (non-blocking).
+    """Unpersist every frame registered under ``scope`` (non-blocking),
+    except one whose cache entry a live tracked frame shares.
 
     With ``spark`` given, only that session's frames are released;
     otherwise the scope is released across all sessions (the historical
@@ -168,8 +198,7 @@ def release_scope(scope: str, spark: SparkSession | None = None) -> None:
             keys = [(id(spark), scope)]
         else:
             keys = [k for k in _TRACKED if k[1] == scope]
-        batches = _pop_keys_locked(keys)
-    _unpersist_batches(batches)
+        _unpersist_unshared_locked(_pop_keys_locked(keys))
 
 
 def begin_scope(scope: str, spark: SparkSession | None = None) -> None:
@@ -182,9 +211,11 @@ def begin_scope(scope: str, spark: SparkSession | None = None) -> None:
     the WRONG session's frames and leave the builder's own previous
     frames cached forever. The no-argument form falls back to the active
     session, and to releasing the scope everywhere when none resolves —
-    a deliberate trade: cross-session eviction only costs recompute,
-    while skipping the release would leak persisted frames, and bounded
-    memory is this module's primary contract.
+    a deliberate trade: releasing another session's frames costs its
+    pending plans a recompute (and leaves any cache entry a live tracked
+    frame shares in place), while skipping the release would leak
+    persisted frames, and bounded memory is this module's primary
+    contract.
     """
     release_scope(scope, spark if spark is not None else SparkSession.getActiveSession())
 
@@ -202,5 +233,4 @@ def scope_frames(scope: str) -> list[DataFrame]:
 def release_all() -> None:
     """Release every scope this package registered."""
     with _LOCK:
-        batches = _pop_keys_locked(list(_TRACKED))
-    _unpersist_batches(batches)
+        _unpersist_unshared_locked(_pop_keys_locked(list(_TRACKED)))

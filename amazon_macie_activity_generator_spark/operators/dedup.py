@@ -12,8 +12,9 @@ Four tiers, cheapest-first, all shuffle-disciplined for 100 TB:
   (JVM token hashing + vectorized Arrow bit-vote fold); near-dup =
   small Hamming distance, banded by 16-bit chunks (pigeonhole:
   distance<=3 guarantees one of 4 chunks matches exactly).
-- n-gram Jaccard: exact set similarity on word n-grams for candidate
-  pairs (the verifier for the LSH tiers, or standalone with blocking).
+- n-gram Jaccard: exact set similarity on word n-grams, as an
+  inverted-index join keyed on the gram (the verifier for the LSH
+  tiers, or standalone with blocking).
 
 Everything is built from JVM-side expressions (transform/aggregate/
 xxhash64) — no Python in the hot path.
@@ -728,52 +729,54 @@ def connected_components(
         .localCheckpoint()
     )
     null_label = F.lit(None).cast(labels.schema["label"].dataType)
+    # Every Column of a round is built here, once: a Column is an
+    # unresolved expression, so the rounds reuse them and only the
+    # DataFrame calls repeat — the same plans, without rebuilding each
+    # expression tree over py4j every round.
+    # A request looks up label(key) and sends its value — val, else
+    # label(key) — to node and to label(key). Edge (s, d) requests with
+    # key d and val label(s): d gets its neighbor's label and label(d)
+    # is hooked to it. Node v requests with key label(v) and no val: v
+    # gets label(label(v)), the jump (its second row hands
+    # label(label(v)) to itself, a no-op).
+    edge_on = F.col("src") == F.col("lab.id")
+    edge_requests = [
+        F.col("dst").alias("key"), F.col("dst").alias("node"), F.col("lab.label").alias("val")
+    ]
+    jump_requests = [
+        F.col("label").alias("key"), F.col("id").alias("node"), null_label.alias("val")
+    ]
+    key_on = F.col("key") == F.col("lab.id")
+    sent = F.coalesce("val", "lab.label")
+    deliver = F.explode(
+        F.array(
+            F.struct(F.col("node").alias("id"), sent.alias("label")),
+            F.struct(F.col("lab.label").alias("id"), sent.alias("label")),
+        )
+    ).alias("r")
+    delivered = [F.col("r.id"), F.col("r.label"), null_label.alias("old")]
+    own = [F.col("id"), F.col("label"), F.col("label").alias("old")]
+    node_id = F.col("id")
+    merge = [F.min("label").alias("label"), F.max("old").alias("old")]
+    changed_count = F.count_if(F.col("label") != F.col("old")).alias("changed")
+    id_label = [F.col("id"), F.col("label")]
     changed = 0
     for _ in range(max_iter):
         lab = labels.alias("lab")
-        # a request looks up label(key) and sends its value — val, else
-        # label(key) — to node and to label(key). Edge (s, d) requests
-        # with key d and val label(s): d gets its neighbor's label and
-        # label(d) is hooked to it. Node v requests with key label(v)
-        # and no val: v gets label(label(v)), the jump (its second row
-        # hands label(label(v)) to itself, a no-op).
         requests = (
-            bidir.join(lab, F.col("src") == F.col("lab.id"))
-            .select(
-                F.col("dst").alias("key"),
-                F.col("dst").alias("node"),
-                F.col("lab.label").alias("val"),
-            )
-            .unionByName(
-                labels.select(
-                    F.col("label").alias("key"), F.col("id").alias("node"), null_label.alias("val")
-                )
-            )
+            bidir.join(lab, edge_on)
+            .select(*edge_requests)
+            .unionByName(labels.select(*jump_requests))
         )
-        sent = F.coalesce("val", "lab.label")
-        received = (
-            requests.join(lab, F.col("key") == F.col("lab.id"))
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("node").alias("id"), sent.alias("label")),
-                        F.struct(F.col("lab.label").alias("id"), sent.alias("label")),
-                    )
-                ).alias("r")
-            )
-            .select("r.id", "r.label", null_label.alias("old"))
-        )
+        received = requests.join(lab, key_on).select(deliver).select(*delivered)
         merged = (
-            labels.select("id", "label", F.col("label").alias("old"))
-            .unionByName(received)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"), F.max("old").alias("old"))
+            labels.select(*own).unionByName(received).groupBy(node_id).agg(*merge)
         )
         obs = Observation()
         labels = (
             _without_size_estimate(merged)
-            .observe(obs, F.count_if(F.col("label") != F.col("old")).alias("changed"))
-            .select("id", "label")
+            .observe(obs, changed_count)
+            .select(*id_label)
             .localCheckpoint()
         )
         changed = obs.get["changed"]
@@ -802,24 +805,53 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     block_on: Column | None = None,
 ) -> DataFrame:
-    """Exact word-n-gram Jaccard over candidate pairs. Without
-    ``block_on`` this is a full self-join — only for bounded inputs or
-    as the verifier behind an LSH prefilter; with ``block_on`` (e.g. a
-    length bucket or LSH bucket) the join is keyed."""
-    base = df.select(
-        F.col(id_col).alias("id"),
-        word_shingles_expr(F.col(text_col), n).alias("grams"),
-        (block_on if block_on is not None else F.lit(0)).alias("blk"),
-    )
-    l, r = base.alias("l"), base.alias("r")
-    pairs = l.join(r, on=[F.col("l.blk") == F.col("r.blk"), F.col("l.id") < F.col("r.id")])
-    inter = F.size(F.array_intersect("l.grams", "r.grams"))
-    union = F.size(F.array_union("l.grams", "r.grams"))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        pairs.select(
-            F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"),
-            F.round(jac, 4).alias("jaccard"),
+    """Exact word-n-gram Jaccard pairs within a block: (id_a, id_b,
+    jaccard) with id_a < id_b and jaccard (rounded to 4 places) >=
+    ``threshold``. Without ``block_on`` every document is in one block.
+
+    Inverted-index set-similarity join (the ``q_dedup_ngram_jaccard``
+    construction, oracle-checked against DuckDB): explode each
+    document's distinct grams, equi-join on (block, gram) with
+    l.id < r.id, count the shared grams per pair, then
+    |A ∪ B| = |A| + |B| - |A ∩ B|. The join is keyed on the gram, so
+    work grows with the pairs that share a gram, not quadratically per
+    block, and no per-pair set operation runs. Only pairs that share a
+    gram are formed, so ``threshold`` must be positive (a zero-overlap
+    pair is the quadratic product this form exists to avoid).
+
+    Grams follow ``word_shingles_expr``: a document shorter than ``n``
+    words is one gram, and NULL or empty text is the gram '' (so such
+    documents pair with each other at Jaccard 1.0). Ids must be unique;
+    NULL ids and NULL blocks form no pairs.
+
+    Known limit: a very common gram (boilerplate, or the '' gram of
+    many empty documents) is a hot join key whose d documents form
+    d^2/2 rows in one task. Prefix filtering (PPJoin), which would skip
+    such grams for pairs that cannot reach the threshold, is not done."""
+    if threshold <= 0:
+        raise ValueError(
+            f"ngram_jaccard_pairs needs threshold > 0, got {threshold}: the "
+            "inverted-index join only forms pairs that share a gram"
         )
-        .filter(F.col("jaccard") >= threshold)
+    grams = df.select(
+        F.col(id_col).alias("id"),
+        (block_on if block_on is not None else F.lit(0)).alias("blk"),
+        word_shingles_expr(F.col(text_col), n).alias("grams"),
+    ).withColumn("n_grams", F.size("grams"))
+    # explode_outer, as in q_dedup_ngram_jaccard: a plain explode infers
+    # a filter on the gram array below the Generate, and pushdown then
+    # inlines the shingle expression into it (tokenizing twice). The
+    # outer form drops no rows; grams are never empty, and a NULL gram
+    # would not equi-join anyway.
+    ex = grams.select("id", "blk", "n_grams", F.explode_outer("grams").alias("gram"))
+    shared = (
+        ex.withColumnsRenamed({"id": "id_a", "n_grams": "n_a"})
+        .join(ex.withColumnsRenamed({"id": "id_b", "n_grams": "n_b"}), on=["blk", "gram"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b", "n_a", "n_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    jac = F.round(F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 4)
+    return shared.select("id_a", "id_b", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
     )

@@ -186,3 +186,107 @@ def test_stopped_sessions_are_pruned(spark, monkeypatch):
         assert cache._TRACKED == {} and cache._SESSIONS == {}
     monkeypatch.undo()
     spark.catalog.clearCache()  # drop the orphaned (never-unpersisted) frame
+
+
+def _is_cached(df) -> bool:
+    from pyspark import StorageLevel
+
+    return df.storageLevel != StorageLevel.NONE
+
+
+def test_keep_bound_keeps_newest_equal_plan_cached(spark):
+    """Spark's unpersist is keyed by plan: equal plans share one cache
+    entry, so evicting the oldest of several equal-plan frames must not
+    unpersist it while a newer tracked frame still holds it."""
+    release_all()
+    spark.catalog.clearCache()
+    frames = [scoped_persist(spark.range(11), "equal_plans", keep=2) for _ in range(4)]
+    assert scope_frames("equal_plans") == frames[-2:]
+    assert _is_cached(frames[-1])
+    assert frames[-1].count() == 11
+    # once the last tracked frame goes, the shared entry goes with it
+    release_scope("equal_plans")
+    assert not _is_cached(frames[-1])
+
+
+def test_release_keeps_entry_shared_with_another_scope(spark):
+    release_all()
+    spark.catalog.clearCache()
+    scoped_persist(spark.range(13), "released")
+    live = scoped_persist(spark.range(13), "still_live")
+    release_scope("released")
+    assert _is_cached(live)
+    release_all()
+    assert not _is_cached(live)
+
+
+def test_third_embedding_near_dup_build_reads_cache(spark, sf_dir):
+    """embedding_near_dup persists its SRP base under keep=2. From the
+    third build in one session the eviction of the first build's base
+    used to un-cache the new one, so every branch recomputed the base,
+    Arrow UDF included."""
+    from amazon_macie_activity_generator_spark.queries_vectors import q_embedding_near_dup
+
+    release_all()
+    spark.catalog.clearCache()
+    for _ in range(3):
+        df = q_embedding_near_dup(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in plan
+    assert len(scope_frames("embedding_near_dup")) == 2
+    release_all()
+
+
+def test_session_cap_keeps_newest_equal_plan_cached(spark):
+    """The session-cap path: equal plans registered from newSession()
+    wrappers share one cache entry (the cache manager is per context),
+    so evicting the oldest wrappers' frames must leave it in place."""
+    from amazon_macie_activity_generator_spark import cache
+
+    release_all()
+    spark.catalog.clearCache()
+    wrappers = [spark.newSession() for _ in range(cache._MAX_SESSIONS_PER_SCOPE + 2)]
+    frames = [scoped_persist(w.range(17), "per_request_equal") for w in wrappers]
+    assert len(scope_frames("per_request_equal")) == cache._MAX_SESSIONS_PER_SCOPE
+    assert _is_cached(frames[-1])
+    assert "InMemoryTableScan" in frames[-1]._jdf.queryExecution().executedPlan().toString()
+    release_all()
+    assert not _is_cached(frames[-1])
+
+
+def test_concurrent_release_never_uncaches_a_registered_equal_plan(spark):
+    """One thread re-registers a plan under its scope while another
+    registers and releases the same plan under its own: a frame must be
+    cached from the moment scoped_persist returns it. A persist racing
+    the other thread's unpersist outside the registry lock would drop
+    the shared entry under the new frame."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    release_all()
+    spark.catalog.clearCache()
+    rounds = 150
+
+    def hold():
+        misses = 0
+        for _ in range(rounds):
+            release_scope("hold")
+            misses += not _is_cached(scoped_persist(spark.range(19), "hold"))
+        return misses
+
+    def churn():
+        for _ in range(rounds):
+            scoped_persist(spark.range(19), "churn")
+            release_scope("churn")
+        return 0
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=2) as ex:
+            futs = [ex.submit(hold), ex.submit(churn)]
+            misses = sum(fut.result(timeout=120) for fut in futs)
+    finally:
+        sys.setswitchinterval(interval)
+    assert misses == 0
+    release_all()
