@@ -777,21 +777,23 @@ def q_s3_put_activities(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s3_put_activity_rows(dp, target, key_cols=("event_id",))
 
 
-REPLAY_DRAIN_TIMEOUT_S = 300
-
-
 def q_streaming_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K1/K2 — full queue round-trip: generate a blueprint cycle, enqueue
     slot rows (twice — dedup ids must absorb the duplicate), replay with
-    availableNow, return delivered slot rows (rows-only: side-effecting)."""
+    availableNow, return delivered slot rows (rows-only: side-effecting).
+    The delivered rows are local-checkpointed before the work directory
+    (queue, checkpoint, delivered table) is removed."""
     import os
-    import tempfile
 
     from amazon_macie_activity_generator_spark.config import parse_blueprint
     from amazon_macie_activity_generator_spark.operators.reshape import slot_row_json
     from amazon_macie_activity_generator_spark.plans.generate import generate
     from amazon_macie_activity_generator_spark.sinks.local import write_queue
-    from amazon_macie_activity_generator_spark.streaming.replay import replay_to_table
+    from amazon_macie_activity_generator_spark.streaming.replay import (
+        await_drain,
+        replay_to_table,
+        work_dir,
+    )
 
     bp = parse_blueprint({
         "commons": {"num_points": 60, "signal_min": 1, "signal_max": 10},
@@ -804,44 +806,35 @@ def q_streaming_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     })
     fact = generate(spark, bp, run_id="replayrun", anomaly_mode="stride")
     slot_rows = slot_row_json(fact).withColumn("run_id", F.lit("replayrun"))
-    work = tempfile.mkdtemp(prefix="amag_replay_")
-    qpath = os.path.join(work, "queue")
-    write_queue(slot_rows, qpath)
-    write_queue(slot_rows, qpath)
-    schema = spark.read.parquet(qpath).schema
-    # r14 (VERDICT item 7, guide §6): this entry is a BULK drain
-    # (availableNow), so it uses the documented bulk mode —
-    # max_files_per_trigger=128 folds the ~64 queue files (two
-    # repartition(t) writes) into one micro-batch instead of ~64, each
-    # of which paid a checkpoint/state commit (~9 s of build per rep
-    # measured; ~0.8 s after). The delivered row SET is identical:
-    # dropDuplicatesWithinWatermark keys on (run_id, t) regardless of
-    # batch boundaries and the result projects only (run_id, t, body) —
-    # hash-verified before/after (cd94e466, 60 rows). The
-    # one-file-per-tick default stays for processing-time cadence
-    # callers (the reference's pacing).
-    sq = replay_to_table(
-        spark, qpath, schema, os.path.join(work, "delivered"),
-        os.path.join(work, "ckpt"), available_now=True,
-        max_files_per_trigger=128,
-    )
-    if not sq.awaitTermination(REPLAY_DRAIN_TIMEOUT_S):
-        # the delivered directory of an unfinished drain is a partial result
-        sq.stop()
-        raise TimeoutError(
-            f"streaming_replay: the queue drain did not finish in {REPLAY_DRAIN_TIMEOUT_S} s"
+    with work_dir("amag_replay_") as work:
+        qpath = os.path.join(work, "queue")
+        write_queue(slot_rows, qpath)
+        write_queue(slot_rows, qpath)
+        schema = spark.read.parquet(qpath).schema
+        # a bulk drain: max_files_per_trigger=128 folds the ~64 queue
+        # files (two repartition(t) writes) into one micro-batch instead
+        # of ~64 that each pay a checkpoint/state commit (~9 s of build
+        # before, ~0.8 s after). The delivered row set is the same:
+        # dedup keys on (run_id, t) whatever the batch boundaries, and
+        # the result projects only (run_id, t, body).
+        sq = replay_to_table(
+            spark, qpath, schema, os.path.join(work, "delivered"),
+            os.path.join(work, "ckpt"), available_now=True,
+            max_files_per_trigger=128,
         )
-    return spark.read.parquet(os.path.join(work, "delivered")).select("run_id", "t", "body")
+        await_drain(sq, "streaming_replay")
+        delivered = spark.read.parquet(os.path.join(work, "delivered"))
+        return delivered.select("run_id", "t", "body").localCheckpoint()
 
 
 def q_blueprint_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP1-EP3 — full blueprint lifecycle (generate -> queue -> dispatch ->
     all three sink types, local mode); returns the CloudWatch metrics table
-    (rows-only: run dirs + hash-derived content)."""
-    import tempfile
-
+    (rows-only: run dirs + hash-derived content), local-checkpointed
+    before the run directory is removed."""
     from amazon_macie_activity_generator_spark.config import parse_blueprint
     from amazon_macie_activity_generator_spark.plans.pipeline import run_blueprint
+    from amazon_macie_activity_generator_spark.streaming.replay import work_dir
 
     bp = parse_blueprint({
         "commons": {"num_points": 50, "signal_min": 1, "signal_max": 8},
@@ -859,12 +852,12 @@ def q_blueprint_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
              "generators": ["ts1", "ts2", "ts6"], "group_datapoints": True},
         ],
     })
-    work = tempfile.mkdtemp(prefix="amag_e2e_")
-    out = run_blueprint(spark, bp, work, run_id="e2erun", anomaly_mode="stride")
-    cw = next(t for t in out["targets"] if t["type"] == "cloudwatch")
-    return spark.read.parquet(cw["metrics"]).select(
-        "dim_id", "dim_shape", "timestamp", "value"
-    )
+    with work_dir("amag_e2e_") as work:
+        out = run_blueprint(spark, bp, work, run_id="e2erun", anomaly_mode="stride")
+        cw = next(t for t in out["targets"] if t["type"] == "cloudwatch")
+        return spark.read.parquet(cw["metrics"]).select(
+            "dim_id", "dim_shape", "timestamp", "value"
+        ).localCheckpoint()
 
 
 # ------------------------------------------------------- reshape round trip

@@ -39,15 +39,26 @@ Scale notes (local[32] tests, 1000-executor design):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from amazon_macie_activity_generator_spark.cache import begin_scope, scoped_persist
 from amazon_macie_activity_generator_spark.functions.jsonx import extract_int_prop, sql_int_prop
 from amazon_macie_activity_generator_spark.functions.rounding import sql_round_fixed
 from amazon_macie_activity_generator_spark.operators.interpolate import MAX_GRID_SLOTS
-from amazon_macie_activity_generator_spark.operators.sessionize import sessionize, tumbling_counts
+from amazon_macie_activity_generator_spark.operators.sessionize import (
+    sessionize,
+    sessionize_stateful,
+    tumbling_counts,
+)
 from amazon_macie_activity_generator_spark.sources.tables import load_table, spread_small_scan
+from amazon_macie_activity_generator_spark.streaming.replay import (
+    drain_to_memory,
+    streaming_dedup,
+    streaming_tumbling_counts,
+)
 
 
 # ------------------------------------------------------------ json / time
@@ -286,28 +297,13 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicatesWithinWatermark, appended to a memory sink, then counted
     per type. Dedup is deterministic, so the result value-hash-matches the
     batch DISTINCT oracle: streaming and batch dedup agree."""
-    import os
-    import tempfile
-    import uuid
-
-    from amazon_macie_activity_generator_spark.streaming.replay import streaming_dedup
-
     events = load_table(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="amag_sdedup_")
-    src = os.path.join(work, "src")
-    events.write.parquet(src)
-    events.write.mode("append").parquet(src)  # plant exact duplicates
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    name = "dedup_" + uuid.uuid4().hex[:8]
-    q = (
-        streaming_dedup(stream, watermark="2 hours", keys=["event_id"])
-        .writeStream.format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True).start()
+    drained = drain_to_memory(
+        spark, "streaming_dedup", [events, events],  # plant exact duplicates
+        lambda read: streaming_dedup(read(), watermark="2 hours", keys=["event_id"]),
     )
-    q.awaitTermination(300)
     return (
-        spark.table(name)
+        drained
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_events"),
              F.count_distinct(F.col("event_id")).alias("n_ids"))
@@ -325,28 +321,13 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2/X6 streaming — watermarked tumbling-window counts via Structured
     Streaming (availableNow drain, complete mode), value-matching the same
     DuckDB oracle as the batch query: the streaming and batch engines agree."""
-    import os
-    import tempfile
-    import uuid
-
-    from amazon_macie_activity_generator_spark.streaming.replay import (
-        streaming_tumbling_counts,
-    )
-
     events = load_table(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="amag_stream_")
-    src = os.path.join(work, "src")
-    events.write.parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    name = "tumbling_" + uuid.uuid4().hex[:8]
-    q = (
-        streaming_tumbling_counts(stream, "1 hour", "2 hours")
-        .writeStream.format("memory").queryName(name).outputMode("complete")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True).start()
+    drained = drain_to_memory(
+        spark, "streaming_tumbling", [events],
+        lambda read: streaming_tumbling_counts(read(), "1 hour", "2 hours"),
+        output_mode="complete",
     )
-    q.awaitTermination(300)
-    return spark.table(name).select(
+    return drained.select(
         F.col("bucket").cast("string").alias("bucket"),
         "event_type", "n_events", "sum_value",
     )
@@ -419,28 +400,11 @@ def q_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic — every closed session, i.e. the batch gaps-and-islands
     sessionization minus each user's final (still-open) session — so the
     entry carries a full value-hash oracle (round 4; was rows-only)."""
-    import os
-    import tempfile
-    import uuid
-
-    from amazon_macie_activity_generator_spark.operators.sessionize import (
-        sessionize_stateful,
-    )
-
     events = load_table(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="amag_state_")
-    src = os.path.join(work, "src")
-    events.write.parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    name = "sess_state_" + uuid.uuid4().hex[:8]
-    q = (
-        sessionize_stateful(stream, gap_minutes=30)
-        .writeStream.format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True).start()
+    return drain_to_memory(
+        spark, "sessionize_stateful", [events],
+        lambda read: sessionize_stateful(read(), gap_minutes=30),
     )
-    q.awaitTermination(300)
-    return spark.table(name)
 
 
 # the stateful emitter's exact contract: the batch sessionization minus
@@ -725,36 +689,12 @@ def q_streaming_append_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark; the oracle states that closure rule in SQL (max(ts)
     truncated to milliseconds — the precision Spark's watermark tracker
     uses)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from amazon_macie_activity_generator_spark.streaming.replay import (
-        streaming_tumbling_counts,
-    )
-
     events = load_table(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="amag_append_")
-    try:
-        src = os.path.join(work, "src")
-        events.write.parquet(src)
-        stream = spark.readStream.schema(events.schema).parquet(src)
-        name = "append_" + uuid.uuid4().hex[:8]
-        q = (
-            streaming_tumbling_counts(stream, "1 hour", "2 hours")
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(300)
-        if q.isActive:
-            q.stop()
-    finally:
-        # the memory sink holds the drained rows; the parquet copy and
-        # checkpoint are dead weight once the query terminates
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.table(name).select(
+    drained = drain_to_memory(
+        spark, "streaming_append_windows", [events],
+        lambda read: streaming_tumbling_counts(read(), "1 hour", "2 hours"),
+    )
+    return drained.select(
         F.col("bucket").cast("string").alias("bucket"),
         "event_type", "n_events", "sum_value",
     )
@@ -1179,29 +1119,22 @@ FROM interp
 # streaming_join — watermarked stream-stream interval join
 # --------------------------------------------------------------------------
 
-def q_streaming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join with event-time bounds: clicks joined to
-    the purchases that follow within 1 hour for the same user, both sides
-    watermarked 2 hours so join state is GC-ed as event time advances —
-    the canonical funnel join. The equality key (user_id) hash-partitions
-    both streams; the time bound caps per-key state, so state size is
-    O(events per user per watermark horizon) regardless of total volume.
-    Oracle: the identical batch join in DuckDB (stream and batch engines
-    must agree on the drained result)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
+def _funnel_join(
+    spark: SparkSession, sf_dir: str, name: str, how: str, *project: Column
+) -> DataFrame:
+    """The stream-stream funnel join behind ``streaming_join`` (``how``
+    inner) and ``streaming_left_join`` (left_outer): each ``click`` joined
+    to the same user's ``purchase`` events in [click ts, click ts + 1h),
+    both sides watermarked 2 hours, drained through ``drain_to_memory``
+    and projected to ``project``. Each side is its own stream over the one
+    source copy, with columns prefixed ``c_`` (clicks) and ``p_``
+    (purchases): ``{prefix}_user``, ``{prefix}_id``, ``{prefix}_ts``."""
     events = load_table(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="amag_ssjoin_")
-    try:
-        src = os.path.join(work, "src")
-        events.write.parquet(src)
 
+    def build(read: Callable[[], DataFrame]) -> DataFrame:
         def side(event_type: str, prefix: str) -> DataFrame:
             return (
-                spark.readStream.schema(events.schema).parquet(src)
+                read()
                 .filter(F.col("event_type") == event_type)
                 .select(
                     F.col("user_id").alias(f"{prefix}_user"),
@@ -1212,29 +1145,32 @@ def q_streaming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         clicks, buys = side("click", "c"), side("purchase", "p")
-        joined = clicks.join(
+        return clicks.join(
             buys,
             (F.col("c_user") == F.col("p_user"))
             & (F.col("p_ts") >= F.col("c_ts"))
             & (F.col("p_ts") < F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
-        )
-        name = "ssjoin_" + uuid.uuid4().hex[:8]
-        q = (
-            joined.select(
-                F.col("c_user").alias("user_id"),
-                F.col("c_id").alias("click_id"),
-                F.col("p_id").alias("purchase_id"),
-            )
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(300)
-        if q.isActive:
-            q.stop()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.table(name)
+            how,
+        ).select(*project)
+
+    return drain_to_memory(spark, name, [events], build)
+
+
+def q_streaming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream inner join with event-time bounds: clicks joined to
+    the purchases that follow within 1 hour for the same user, both sides
+    watermarked 2 hours so join state is GC-ed as event time advances —
+    the canonical funnel join. The equality key (user_id) hash-partitions
+    both streams; the time bound caps per-key state, so state size is
+    O(events per user per watermark horizon) regardless of total volume.
+    Oracle: the identical batch join in DuckDB (stream and batch engines
+    must agree on the drained result)."""
+    return _funnel_join(
+        spark, sf_dir, "streaming_join", "inner",
+        F.col("c_user").alias("user_id"),
+        F.col("c_id").alias("click_id"),
+        F.col("p_id").alias("purchase_id"),
+    )
 
 
 SQL_STREAMING_JOIN = """
@@ -1733,57 +1669,13 @@ def q_streaming_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     microbatch advances the watermark and flushes the evicted state.
     Nulls are coalesced to -1 (with a `matched` flag) so both engines
     hash identically. Inner twin: q_streaming_join."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    events = load_table(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="amag_lojoin_")
-    try:
-        src = os.path.join(work, "src")
-        events.write.parquet(src)
-
-        def side(event_type: str, prefix: str) -> DataFrame:
-            return (
-                spark.readStream.schema(events.schema).parquet(src)
-                .filter(F.col("event_type") == event_type)
-                .select(
-                    F.col("user_id").alias(f"{prefix}_user"),
-                    F.col("event_id").alias(f"{prefix}_id"),
-                    F.col("ts").alias(f"{prefix}_ts"),
-                )
-                .withWatermark(f"{prefix}_ts", "2 hours")
-            )
-
-        clicks, buys = side("click", "c"), side("purchase", "p")
-        joined = clicks.join(
-            buys,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("p_ts") >= F.col("c_ts"))
-            & (F.col("p_ts") < F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
-            "left_outer",
-        )
-        name = "lojoin_" + uuid.uuid4().hex[:8]
-        q = (
-            joined.select(
-                F.col("c_user").alias("user_id"),
-                F.col("c_id").alias("click_id"),
-                F.coalesce(F.col("p_id"), F.lit(-1)).alias("purchase_id"),
-                F.col("p_id").isNotNull().alias("matched"),
-            )
-            .writeStream.format("memory").queryName(name).outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(300)
-        if q.isActive:
-            q.stop()
-    finally:
-        # the memory sink holds the drained rows; the parquet copy and
-        # checkpoint are dead weight once the query terminates
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.table(name)
+    return _funnel_join(
+        spark, sf_dir, "streaming_left_join", "left_outer",
+        F.col("c_user").alias("user_id"),
+        F.col("c_id").alias("click_id"),
+        F.coalesce(F.col("p_id"), F.lit(-1)).alias("purchase_id"),
+        F.col("p_id").isNotNull().alias("matched"),
+    )
 
 
 SQL_STREAMING_LEFT_JOIN = """

@@ -11,8 +11,16 @@ Structured Streaming mapping:
 - **Queue** = the parquet slot-row table written by K1
   (``sinks.local.write_queue``); ``readStream`` over it is the consumer.
 - **Cadence**: ``trigger(processingTime='60 seconds')`` with
-  ``maxFilesPerTrigger`` throttling approximates slot-per-tick; tests use
-  ``trigger(availableNow=True)`` to drain deterministically.
+  ``maxFilesPerTrigger`` admits that many queue FILES per tick, not that
+  many slots. ``write_queue`` writes one file per shuffle partition that
+  survives AQE coalescing, so one file can hold a whole cycle and one
+  tick then delivers all of it; slot-exact pacing is not implemented.
+  Tests use ``trigger(availableNow=True)`` to drain deterministically.
+- **Catalog drains**: the catalog's streaming entries drain through
+  ``drain_to_memory`` (or, for the queue replay, ``work_dir`` plus
+  ``await_drain``): one work directory removed on exit, one timeout
+  (``DRAIN_TIMEOUT_S``) that stops the query and raises instead of
+  handing back the micro-batches delivered so far.
 - **Dedup** (SQS dedup ids, main.py:698-706): ``dropDuplicates(
   ['run_id','t'])`` backed by the checkpoint's state store.
 - **At-most-once**: Spark's checkpoint gives at-least-once per batch, so
@@ -28,12 +36,21 @@ Structured Streaming mapping:
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import os
+import shutil
+import tempfile
+import uuid
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
+
+# Longest a catalog drain may run, in seconds. An availableNow query that
+# has not finished by then has delivered only part of its input.
+DRAIN_TIMEOUT_S = 300
 
 
 def queue_stream(
@@ -41,11 +58,14 @@ def queue_stream(
     max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """K2 consumer source: stream the K1 queue table. The default
-    ``maxFilesPerTrigger=1`` gives the reference's one-slot-per-tick
-    pacing under a processing-time trigger (each K1 write unit = one
-    micro-batch); bulk drains (catch-up after downtime, backfills) raise
-    it to amortize the per-micro-batch checkpoint/state commit across
-    more rows — measured in scripts/streaming_scale.py / SCALE.md."""
+    ``maxFilesPerTrigger=1`` admits one queue FILE per micro-batch under
+    a processing-time trigger. That is one slot per tick only when each
+    file holds one slot: ``write_queue`` writes one file per shuffle
+    partition that survives AQE coalescing, so a cycle's slots can share
+    one file and one tick then delivers the whole cycle. Bulk drains
+    (catch-up after downtime, backfills) raise the setting to amortize
+    the per-micro-batch checkpoint/state commit across more rows —
+    measured in scripts/streaming_scale.py / SCALE.md."""
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -126,6 +146,72 @@ def replay_to_table(
         stream, _deliver, checkpoint_dir,
         cadence_seconds=cadence_seconds, available_now=available_now,
     )
+
+
+# ------------------------------------------------------- catalog drains
+
+@contextmanager
+def work_dir(prefix: str) -> Iterator[str]:
+    """A fresh temp directory, removed with everything in it when the
+    block exits — normally or by an exception."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def await_drain(query: StreamingQuery, what: str) -> None:
+    """Wait up to ``DRAIN_TIMEOUT_S`` for an availableNow ``query`` to
+    finish. If it has not, stop it and raise ``TimeoutError``: its sink
+    holds only the micro-batches delivered so far, and a partial result
+    must never pass for the whole one."""
+    if not query.awaitTermination(DRAIN_TIMEOUT_S):
+        query.stop()
+        raise TimeoutError(
+            f"{what}: the drain did not finish in {DRAIN_TIMEOUT_S} s"
+        )
+
+
+def drain_to_memory(
+    spark: SparkSession,
+    name: str,
+    sources: Sequence[DataFrame],
+    build: Callable[[Callable[[], DataFrame]], DataFrame],
+    output_mode: str = "append",
+) -> DataFrame:
+    """Run a streaming query over a file source to completion and return
+    its result as a batch DataFrame, leaving nothing behind.
+
+    ``sources`` are appended, in order, as parquet into a fresh work
+    directory (a frame listed twice lands twice). ``build`` receives a
+    function that opens a new stream over that directory (call it once
+    per streaming side) and returns the streaming result. The result
+    drains with ``availableNow`` into a memory sink, checkpointed in the
+    work directory, under the timeout of ``await_drain``.
+
+    The returned frame reads the memory sink's rows through its own plan.
+    The sink's temp view is dropped, so the rows live only as long as the
+    frame, and the work directory (source copy and checkpoint) is removed
+    on every exit path."""
+    with work_dir(f"amag_{name}_") as work:
+        src = os.path.join(work, "src")
+        for frame in sources:
+            frame.write.mode("append").parquet(src)
+        schema = sources[0].schema
+        result = build(lambda: spark.readStream.schema(schema).parquet(src))
+        view = f"{name}_{uuid.uuid4().hex[:8]}"
+        query = (
+            result.writeStream.format("memory").queryName(view)
+            .outputMode(output_mode)
+            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .trigger(availableNow=True).start()
+        )
+        try:
+            await_drain(query, name)
+            return spark.table(view)
+        finally:
+            spark.catalog.dropTempView(view)
 
 
 # --------------------------------------------- event-time streaming aggs

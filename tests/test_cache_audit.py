@@ -13,6 +13,7 @@ materializing 145 plans.
 from __future__ import annotations
 
 import pytest
+from _cross_engine import BUILD_EXECUTES
 
 # patch the CONCRETE class: pyspark.sql.DataFrame is the unified v4 API
 # base whose persist() the classic subclass overrides — instrumenting the
@@ -21,14 +22,6 @@ from pyspark.sql.classic.dataframe import DataFrame
 
 from amazon_macie_activity_generator_spark import cache
 from amazon_macie_activity_generator_spark.queries import QUERIES
-
-# side-effecting / streaming builders (write sinks or need checkpoint
-# dirs) — same exclusion set as the edge-corpus and plan sweeps
-SKIP = {
-    "streaming_tumbling", "streaming_replay", "streaming_dedup",
-    "streaming_join", "streaming_left_join", "streaming_append_windows",
-    "sessionize_stateful", "blueprint_e2e",
-}
 
 
 def test_every_catalog_persist_is_scope_registered(spark, sf_dir):
@@ -43,7 +36,7 @@ def test_every_catalog_persist_is_scope_registered(spark, sf_dir):
     DataFrame.persist = recording_persist
     try:
         for name, (fn, _sql) in QUERIES.items():
-            if name in SKIP:
+            if name in BUILD_EXECUTES:  # write sinks, need checkpoint dirs
                 continue
             fn(spark, sf_dir)  # build only — plans stay lazy
     finally:

@@ -14,17 +14,11 @@ from __future__ import annotations
 import shutil
 
 import pytest
+from _cross_engine import BUILD_EXECUTES
 from pyspark.sql import functions as F  # noqa: F401
 
 from amazon_macie_activity_generator_spark.queries import QUERIES
 
-# eager/side-effecting or non-document-dependent streaming paths — the
-# sweep targets batch analytic queries (same skip set as the plan sweep)
-SKIP = {
-    "streaming_tumbling", "streaming_replay", "streaming_dedup",
-    "streaming_join", "streaming_left_join", "streaming_append_windows",
-    "sessionize_stateful", "blueprint_e2e",
-}
 
 EDGE_DOCS = [
     (1, "", "en", "src0", 0),                                    # empty
@@ -70,7 +64,7 @@ def edge_sf_dir(spark, tmp_path_factory):
     return str(dst)
 
 
-@pytest.mark.parametrize("name", [n for n in QUERIES if n not in SKIP])
+@pytest.mark.parametrize("name", [n for n in QUERIES if n not in BUILD_EXECUTES])
 def test_query_survives_edge_corpus(spark, edge_sf_dir, name):
     fn, _ = QUERIES[name]
     try:
@@ -97,7 +91,7 @@ def empty_sf_dir(spark, tmp_path_factory):
     return str(dst)
 
 
-@pytest.mark.parametrize("name", [n for n in QUERIES if n not in SKIP])
+@pytest.mark.parametrize("name", [n for n in QUERIES if n not in BUILD_EXECUTES])
 def test_query_survives_empty_tables(spark, empty_sf_dir, name):
     fn, _ = QUERIES[name]
     try:

@@ -6,9 +6,9 @@ passed this sweep when it was added; this pins it."""
 from __future__ import annotations
 
 import pytest
+from _cross_engine import BUILD_EXECUTES
 
 from amazon_macie_activity_generator_spark.queries import QUERIES
-from tests.test_plan_sweep import SKIP_BUILD_EXECUTES
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -32,7 +32,7 @@ def empty_sf_dir(tmp_path_factory):
     return str(d)
 
 
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - SKIP_BUILD_EXECUTES))
+@pytest.mark.parametrize("name", sorted(set(QUERIES) - BUILD_EXECUTES))
 def test_entry_total_on_empty_input(name, spark, empty_sf_dir):
     fn, _sql = QUERIES[name]
     n = fn(spark, empty_sf_dir).count()

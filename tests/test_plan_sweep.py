@@ -8,17 +8,9 @@ shape; this sweep catches the entry nobody wrote a guard for."""
 from __future__ import annotations
 
 import pytest
+from _cross_engine import BUILD_EXECUTES
 
 from amazon_macie_activity_generator_spark.queries import QUERIES
-
-# Entries whose BUILD executes work the sweep doesn't need to repeat
-# (streaming replay / stateful streaming / sink-writing e2e) — their
-# returned DataFrame is a read of the sink table, so there is no batch
-# plan to audit; runtime behavior is covered by their own tests.
-SKIP_BUILD_EXECUTES = {
-    name for name in QUERIES
-    if name.startswith("streaming_")
-} | {"sessionize_stateful", "blueprint_e2e"}
 
 # Ordered-unpartitioned windows that are SAFE by cardinality argument —
 # each waiver states why one task is acceptable at any data scale.
@@ -63,7 +55,7 @@ def _window_violations(optimized: str) -> list[str]:
     return out
 
 
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - SKIP_BUILD_EXECUTES))
+@pytest.mark.parametrize("name", sorted(set(QUERIES) - BUILD_EXECUTES))
 def test_entry_plan_invariants(name, spark, sf_dir):
     fn, _sql = QUERIES[name]
     df = fn(spark, sf_dir)

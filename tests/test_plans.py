@@ -210,14 +210,11 @@ def test_no_cartesian_product_anywhere_in_catalog(spark, sf_dir):
     single-row-stats broadcasts legitimately plan BroadcastNestedLoopJoin,
     so only the cartesian check is global.)"""
     import __spark_entry__ as entrymod
+    from _cross_engine import BUILD_EXECUTES  # eager/side-effecting
 
-    skip = {"streaming_tumbling", "streaming_replay", "streaming_dedup",
-            "streaming_join", "streaming_left_join",
-            "streaming_append_windows",
-            "sessionize_stateful", "blueprint_e2e"}  # eager/side-effecting
     offenders = []
     for name, fn in entrymod.queries().items():
-        if name in skip:
+        if name in BUILD_EXECUTES:
             continue
         try:
             plan = _plan(fn(spark, sf_dir))

@@ -675,14 +675,3 @@ def test_run_cycles_accumulates_queue(spark, bp, tmp_path):
     # per-cycle read prunes to its own run_id partition
     one = queue.filter(F.col("run_id") == outs[0]["run_id"])
     assert one.count() == 20
-
-
-def test_streaming_replay_raises_when_drain_times_out(spark, sf_dir, monkeypatch):
-    """An unfinished drain must raise, not hand back the rows delivered
-    so far."""
-    from amazon_macie_activity_generator_spark import queries
-
-    monkeypatch.setattr(queries, "REPLAY_DRAIN_TIMEOUT_S", 0.001)
-    fn, _ = queries.QUERIES["streaming_replay"]
-    with pytest.raises(TimeoutError, match="did not finish"):
-        fn(spark, sf_dir)
