@@ -41,6 +41,17 @@ def get_spark(app_name: str = "amazon-macie-activity-generator-spark", shuffle_p
     return _apply_extra_conf(builder).getOrCreate()
 
 
+def warm_up(spark: SparkSession) -> None:
+    """Warm the JVM, the noop sink and the Python workers, so that the
+    first timed action pays for itself and not for session startup: a
+    noop write, then an Arrow map over one partition per core, so that
+    every core spawns its Python worker (workers are reused)."""
+    spark.range(1_000_000).selectExpr("sum(id) AS s").write.format("noop").mode("overwrite").save()
+    n = spark.sparkContext.defaultParallelism
+    spark.range(0, 1000 * n, 1, n).mapInPandas(lambda it: it, "id long") \
+        .write.format("noop").mode("overwrite").save()
+
+
 def _apply_extra_conf(builder):
     """Apply ``$SPARK_GRAFT_EXTRA_CONF`` (``key=value;key=value``) — the
     parameterization seam for scale-dependent settings (r13, guide §9):

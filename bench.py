@@ -1,54 +1,145 @@
-"""Benchmark harness: run every declared query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) and print ONE JSON line.
+"""Catalog benchmark: time every catalog entry, or the entries named on
+the command line, at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
+and print ONE JSON line.
 
-Each query is forced through full materialization with the JVM-side
+    python bench.py [name ...]
+
+Each entry is forced through full materialization with the JVM-side
 ``noop`` sink (no Python collection overhead, no pruning shortcuts).
+``BENCH_DETAIL.json`` gets the complete record of the run, with each
+entry's layer metrics from its final pass.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
-import pandas as pd
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from pyspark.sql.streaming import StreamingQueryListener  # noqa: E402
+
+from perfbench.spans import covered, job_groups, plan_counts, wait_listeners  # noqa: E402
+
+DETAIL_PATH = os.path.join(ROOT, "BENCH_DETAIL.json")
 
 
-def main() -> None:
+class _StreamRuns(StreamingQueryListener):
+    """Collects the ``runId`` of every stream started while registered:
+    a micro-batch job runs in the job group of its stream's run id, not
+    in the group of the caller that started the stream."""
+
+    def __init__(self) -> None:
+        self.run_ids: list[str] = []
+
+    # called synchronously by DataStreamWriter.start()
+    def onQueryStarted(self, event) -> None:
+        self.run_ids.append(str(event.runId))
+
+    def onQueryProgress(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        pass
+
+
+def time_entry(spark, fn, sf_dir: str, name: str | None = None):
+    """Time one entry: the builder call ``fn(spark, sf_dir)``, then the
+    noop write of its plan. ``spark.catalog.clearCache()`` and a
+    ``range(1).count()``, which absorbs the asynchronous cache eviction,
+    run after both timers, so a persist never carries over to the next
+    entry and its eviction is not charged to it.
+
+    Returns ``(build_s, exec_s, layers)``. With ``name``, the entry's jobs
+    run in job group ``name`` (its streams' micro-batch jobs in the groups
+    of their run ids) and ``layers`` holds its metrics, read outside both
+    timers; a process measures each name once, since the status store
+    keeps earlier jobs of the same group. Without ``name``, ``layers`` is
+    None.
+    """
+    sc = spark.sparkContext
+    if name:
+        runs = _StreamRuns()
+        spark.streams.addListener(runs)
+        sc.setJobGroup(name, name)
+    try:
+        start = time.time()
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        t2 = time.perf_counter()
+        end = time.time()
+    finally:
+        if name:
+            sc._jsc.clearJobGroup()
+            spark.streams.removeListener(runs)
+    # node counts of the returned plan as Spark planned it (the noop write
+    # re-plans its own copy adaptively), read before clearCache drops the
+    # persists it scans
+    plan = plan_counts(df) if name else None
+    spark.catalog.clearCache()
+    spark.range(1).count()
+    layers = {**_layers(spark, name, runs.run_ids, start, end), **plan} if name else None
+    return round(t1 - t0, 4), round(t2 - t1, 4), layers
+
+
+def _layers(spark, name: str, run_ids: list[str], start: float, end: float) -> dict:
+    """Jobs, stages, tasks, shuffle, spill, GC and executor CPU of the
+    entry's job group and its streams' groups; ``driver_gap_s`` is the
+    part of the entry's window (build start to write end) that none of
+    those jobs covers."""
+    wait_listeners(spark)
+    groups = job_groups(spark, {name, *run_ids})
+
+    def tot(key: str) -> int:
+        return sum(g[key] for g in groups.values())
+
+    jobs = [j for g in groups.values() for j in g["jobs"]]
+    return {
+        "jobs": len(jobs),
+        "stream_jobs": len(jobs) - len(groups[name]["jobs"]),
+        "stages": len(set().union(*(g["stage_ids"] for g in groups.values()))),
+        "tasks": tot("tasks"),
+        "shuffle_read_bytes": tot("shuffle_read"),
+        "shuffle_write_bytes": tot("shuffle_write"),
+        "spill_bytes": tot("spill"),
+        "gc_ms": tot("gc_ms"),
+        "executor_cpu_s": round(tot("cpu_ns") / 1e9, 4),
+        "driver_gap_s": round((end - start) - covered(jobs, start, end), 4),
+    }
+
+
+def _git_sha() -> str | None:
+    try:
+        return subprocess.run(["git", "rev-parse", "HEAD"], cwd=ROOT, capture_output=True,
+                              text=True, check=True).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        return None
+
+
+def main(names: list[str] | None = None) -> None:
+    names = sys.argv[1:] if names is None else names
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
-    from amazon_macie_activity_generator_spark.session import get_spark
     from amazon_macie_activity_generator_spark.queries import QUERIES
+    from amazon_macie_activity_generator_spark.session import get_spark, warm_up
+
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        sys.exit(f"bench.py: unknown catalog entries: {', '.join(unknown)}")
+    entries = {n: QUERIES[n][0] for n in names or QUERIES}
 
     spark = get_spark("amazon-macie-activity-generator-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # warm the JVM/executors/noop-sink path so the first query's timing
-    # is the query, not session startup
-    spark.range(1_000_000).selectExpr("sum(id) AS s").write.format("noop").mode("overwrite").save()
-
-    # also warm the Python worker pool: the first pandas-UDF task on each
-    # core pays worker spawn + pandas/numpy import (~8 s across 32 cores,
-    # measured), which otherwise lands on whichever Arrow-path query runs
-    # first (dedup_simhash in catalog order). Workers are reused
-    # (spark.python.worker.reuse defaults true), so one warm pass moves
-    # that session-infra cost out of every query timing.
-    from pyspark.sql.functions import col, pandas_udf
-
-    @pandas_udf("long")
-    def _warm_worker(s: pd.Series) -> pd.Series:
-        return s
-
-    (
-        spark.range(64 * 1000)
-        .repartition(64)
-        .select(_warm_worker(col("id")).alias("w"))
-        .write.format("noop").mode("overwrite").save()
-    )
+    # the first timed entry pays for itself, not for JVM, noop-sink and
+    # Python-worker startup
+    warm_up(spark)
 
     # Two timers per entry. `queries` (the headline metric, comparable
     # across rounds) times materialization of the returned plan; `build`
@@ -69,33 +160,20 @@ def main() -> None:
     # methodology (min over independent cold passes), one more sample.
     # Each pass rebuilds the plan and re-clears the cache, so no pass
     # ever rides a previous pass's persisted intermediates — the min is
-    # over like-for-like cold executions.
+    # over like-for-like cold executions. The final pass also records
+    # each entry's layer metrics, outside its timers.
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     timings: dict[str, float] = {}
     builds: dict[str, float] = {}
-    for _rep in range(reps):
-        for name, (fn, _sql) in QUERIES.items():
-            start = time.perf_counter()
-            df = fn(spark, sf_dir)
-            build = round(time.perf_counter() - start, 4)
+    layers: dict[str, dict] = {}
+    for rep in range(reps):
+        final = rep == reps - 1
+        for name, fn in entries.items():
+            build, secs, layer = time_entry(spark, fn, sf_dir, name if final else None)
             builds[name] = min(builds.get(name, build), build)
-            start = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            secs = round(time.perf_counter() - start, 4)
             timings[name] = min(timings.get(name, secs), secs)
-            spark.catalog.clearCache()  # drop per-query persists; keep memory flat
-            # absorb the (async) cache-eviction work OUTSIDE any timer, so
-            # it is not attributed to whichever query happens to run next
-            spark.range(1).count()
-        # memory-sink tables registered by streaming builders (uuid names)
-        # survive clearCache and hold a full result copy in driver memory;
-        # drop them between passes so reps never accumulate copies
-        for tbl in spark.catalog.listTables():
-            if tbl.isTemporary:
-                try:
-                    spark.catalog.dropTempView(tbl.name)
-                except Exception:
-                    pass
+            if final:
+                layers[name] = layer
 
     total = round(sum(timings.values()), 4)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -106,8 +184,7 @@ def main() -> None:
     # to a sidecar the driver commits with the round, and keep the
     # printed line itself under a conservative budget by including the
     # slowest queries first until the budget is spent.
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
-    with open(detail_path, "w") as fh:
+    with open(DETAIL_PATH, "w") as fh:
         json.dump({
             "metric": "total_query_wall_clock",
             "value": total,
@@ -118,13 +195,17 @@ def main() -> None:
             "n_queries": len(timings),
             "reps": reps,
             "sf": sf_val,
+            "cpus": spark.sparkContext.defaultParallelism,
+            "git_sha": _git_sha(),
+            "driver_memory": spark.sparkContext.getConf().get("spark.driver.memory"),
+            "layers": layers,
         }, fh, sort_keys=True)
         fh.write("\n")
     # ledger-of-record consistency (SURVEY §8): the printed line (what the
     # driver records as BENCH_r{N}.json) and the sidecar are the same run —
     # assert the totals agree at write time so they can only diverge if a
     # later local run overwrites the sidecar
-    with open(detail_path) as fh:
+    with open(DETAIL_PATH) as fh:
         assert json.load(fh)["value"] == total, "BENCH_DETAIL.json write mismatch"
 
     line_budget = int(os.environ.get("SPARK_GRAFT_BENCH_LINE_BUDGET", "1400"))

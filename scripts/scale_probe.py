@@ -38,11 +38,12 @@ import math
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
+
+from bench import time_entry  # noqa: E402
 
 SMALL_TABLES = ["region", "nation", "customer", "supplier", "part", "orders"]
 ID_OFFSET = 10_000_000
@@ -248,30 +249,12 @@ def main() -> None:
     args = ap.parse_args()
     scales = [int(s) for s in args.scales.split(",")]
 
-    # the shared session helper keeps Spark's 1g driver default (right
-    # for the catalog at sf0.1; the driver's own session is vanilla) —
-    # but a 16x stress corpus genuinely needs execution memory, and in
-    # local mode the driver heap IS the executor heap. Set it for the
-    # probe JVM only, before the gateway launches — and only for the
-    # runs that need it (--stress or multi-x volume, where the 1g
-    # default OOMs): a 1x smoke probe on a <32g box must not fail JVM
-    # launch over a heap it never uses. NOTE: this env var only takes
-    # effect when THIS process launches the gateway; if an importing
-    # caller already started Spark, it is silently ignored (use builder
-    # configs there).
-    if args.stress or max(scales) >= 4:
-        os.environ.setdefault(
-            "PYSPARK_SUBMIT_ARGS", "--driver-memory 32g pyspark-shell"
-        )
-
     from amazon_macie_activity_generator_spark.queries import QUERIES
-    from amazon_macie_activity_generator_spark.session import get_spark
+    from amazon_macie_activity_generator_spark.session import get_spark, warm_up
 
     spark = get_spark("scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id) AS s").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    warm_up(spark)
 
     names = STRESS_QUERIES if args.stress else list(PROBE_QUERIES)
     extra_probes = dict(EXTRA_PROBES)
@@ -290,13 +273,9 @@ def main() -> None:
             probe_fns.update(extra_probes)
         for name, fn in probe_fns.items():
             results.setdefault(name, {})
-            runs = []
-            for _ in range(max(args.reps, 1)):
-                df = fn(spark, out_dir)  # rebuild per rep: no plan reuse
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(round(time.perf_counter() - t0, 2))
-                spark.catalog.clearCache()
+            # rebuild per rep: no plan reuse
+            runs = [round(time_entry(spark, fn, out_dir)[1], 2)
+                    for _ in range(max(args.reps, 1))]
             secs = min(runs)
             results[name][k] = secs
             rec = {"query": name, "k": k, "sec": secs, "runs": runs, "mode": mode}

@@ -30,27 +30,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from amazon_macie_activity_generator_spark.session import get_spark  # noqa: E402
+
 WORK = "/tmp/spark_graft_sf1"
 DATA = os.path.join(WORK, "data")
 RESULTS = os.path.join(WORK, "results.jsonl")
 ID_OFFSET = 10_000_000  # events' user offset lives in scale_probe.USER_OFFSET
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
-
-
-def _get_spark():
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
 
 
 def build(sf_dir: str, k: int) -> None:
@@ -63,7 +50,8 @@ def build(sf_dir: str, k: int) -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from scale_probe import build_scaled_dir
 
-    spark = _get_spark()
+    spark = get_spark("sf1-drive")
+    spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(DATA, exist_ok=True)
     # documents / embeddings / events / lineitem + small-table copies:
     # the proven volume-mode recipe (disjoint keys AND content)
@@ -177,7 +165,8 @@ def drive_chunk(chunk: int, chunk_size: int, only: list[str] | None = None) -> N
     if not names:
         print(json.dumps({"chunk": chunk, "empty": True}))
         return
-    spark = _get_spark()
+    spark = get_spark("sf1-drive")
+    spark.sparkContext.setLogLevel("ERROR")
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
 
     def fresh_con():

@@ -22,9 +22,10 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import time_entry  # noqa: E402
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -179,11 +180,11 @@ def main() -> None:
         build_skewed(args.sf_dir, skew_dir)
 
     from amazon_macie_activity_generator_spark.queries import QUERIES
-    from amazon_macie_activity_generator_spark.session import get_spark
+    from amazon_macie_activity_generator_spark.session import get_spark, warm_up
 
     spark = get_spark("skew-stress")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
+    warm_up(spark)
 
     names = [q for q in args.queries.split(",") if q in STRESS_QUERIES]
     results = {}
@@ -191,13 +192,7 @@ def main() -> None:
         fn = QUERIES[name][0]
         row = {}
         for label, d in (("uniform", args.sf_dir), ("skewed", skew_dir)):
-            best = float("inf")
-            for _ in range(args.reps):
-                t0 = time.perf_counter()
-                fn(spark, d).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-                spark.catalog.clearCache()
-            row[label] = round(best, 3)
+            row[label] = round(min(time_entry(spark, fn, d)[1] for _ in range(args.reps)), 3)
         row["ratio"] = round(row["skewed"] / row["uniform"], 2)
         row["table"] = STRESS_QUERIES[name]
         results[name] = row
