@@ -4,13 +4,13 @@ Reference: read an S3 object, one int per line, skip blank lines,
 zero-pad to num_points, truncate beyond, then signal-scale.
 
 Two ingestion paths:
-- ``real_series_from_file``: small config-attached text files (the
-  reference's case — the whole object fits in Lambda memory). Parsed,
-  padded and truncated driver-side for a deterministic line index, then
-  parallelized — no grid, no join.
-- ``real_series_from_df``: the scale path — any DataFrame with an
-  explicit slot column (e.g. parquet with (t, value) or an events table
-  via ``events_as_series``). Pad/truncate happens relationally.
+- ``real_values``/``real_series_from_file``: small config-attached text
+  files (the reference's case — the whole object fits in Lambda
+  memory). Parsed, padded and truncated driver-side for a deterministic
+  line index, then parallelized — no grid, no join.
+- ``pad_truncate``: the scale path — any DataFrame with an explicit
+  slot column (e.g. parquet with (t, value) or an events table via
+  ``events_as_series``). Pad/truncate happens relationally.
 """
 
 from __future__ import annotations
@@ -31,15 +31,15 @@ def parse_real_lines(text: str) -> list[int]:
     return [int(line) for line in text.splitlines() if line.strip() != ""]
 
 
-def real_series_from_file(spark: SparkSession, path: str | Path, n_points: int) -> DataFrame:
+def real_values(path: str | Path, n_points: int) -> list[int]:
+    """The file's first ``n_points`` values, zero-padded (main.py:525-529)."""
     values = parse_real_lines(Path(path).read_text())[:n_points]
-    values += [0] * (n_points - len(values))
-    df = spark.createDataFrame(list(enumerate(values)), schema=_SCHEMA)
+    return values + [0] * (n_points - len(values))
+
+
+def real_series_from_file(spark: SparkSession, path: str | Path, n_points: int) -> DataFrame:
+    df = spark.createDataFrame(list(enumerate(real_values(path, n_points))), schema=_SCHEMA)
     return df.withColumn("value", F.col("value").cast("double"))
-
-
-def real_series_from_df(spark: SparkSession, df: DataFrame, n_points: int) -> DataFrame:
-    return pad_truncate(spark, df, n_points)
 
 
 def pad_truncate(spark: SparkSession, df: DataFrame, n_points: int, t_col: str = "t", value_col: str = "value") -> DataFrame:

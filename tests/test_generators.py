@@ -16,6 +16,12 @@ def values(df):
     return [r.value for r in df.orderBy("t").collect()]
 
 
+def raw_expr(shape, cfg, n, t):
+    """One series' raw value expression, its parameters as literals."""
+    key, params = G.shape_params(shape, cfg, n)
+    return G.shape_expr(key, {k: F.lit(v) for k, v in params.items()}, t, F.lit("r"), F.lit("s"))
+
+
 def test_constant(spark):
     g = GeneratorSpec("c1", "constant", {"constant": 7, "num_points": 5})
     assert values(generate_series(spark, g, "run")) == [7.0] * 5
@@ -53,7 +59,7 @@ def test_sinusoidal_scaled_range(spark):
 def test_sinusoidal_grid_matches_linspace(spark):
     # TimeSynth grid: t_k = k * N/(N-1); raw sin before scaling
     n, f = 10, 0.1
-    df = G.time_grid(spark, n).withColumn("v", G.sinusoidal_expr({"frequency": f}, F.col("t"), n))
+    df = G.time_grid(spark, n).withColumn("v", raw_expr("sinusoidal", {"frequency": f}, n, F.col("t")))
     got = [r.v for r in df.orderBy("t").collect()]
     step = n / (n - 1)
     want = [math.sin(2 * math.pi * f * k * step) for k in range(n)]
@@ -152,9 +158,8 @@ def test_counter_rng_mode_deterministic_and_distinct_streams(spark):
 
 def test_gamma_raw_moments(spark):
     # sanity on the raw (pre-scale) gamma draws: mean ~ alpha*beta
-    from amazon_macie_activity_generator_spark.operators.generators import random_expr
     df = G.time_grid(spark, 4000)
-    expr, _ = random_expr({"type": "gammavariate", "alpha": 3.0, "beta": 2.0}, "s", "r", F.col("t"))
+    expr = raw_expr("random", {"type": "gammavariate", "alpha": 3.0, "beta": 2.0}, 4000, F.col("t"))
     stats = df.select(expr.alias("v")).agg(F.mean("v"), F.stddev("v")).first()
     assert stats[0] == pytest.approx(6.0, rel=0.1)      # alpha*beta
     assert stats[1] == pytest.approx(math.sqrt(3) * 2, rel=0.15)  # sqrt(alpha)*beta

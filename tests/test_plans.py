@@ -85,13 +85,13 @@ def _node_counts(df) -> Counter:
     return counts
 
 
-def test_generation_plan_grows_linearly(spark):
-    """Each stage of the fact plan reads the stage before it once: G
-    range-backed generators give exactly G ``Range`` leaves, whatever the
-    anomaly layers, and the broadcasts do not grow with G and grow at
-    most linearly with the anomaly layers. A design that joins each
-    per-series statistic back onto its own input replays every earlier
-    stage once per statistic, which multiplies the ``Range`` leaves."""
+def test_generation_plan_size_is_constant(spark):
+    """Generators are rows of one parameter table, not plans: the fact
+    plan has the same node counts for 2, 4, 8 or 64 generators, whatever
+    the anomaly layers, and no ``Range`` leaf. The broadcasts do not grow
+    with the generators and grow at most linearly with the anomaly
+    layers. A design that joins each per-series statistic back onto its
+    own input replays every earlier stage once per statistic."""
     from amazon_macie_activity_generator_spark.config import parse_blueprint
     from amazon_macie_activity_generator_spark.plans.generate import generate
 
@@ -105,7 +105,8 @@ def test_generation_plan_grows_linearly(spark):
               {"start": 0, "end": 29, "counts": 2, "formula": "max(datapoints) + t"}]
     broadcasts = {}
     for n_layers in (0, 1, 2):
-        for n_gens in (2, 4, 8):
+        plans = {}
+        for n_gens in (2, 4, 8, 64):
             bp = parse_blueprint({
                 "commons": {"num_points": 30, "noise_min": -1, "noise_max": 2,
                             "anomalies": layers[:n_layers]},
@@ -116,8 +117,10 @@ def test_generation_plan_grows_linearly(spark):
                 "targets": [],
             })
             counts = _node_counts(generate(spark, bp, run_id="lin"))
-            assert counts["Range"] == n_gens, (n_gens, n_layers, counts["Range"])
+            assert "Range" not in counts, (n_gens, n_layers, counts)
+            plans[n_gens] = dict(counts)
             broadcasts[n_layers, n_gens] = counts["BroadcastExchange"]
+        assert all(plans[g] == plans[2] for g in (4, 8, 64)), (n_layers, plans)
     for n_layers in (0, 1, 2):
         assert len({broadcasts[n_layers, g] for g in (2, 4, 8)}) == 1, broadcasts
     b0, b1, b2 = (broadcasts[n_layers, 2] for n_layers in (0, 1, 2))

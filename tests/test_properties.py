@@ -13,7 +13,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from amazon_macie_activity_generator_spark.formula import FormulaError, translate_formula
-from amazon_macie_activity_generator_spark.operators.generators import square_expr
+from amazon_macie_activity_generator_spark.operators.generators import shape_expr, shape_params
 from amazon_macie_activity_generator_spark.operators.scaling import scale_minmax
 from amazon_macie_activity_generator_spark.operators.slicing import slice_array_expr
 
@@ -117,17 +117,15 @@ def test_scale_minmax_bounds_and_constant_clamp(spark, values, lo, span):
     st.integers(1, 80),
 )
 def test_square_matches_list_semantics(spark, low, lw, high, hw, n):
-    """square_expr == the reference's repeat-[low]*lw+[high]*hw-truncate
-    list semantics (main.py:447-462) for arbitrary configs."""
+    """The square expression == the reference's
+    repeat-[low]*lw+[high]*hw-truncate list semantics (main.py:447-462)
+    for arbitrary configs."""
     pattern = [float(low)] * lw + [float(high)] * hw
     want = [pattern[t % len(pattern)] for t in range(n)]
     cfg = {"low_value": low, "low_width": lw, "high_value": high, "high_width": hw}
-    got = [
-        r.v
-        for r in spark.range(n).select(
-            square_expr(cfg, F.col("id")).alias("v")
-        ).orderBy("id").collect()
-    ]
+    key, params = shape_params("square", cfg, n)
+    square = shape_expr(key, {k: F.lit(v) for k, v in params.items()}, F.col("id"), F.lit("r"), F.lit("s"))
+    got = [r.v for r in spark.range(n).select(square.alias("v")).orderBy("id").collect()]
     assert got == want
 
 
@@ -252,25 +250,19 @@ def test_generate_batched_matches_sequential_multi_spec_anomalies(spark, tmp_pat
 
     def reference(g, mode):
         cfg, n, t = g.config, g.num_points, F.col("t")
-        scaled = g.shape in ("sinusoidal", "custom", "real")
         if g.shape == "real":
             df = real_series_from_file(spark, cfg["path"], n)
-        elif g.shape == "custom" and G.custom_expr(cfg)[1]:
+        elif g.shape == "custom" and G.custom_expr(cfg["formula"])[1]:
             df = spark.createDataFrame(
                 list(enumerate(eval_recurrence(cfg["formula"], n))), "t long, value double"
             )
         else:
-            if g.shape == "random":
-                expr, scaled = G.random_expr(cfg, g.id, run_id, t)
-            elif g.shape == "sinusoidal":
-                expr = G.sinusoidal_expr(cfg, t, n)
-            elif g.shape == "custom":
-                expr = G.custom_expr(cfg)[0]
-            else:
-                expr = {"constant": G.constant_expr, "square": G.square_expr}[g.shape](cfg, t)
+            key, params = G.shape_params(g.shape, cfg, n)
+            literals = {k: F.lit(v) for k, v in params.items()}
+            expr = G.shape_expr(key, literals, t, F.lit(run_id), F.lit(g.id))
             df = G.time_grid(spark, n).withColumn("value", expr.cast("double"))
         df = df.withColumn("run_id", F.lit(run_id)).withColumn("series_id", F.lit(g.id))
-        if scaled:
+        if G.signal_scaled(g.shape, cfg):
             df = scale_signal(df, cfg, by=["series_id"])
             df = df.withColumn("value", F.col("value").cast("double"))
         df = apply_noise(df, cfg, by=["series_id"])
