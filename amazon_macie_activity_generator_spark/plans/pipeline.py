@@ -14,17 +14,24 @@ activity rows -> sink writes. The reference's lambda_self_invoke fan-out
 (K7, main.py:1102-1115) dissolves into partition parallelism: every
 payload/activity row is independent, so Spark schedules the width.
 
-Batch mode processes all slots in one job; streaming/replay.py drives
-the same dispatch functions one slot-batch at a time for cadence parity.
+The sinks of one cycle are independent, as the reference's targets
+are: ``run_blueprint`` writes the queue and executes every target
+concurrently, on at most ``MAX_SINK_THREADS`` driver threads that read
+the one persisted fact table. streaming/replay.py drives the delivery
+one micro-batch at a time for cadence parity.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from amazon_macie_activity_generator_spark.config import Blueprint, TargetSpec
 from amazon_macie_activity_generator_spark.operators.reshape import (
@@ -41,6 +48,11 @@ from amazon_macie_activity_generator_spark.sinks.local import (
     write_payload_lines,
     write_queue,
 )
+
+# Most sink writes one cycle runs at once. Each runs on its own driver
+# thread (and py4j connection); the executors are shared, so a blueprint
+# with more targets queues them instead of opening a thread per target.
+MAX_SINK_THREADS = 8
 
 
 def select_target_series(fact: DataFrame, target: TargetSpec) -> DataFrame:
@@ -168,20 +180,30 @@ def run_blueprint(
     execute every target. Returns output locations.
 
     The fact table is computed once and shared by the queue write and all
-    targets (the reference regenerates per cycle too, main.py:1128-1133)."""
-    import uuid as _uuid
-
-    run_id = run_id or _uuid.uuid4().hex
+    targets (the reference regenerates per cycle too, main.py:1128-1133).
+    The writes run concurrently, on at most ``MAX_SINK_THREADS`` threads;
+    concurrent readers share the one cache fill of ``fact``, whose rows
+    are deterministic. Each write carries the caller's job group, local
+    properties and session tags, so its jobs are attributed like the
+    caller's own. Every write finishes, and every thread is joined,
+    before the first failure (in target order, the queue first) is
+    raised. Every series is zero-filled to the grid, so the fact has
+    generators x ``num_points`` rows without a count job."""
+    run_id = run_id or uuid.uuid4().hex
     fact = generate(spark, blueprint, run_id=run_id, anomaly_mode=anomaly_mode).persist()
     try:
         queue_path = os.path.join(out_dir, "queue")
-        write_queue(
-            slot_row_json(fact).withColumn("run_id", F.lit(run_id)), queue_path
-        )
-        targets = [
-            execute_target(fact, t, out_dir, i) for i, t in enumerate(blueprint.targets)
+        slot_rows = slot_row_json(fact).withColumn("run_id", F.lit(run_id))
+        writes = [partial(write_queue, slot_rows, queue_path)] + [
+            partial(execute_target, fact, t, out_dir, i) for i, t in enumerate(blueprint.targets)
         ]
+        with ThreadPoolExecutor(max_workers=min(len(writes), MAX_SINK_THREADS),
+                                thread_name_prefix="run_blueprint") as pool:
+            # one wrapper per write: each gets its own copy of the local
+            # properties, which Spark SQL mutates per execution
+            futures = [pool.submit(inheritable_thread_target(spark)(w)) for w in writes]
+        _, *targets = [f.result() for f in futures]
         return {"run_id": run_id, "queue": queue_path, "targets": targets,
-                "n_rows": fact.count()}
+                "n_rows": len(blueprint.generators) * blueprint.num_points}
     finally:
         fact.unpersist()

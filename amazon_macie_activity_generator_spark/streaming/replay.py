@@ -22,7 +22,10 @@ Structured Streaming mapping:
   (``DRAIN_TIMEOUT_S``) that stops the query and raises instead of
   handing back the micro-batches delivered so far.
 - **Dedup** (SQS dedup ids, main.py:698-706): ``dropDuplicates(
-  ['run_id','t'])`` backed by the checkpoint's state store.
+  ['run_id','t'])`` backed by the checkpoint's state store. A micro-batch
+  reaches the batch function unsorted: the delivery write needs no slot
+  order, and a range sort would cost a sample job and an exchange per
+  batch.
 - **At-most-once**: Spark's checkpoint gives at-least-once per batch, so
   the batch fn writes with idempotent keys (run_id, t) — replayed batches
   overwrite identical rows instead of duplicating them. That is the
@@ -80,10 +83,11 @@ def replay(
     cadence_seconds: int | None = None,
     available_now: bool = False,
 ) -> StreamingQuery:
-    """Drive the dispatch: dedup on (run_id, t) -> orderBy(t) inside the
-    micro-batch (FIFO order within the batch) -> ``batch_fn`` executes the
-    slot rows on targets. at-most-once => batch_fn must write idempotently
-    keyed by (run_id, t).
+    """Drive the dispatch: dedup on (run_id, t) -> ``batch_fn`` executes
+    the micro-batch's slot rows on targets. The rows arrive in no
+    particular order; a ``batch_fn`` that needs slot order sorts the
+    batch itself. at-most-once => batch_fn must write idempotently keyed
+    by (run_id, t).
 
     State bound: a plain ``dropDuplicates`` on an unbounded stream keeps
     every (run_id, t) ever seen in the state store forever (the hazard
@@ -99,10 +103,7 @@ def replay(
         .drop("__arrival_ts")
     )
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        batch_fn(batch.orderBy("t"), batch_id)
-
-    writer = deduped.writeStream.foreachBatch(_process).option(
+    writer = deduped.writeStream.foreachBatch(batch_fn).option(
         "checkpointLocation", checkpoint_dir
     )
     if available_now:

@@ -12,6 +12,10 @@ session of ``scripts/oracle_check.py``. For every entry of
 ``list(QUERIES)`` the probe records:
 
 - the sha256 of its DuckDB oracle SQL (of "" for a rows-only entry);
+- its build-time job count: the Spark jobs the builder call launches
+  under a job group of its own, before the result is collected. The
+  plan hash cannot see work an entry runs at build (a streaming drain,
+  a blueprint cycle whose result is a checkpoint), the count can;
 - the sha256 of its ``explain("formatted")`` text, taken before the
   result is collected, after the masks in ``MASKS``;
 - the sha256 of its sorted result rows;
@@ -77,12 +81,17 @@ def probe(checkout: str, sf_dir: str, out_path: str) -> None:
     from amazon_macie_activity_generator_spark.queries import QUERIES
 
     spark = oracle_check.vanilla_session()
+    sc = spark.sparkContext
     con = oracle_check.duck_views(sf_dir)
     entries = {}
     for name, (fn, sql) in QUERIES.items():
         rec = {"module": fn.__module__.rsplit(".", 1)[-1], "oracle_sql_sha256": _sha(sql or "")}
         try:
+            sc.setJobGroup(f"identity-build-{name}", name)
             df = fn(spark, sf_dir)
+            sc.setJobGroup(f"identity-run-{name}", name)
+            sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+            rec["build_jobs"] = len(sc.statusTracker().getJobIdsForGroup(f"identity-build-{name}"))
             rec["plan_sha256"] = _sha(masked_plan(df, checkout))
             sdf = df.toPandas()
             rec["rows_sha256"] = rows_sha(sdf)
@@ -118,7 +127,7 @@ def drive_counts(side: dict) -> dict:
 
 
 def compare(parent_path: str, change_path: str, parent: dict, change: dict) -> dict:
-    fields = ("oracle_sql_sha256", "plan_sha256", "rows_sha256", "sf001_drive")
+    fields = ("oracle_sql_sha256", "build_jobs", "plan_sha256", "rows_sha256", "sf001_drive")
     names = list(change) + [n for n in parent if n not in change]
     entries = {}
     for name in names:
@@ -140,15 +149,18 @@ def compare(parent_path: str, change_path: str, parent: dict, change: dict) -> d
                  "local[8] session of scripts/oracle_check.py (8 shuffle "
                  "partitions), cache cleared after each entry"),
         "plan_masks": [what for _p, _r, what in MASKS] + ["checkout root"],
+        "build_jobs": "Spark jobs launched by the builder call, counted by a per-entry job group",
         "rows": "sha256 of the result rows, columns sorted by name, rows sorted as text",
         "sf001_drive": ("scripts/oracle_check.py's comparison at sf0.01: true = equal "
                         "to the DuckDB oracle, rows-only = no oracle"),
         "names_identical": list(parent) == list(change),
         "oracle_sql_identical": same("oracle_sql_sha256"),
+        "build_jobs_identical": same("build_jobs"),
         "plans_identical": same("plan_sha256"),
         "rows_identical": same("rows_sha256"),
         "entries_total": len(entries),
         "drive": {"parent": drive_counts(parent), "change": drive_counts(change)},
+        "build_jobs_differ": [n for n, r in entries.items() if r["build_jobs"][0] != r["build_jobs"][1]],
         "plans_differ": [n for n, r in entries.items() if r["plan_sha256"][0] != r["plan_sha256"][1]],
         "rows_differ": [n for n, r in entries.items() if r["rows_sha256"][0] != r["rows_sha256"][1]],
         "entries": entries,
@@ -183,8 +195,9 @@ def main() -> None:
     result = compare(parent_path, change_path, parent, change)
     write(result, out_path)
     print(json.dumps({k: result[k] for k in (
-        "names_identical", "oracle_sql_identical", "plans_identical",
+        "names_identical", "oracle_sql_identical", "build_jobs_identical", "plans_identical",
         "rows_identical", "entries_total", "drive")}))
+    print("build jobs differ:", result["build_jobs_differ"])
     print("plans differ:", result["plans_differ"])
     print("rows differ:", result.get("rows_differ", result.get("unstable_rows")))
 

@@ -99,5 +99,7 @@ def test_generate_rows_pinned(spark, tmp_path, mode):
     bp = _blueprint(str(real))
     assert len(bp.generators) == 33
     df = generate(spark, bp, run_id="pinned", anomaly_mode=mode)
+    # every series is zero-filled to the grid: run_blueprint reports its
+    # n_rows by this identity instead of running a count job
     assert df.count() == len(bp.generators) * bp.num_points
     assert _rows_sha(df) == PINNED[mode]

@@ -345,6 +345,68 @@ def test_run_blueprint_end_to_end(spark, bp, tmp_path):
     assert doc["action"] == "execute-datapoints"
 
 
+def _drain_listeners(spark) -> None:
+    """Let the status store catch up with every job event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30000)
+
+
+def _marker_job(spark, group: str) -> int:
+    """Run one job in ``group`` and return its id. Job ids are handed out
+    in submission order, so two markers bracket every job between them."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    sc.parallelize([1], 1).count()
+    _drain_listeners(spark)
+    (job,) = sc.statusTracker().getJobIdsForGroup(group)
+    return job
+
+
+def _cached_rdds(spark) -> set[int]:
+    return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_run_blueprint_jobs_stay_in_the_callers_group(spark, bp, tmp_path):
+    """The sink writes run on pool threads; each of their jobs must still
+    carry the caller's job group, or the build guard and the benchmark,
+    which both count jobs by group, would miss it."""
+    sc = spark.sparkContext
+    try:
+        first = _marker_job(spark, "cycle-before")
+        sc.setJobGroup("cycle", "run_blueprint")
+        run_blueprint(spark, bp, str(tmp_path), run_id="grouped")
+        last = _marker_job(spark, "cycle-after")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    launched = set(range(first + 1, last))
+    assert launched
+    assert set(sc.statusTracker().getJobIdsForGroup("cycle")) == launched
+
+
+def test_run_blueprint_failing_target_raises_after_the_rest(spark, bp, tmp_path):
+    """One target fails (its object directory is a plain file): the cycle
+    raises that error, but only once every other write has finished, and
+    it leaves no job, pool thread or cached fact behind."""
+    import threading
+    import time
+
+    cached_before = _cached_rdds(spark)
+    objects = tmp_path / "target_0_s3" / "objects"  # the s3/put target
+    objects.parent.mkdir()
+    objects.write_text("not a directory")
+    with pytest.raises(Exception, match="NotADirectoryError|FileExistsError"):
+        run_blueprint(spark, bp, str(tmp_path), run_id="failing")
+
+    assert (tmp_path / "target_3_cloudwatch" / "metrics" / "_SUCCESS").exists()
+    _drain_listeners(spark)
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert not [t for t in threading.enumerate() if t.name.startswith("run_blueprint")]
+    # unpersist drops the cached blocks asynchronously
+    deadline = time.time() + 30
+    while _cached_rdds(spark) - cached_before and time.time() < deadline:
+        time.sleep(0.1)
+    assert _cached_rdds(spark) - cached_before == set()
+
+
 # -------------------------------------------------------------- streaming
 
 def test_streaming_replay_at_most_once(spark, bp, tmp_path):
