@@ -5,13 +5,17 @@ Four tiers, cheapest-first, all shuffle-disciplined for 100 TB:
 - exact: hash-groupBy on the full text (one shuffle on a hashed key;
   canonical doc = min id, map-side combinable).
 - MinHash + LSH: shingle -> per-shingle hashes -> column-expression
-  minhash signature -> banded bucket join. Candidate generation never
-  compares all pairs: the only shuffle is groupBy(band, band_hash), and
-  within-bucket pairs are verified with exact Jaccard.
+  minhash signature -> banded bucket gather. Candidate generation never
+  compares all pairs: the only shuffle is groupBy(band, band_hash),
+  within-bucket pairs explode in-task over each bucket's sorted member
+  list (``skew.member_pairs``; buckets past 512 members take
+  ``skew.salted_self_pairs``), and candidates are verified with exact
+  shingle Jaccard (``_verified_jaccard``).
 - SimHash: 64-bit signature as a zero-shuffle map-side projection
   (JVM token hashing + vectorized Arrow bit-vote fold); near-dup =
   small Hamming distance, banded by 16-bit chunks (pigeonhole:
-  distance<=3 guarantees one of 4 chunks matches exactly).
+  distance<=3 guarantees one of 4 chunks matches exactly); candidates
+  form through the same bucket gather as MinHash.
 - n-gram Jaccard: exact set similarity on word n-grams, as an
   inverted-index join keyed on the gram (the verifier for the LSH
   tiers, or standalone with blocking).
@@ -27,6 +31,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from amazon_macie_activity_generator_spark.operators.skew import (
+    member_pairs,
+    salted_self_pairs,
+)
 
 # Java regex \s is [ \t\n\x0B\f\r]; RE2 (DuckDB's regex engine) \s
 # OMITS \x0B (vertical tab), so the engine defaults silently diverge on
@@ -153,30 +161,25 @@ def minhash_bands(sig: Column, bands: int, rows: int) -> Column:
     )
 
 
-def _banded_self_pairs(
-    banded: DataFrame,
-    heavy_bucket: int = 512,
-    n_salt: int = 8,
-) -> DataFrame:
+def _banded_self_pairs(banded: DataFrame, heavy_bucket: int = 512) -> DataFrame:
     """Candidate pairs (id_a < id_b) from an (id, band, bh) bucket table,
     with the giant-bucket skew guard the LSH join needs at scale.
 
     r13 (guide §2.4): bucket membership is gathered with ONE
     (band, bh)-keyed aggregation — ``sort_array(collect_list(id))`` —
-    and pairs explode in-task over the sorted list (the
-    ``_order_part_pairs`` construction, queries_warehouse.py). The previous
-    form tagged bucket sizes with a partitioned window and SELF-JOINED
-    the banded table on (band, bh): one shuffle for the window plus a
-    re-shuffle of each join side. This form shuffles the banded table
-    once, with map-side partial aggregation, and forms the same pairs
-    with no join at all. In-task fan-out is bounded by
-    C(``heavy_bucket``, 2) (~131k pairs at the 512 default, trivially
-    fine); buckets larger than ``heavy_bucket`` (boilerplate /
-    exact-duplicate docs — a bucket of d identical docs forms d^2/2
-    pairs) are re-exploded to rows and go through the two-sided salted
-    join, splitting each such bucket into ``n_salt`` hash cells so pairs
-    form per (band, bh, salt_a, salt_b) cell. Pair set identical to the
-    plain self-join (pinned by tests/test_ext3.py::
+    and pairs explode in-task over the sorted list
+    (``operators/skew.member_pairs``). The previous form tagged bucket
+    sizes with a partitioned window and SELF-JOINED the banded table on
+    (band, bh): one shuffle for the window plus a re-shuffle of each join
+    side. This form shuffles the banded table once, with map-side partial
+    aggregation, and forms the same pairs with no join at all. In-task
+    fan-out is bounded by C(``heavy_bucket``, 2) (~131k pairs at the 512
+    default, trivially fine); buckets larger than ``heavy_bucket``
+    (boilerplate / exact-duplicate docs — a bucket of d identical docs
+    forms d^2/2 pairs) are re-exploded to rows and go through
+    ``operators/skew.salted_self_pairs``, which forms pairs per
+    (band, bh, salt_a, salt_b) cell. Pair set identical to the plain
+    self-join (pinned by tests/test_ext3.py::
     test_banded_self_pairs_salted_branch_equivalence)."""
     from amazon_macie_activity_generator_spark.cache import scoped_persist
 
@@ -194,41 +197,42 @@ def _banded_self_pairs(
     )
     light_pairs = (
         grouped.filter(F.size("ids") <= heavy_bucket)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids)), "
-                    "y -> struct(x AS id_a, y AS id_b))))"
-                )
-            ).alias("pr")
-        )
-        .select("pr.id_a", "pr.id_b")
+        .select(F.explode(member_pairs("ids")).alias("pr"))
+        .select(F.col("pr.a").alias("id_a"), F.col("pr.b").alias("id_b"))
     )
     heavy = grouped.filter(F.size("ids") > heavy_bucket).select(
         "band", "bh", F.explode("ids").alias("id")
     )
-
-    def _salt(c):
-        return F.pmod(F.xxhash64(c, F.lit("lsh-bucket-salt")), F.lit(n_salt)).cast("int")
-
-    fan = F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-    ha = (
-        heavy.select(F.col("id").alias("id_a"), "band", "bh")
-        .withColumn("sa", _salt(F.col("id_a")))
-        .withColumn("sb", fan)
-    )
-    hb = (
-        heavy.select(F.col("id").alias("id_b"), "band", "bh")
-        .withColumn("sb", _salt(F.col("id_b")))
-        .withColumn("sa", fan)
-    )
-    heavy_pairs = (
-        ha.join(hb, ["band", "bh", "sa", "sb"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+    heavy_pairs = salted_self_pairs(heavy, ["band", "bh"], "id").select(
+        F.col("a").alias("id_a"), F.col("b").alias("id_b")
     )
     return light_pairs.unionAll(heavy_pairs).dropDuplicates(["id_a", "id_b"])
+
+
+def _jaccard(a: str, b: str) -> Column:
+    """Exact set Jaccard of two shingle arrays, rounded to 4 dp; 0.0 when
+    both are empty."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(F.array_union(a, b))
+    return F.round(F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 4)
+
+
+def _verified_jaccard(
+    pairs: DataFrame, base: DataFrame, jaccard_threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard) for the candidate ``pairs`` whose exact
+    shingle Jaccard, rounded to 4 dp, reaches the threshold: each side's
+    shingle array joins on from ``base`` (id, shingles)."""
+    sh = base.select("id", "shingles")
+    verified = (
+        pairs.join(sh.withColumnsRenamed({"id": "id_a", "shingles": "sh_a"}), on="id_a")
+        .join(sh.withColumnsRenamed({"id": "id_b", "shingles": "sh_b"}), on="id_b")
+    )
+    return (
+        verified.withColumn("jaccard", _jaccard("sh_a", "sh_b"))
+        .filter(F.col("jaccard") >= jaccard_threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
 
 
 def dedup_minhash_candidates(
@@ -279,22 +283,8 @@ def dedup_minhash_candidates(
         "id", F.explode(minhash_bands(F.col("sig"), bands, rows)).alias("b")
     ).select("id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
 
-    pairs = _banded_self_pairs(banded)
-
     # exact-Jaccard verification only for candidates (small set)
-    sh = base.select("id", "shingles")
-    verified = (
-        pairs.join(sh.withColumnsRenamed({"id": "id_a", "shingles": "sh_a"}), on="id_a")
-        .join(sh.withColumnsRenamed({"id": "id_b", "shingles": "sh_b"}), on="id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        verified.withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verified_jaccard(_banded_self_pairs(banded), base, jaccard_threshold)
 
 
 # ------------------------------------------------- MinHash, oracle bridge
@@ -387,20 +377,7 @@ def dedup_minhash_md5_pairs(
     ``dedup_minhash_candidates`` (narrow banded shuffle, skew hazards and
     AQE handling identical); returns (id_a, id_b, jaccard), id_a < id_b."""
     base, banded = _md5_base_and_bands(df, text_col, id_col, num_hashes, bands, shingle_k)
-    pairs = _banded_self_pairs(banded)
-    sh = base.select("id", "shingles")
-    verified = (
-        pairs.join(sh.withColumnsRenamed({"id": "id_a", "shingles": "sh_a"}), on="id_a")
-        .join(sh.withColumnsRenamed({"id": "id_b", "shingles": "sh_b"}), on="id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        verified.withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verified_jaccard(_banded_self_pairs(banded), base, jaccard_threshold)
 
 
 def dedup_incremental_md5(
@@ -448,11 +425,8 @@ def dedup_incremental_md5(
     ver = c_base.select(F.col("id").alias("cid"), F.col("shingles").alias("sh_c")).join(
         F.broadcast(with_bsh), on="cid"
     )
-    inter = F.size(F.array_intersect("sh_b", "sh_c"))
-    union = F.size(F.array_union("sh_b", "sh_c"))
-    jac = F.round(F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 4)
     best = (
-        ver.withColumn("jaccard", jac)
+        ver.withColumn("jaccard", _jaccard("sh_b", "sh_c"))
         .filter(F.col("jaccard") >= jaccard_threshold)
         .groupBy("bid")
         .agg(F.min(F.struct((-F.col("jaccard")).alias("nj"), F.col("cid").alias("c"))).alias("m"))

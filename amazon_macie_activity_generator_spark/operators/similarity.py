@@ -27,6 +27,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from amazon_macie_activity_generator_spark.operators.skew import (
+    member_pairs,
+    salted_self_pairs,
+)
+
 
 def _dvec(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -73,9 +78,16 @@ def pair_dot_arrow():
     return pair_dot
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    denom = norm_expr(a) * norm_expr(b)
+def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of ``a`` and ``b`` given their norms — the form every scored
+    join uses with norms hoisted to once-per-row columns. Zero-norm guard:
+    a zero vector has cosine 0 to everything, not a divide-by-zero."""
+    denom = na * nb
     return F.when(denom == 0, F.lit(0.0)).otherwise(dot_expr(a, b) / denom)
+
+
+def cosine_expr(a: Column, b: Column) -> Column:
+    return cosine_from_norms(a, b, norm_expr(a), norm_expr(b))
 
 
 def brute_force_topk(
@@ -114,11 +126,8 @@ def brute_force_topk(
     joined = corpus_n.crossJoin(F.broadcast(q)).filter(
         F.col(query_id_col) != F.col(id_col)
     )
-    denom = F.col("__cn") * F.col("__qn")
     sim = F.round(
-        F.when(denom == 0, F.lit(0.0)).otherwise(
-            dot_expr(F.col(vec_col), F.col("__qvec")) / denom
-        ),
+        cosine_from_norms(F.col(vec_col), F.col("__qvec"), F.col("__cn"), F.col("__qn")),
         4,
     )
     scored = joined.select(query_id_col, id_col, sim.alias("sim"))
@@ -289,10 +298,8 @@ def lsh_scored_candidates(
     )
 
     cand = c.join(q, on=["tbl", "bucket"]).filter(F.col(query_id_col) != F.col(id_col))
-    denom = F.col("__cnrm") * F.col("__qnrm")
     sim = F.round(
-        F.when(denom == 0, F.lit(0.0)).otherwise(
-            dot_expr(F.col(vec_col), F.col("__qvec")) / denom),
+        cosine_from_norms(F.col(vec_col), F.col("__qvec"), F.col("__cnrm"), F.col("__qnrm")),
         4,
     )
     # repartition BEFORE dropDuplicates (r13, guide §2.4):
@@ -464,10 +471,8 @@ def ivf_topk(
         F.explode(_assign_udf(centroids, nprobe)(F.col(vec_col))).alias("cluster"),
     )
     cand = c.join(F.broadcast(q), on="cluster").filter(F.col(query_id_col) != F.col(id_col))
-    denom = F.col("__cnrm") * F.col("__qnrm")
     sim = F.round(
-        F.when(denom == 0, F.lit(0.0)).otherwise(
-            dot_expr(F.col(vec_col), F.col("__qvec")) / denom),
+        cosine_from_norms(F.col(vec_col), F.col("__qvec"), F.col("__cnrm"), F.col("__qnrm")),
         4,
     )
     scored = cand.select(query_id_col, id_col, sim.alias("sim")).dropDuplicates(
@@ -533,7 +538,6 @@ def embedding_near_dup(
     vec_col: str = "embedding",
     dim: int | None = None,
     heavy_bucket: int = 4096,
-    n_salt: int = 8,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via SRP bucketing (in-task
     pair explode for normal buckets, salted self-join for giant ones) +
@@ -548,12 +552,11 @@ def embedding_near_dup(
       when an oracle needs the exact bucket ids pinned (the catalog
       entry pins 8 for its DuckDB twin).
     - Buckets larger than ``heavy_bucket`` (near-identical embedding
-      clusters, or an under-planed corpus) go through a two-sided SALTED
-      self-join — each giant bucket splits into ``n_salt`` hash cells and
-      pairs form per (bucket, salt_a, salt_b) cell, so one popular bucket
-      cannot pin its d^2/2 pair formation to a single task.  Pair set is
-      identical to the plain join (same construction as
-      operators/dedup._banded_self_pairs).  Bucket sizes come from a
+      clusters, or an under-planed corpus) go through the two-sided
+      salted self-join ``operators/skew.salted_self_pairs`` — pairs form
+      per (bucket, salt_a, salt_b) cell, so one popular bucket cannot pin
+      its d^2/2 pair formation to a single task.  Pair set is identical
+      to the plain join.  Bucket sizes come from a
       bucket-keyed aggregate (<= 2^planes rows, broadcast back), never a
       window shuffle of the vector-carrying rows."""
     # NULL vectors have no geometry: excluded up front (mirrored as
@@ -582,55 +585,33 @@ def embedding_near_dup(
     bsz = base.groupBy("bucket").agg(F.count(F.lit(1)).alias("bsz"))
     tagged = base.join(F.broadcast(bsz), "bucket")
     heavy = tagged.filter(F.col("bsz") > heavy_bucket)
-    # r14 (guide §2.4, the _banded_self_pairs construction): light-bucket
-    # pairs come from ONE bucket-keyed sort_array(collect_list) gather +
-    # an in-task C(n,2) explode over the id-sorted member list, instead
+    # r14 (guide §2.4): light-bucket pairs come from ONE bucket-keyed
+    # sort_array(collect_list) gather + the in-task C(n,2) explode
+    # (skew.member_pairs) over the id-sorted member list, instead
     # of a self-join on bucket — the join shuffled the vector-carrying
     # rows TWICE (both sides hash(bucket)) and sorted both; the gather
     # shuffles them once and forms the identical id_a < id_b pair set
     # in-task. In-task payload is bounded by the bsz tag: only buckets
     # <= heavy_bucket (4096 default, ~2 MB of 64-dim members) gather;
     # bigger buckets (near-identical clusters) keep the two-sided salted
-    # join below, so no aggregation buffer ever holds an unbounded
-    # member array.
+    # join (skew.salted_self_pairs), so no aggregation buffer ever holds
+    # an unbounded member array.
+    member = F.struct("id", "v", "nrm").alias("m")
+
+    def flat(a: Column, b: Column) -> list[Column]:
+        return [a["id"].alias("id_a"), b["id"].alias("id_b"), a["v"].alias("va"),
+                b["v"].alias("vb"), a["nrm"].alias("na"), b["nrm"].alias("nb")]
+
     light_pairs = (
         tagged.filter(F.col("bsz") <= heavy_bucket)
         .groupBy("bucket")
-        .agg(F.sort_array(F.collect_list(F.struct("id", "v", "nrm"))).alias("ms"))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ms, (x, i) -> "
-                    "transform(slice(ms, i + 2, size(ms)), "
-                    "y -> struct(x.id AS id_a, y.id AS id_b, "
-                    "x.v AS va, y.v AS vb, x.nrm AS na, y.nrm AS nb))))"
-                )
-            ).alias("pr")
-        )
-        .select("pr.*")
+        .agg(F.sort_array(F.collect_list(member)).alias("ms"))
+        .select(F.explode(member_pairs("ms")).alias("pr"))
+        .select(*flat(F.col("pr.a"), F.col("pr.b")))
     )
-
-    def _salt(c):
-        return F.pmod(F.xxhash64(c, F.lit("srp-bucket-salt")), F.lit(n_salt)).cast("int")
-
-    fan = F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-    ha = (
-        heavy.select(F.col("id").alias("id_a"), F.col("v").alias("va"),
-                     F.col("nrm").alias("na"), "bucket")
-        .withColumn("sa", _salt(F.col("id_a")))
-        .withColumn("sb", fan)
-    )
-    hb = (
-        heavy.select(F.col("id").alias("id_b"), F.col("v").alias("vb"),
-                     F.col("nrm").alias("nb"), "bucket")
-        .withColumn("sb", _salt(F.col("id_b")))
-        .withColumn("sa", fan)
-    )
-    heavy_pairs = (
-        ha.join(hb, ["bucket", "sa", "sb"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "va", "vb", "na", "nb")
-    )
+    heavy_pairs = salted_self_pairs(
+        heavy.select("bucket", member), ["bucket"], "m"
+    ).select(*flat(F.col("a"), F.col("b")))
     pairs = light_pairs.unionAll(heavy_pairs)
     # Verify stage: JVM-side left-fold dot. Measured against the Arrow
     # pair-dot alternative (pair_dot_arrow) on an 8x corpus probe: the
@@ -638,11 +619,8 @@ def embedding_near_dup(
     # 2 vectors/pair into Python costs more than the interpreted fold,
     # and the fold stays inside the join's streamed output instead of
     # forcing a materialized ArrowEvalPython stage.
-    denom = F.col("na") * F.col("nb")
     sim = F.round(
-        F.when(denom == 0, F.lit(0.0)).otherwise(
-            dot_expr(F.col("va"), F.col("vb")) / denom
-        ), 4,
+        cosine_from_norms(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), 4
     )
     return (
         pairs.select("id_a", "id_b", sim.alias("sim"))

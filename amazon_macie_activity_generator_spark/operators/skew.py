@@ -1,4 +1,6 @@
-"""Skew-handling toolbox: salted joins and salted aggregation.
+"""Skew-handling toolbox: salted joins, salted aggregation and the
+pair former every near-dup and co-occurrence entry builds its candidate
+pairs with.
 
 AQE's skew-join splitting (on in `session.py`) handles most sort-merge
 skew at runtime; salting is the explicit tool for the cases AQE can't
@@ -12,17 +14,38 @@ training-data pipelines).
 - ``salted_agg``: two-stage aggregation — partial agg on (key, salt),
   final agg on key. For algebraic aggregates (sum/count/min/max) the
   result is identical; the first stage caps any single reducer's input.
+- ``member_pairs``: every ``i < j`` pair of a sorted member array, as an
+  in-task C(n, 2) explode — the light path of a bucket gather
+  (``sort_array(collect_list(id))`` per key, then ``F.explode``), which
+  forms a bucket's pairs with one shuffle and no join.
+- ``salted_self_pairs``: the heavy path — for keys whose member list is
+  past the caller's size bound, a two-sided salted self-join that splits
+  each key into ``PAIR_SALTS`` hash cells, so one hot key's d^2/2 pairs
+  spread over PAIR_SALTS^2 join cells instead of landing in one task.
+
+Each caller keeps its own gather, size bound and persist; only the pair
+formation lives here.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# hash cells per key side in salted_self_pairs: a heavy key's pairs form
+# in PAIR_SALTS^2 cells
+PAIR_SALTS = 8
 
 
-def _salt_col(cols: list[str], salt: int) -> Column:
+def _salt_col(cols: list[str | Column], salt: int) -> Column:
     # hash-derived, partition-stable (same RNG discipline as functions/rng.py)
     return F.pmod(F.xxhash64(*cols, F.lit("salt")), F.lit(salt)).cast("int")
+
+
+def _salt_fan(salt: int) -> Column:
+    """One row per salt id 0..salt-1: the replicated side of a salted join."""
+    return F.explode(F.sequence(F.lit(0), F.lit(salt - 1)).cast("array<int>"))
 
 
 def salted_join(
@@ -49,9 +72,7 @@ def salted_join(
     big_salted = big.withColumn(
         "__salt", _salt_col([c for c in big.columns], salt)
     )
-    small_salted = small.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)).cast("array<int>"))
-    )
+    small_salted = small.withColumn("__salt", _salt_fan(salt))
     out = big_salted.join(small_salted, on=[on, "__salt"], how=how)
     return out.drop("__salt")
 
@@ -76,4 +97,49 @@ def salted_agg(
     return stage1.groupBy(key).agg(
         F.sum("__s").alias(f"sum_{value_col}"),
         F.sum("__n").alias("n_rows"),
+    )
+
+
+def member_pairs(arr: str) -> Column:
+    """``array<struct<a, b>>`` of every ``i < j`` pair of the sorted array
+    column ``arr``: ``[x0, x1, x2]`` gives ``(x0, x1), (x0, x2), (x1, x2)``.
+    Members are scalar ids or structs whose first field is the id, so an
+    id-sorted array yields ``a.id <= b.id`` pairs; callers ``F.explode``
+    the result. A NULL array gives NULL (no rows once exploded).
+
+    Written as SQL text so its lambda variables keep fixed names: a
+    Python-lambda higher-order function draws its variable names from a
+    per-JVM counter, which would renumber the lambdas of every plan built
+    after it in the same session."""
+    return F.expr(
+        f"flatten(transform(`{arr}`, (x, i) -> "
+        f"transform(slice(`{arr}`, i + 2, size(`{arr}`)), y -> struct(x AS a, y AS b))))"
+    )
+
+
+def salted_self_pairs(rows: DataFrame, keys: list[str], member: str) -> DataFrame:
+    """``(keys..., a, b)`` with ``a < b`` for every two members of ``rows``
+    that share a key — the pair set of
+    ``rows.join(rows, keys).filter(a < b)``, formed per
+    (keys, salt_a, salt_b) cell: each side hashes its member id into one
+    of ``PAIR_SALTS`` cells and replicates across the other side's cells,
+    so every pair meets in exactly one cell. ``member`` names a scalar id
+    column or a struct column whose first field is the id; the order and
+    the salt read that id."""
+    dtype = rows.schema[member].dataType
+
+    def member_id(c: str) -> Column:
+        if isinstance(dtype, StructType):
+            return F.col(c).getField(dtype.fields[0].name)
+        return F.col(c)
+
+    sides = rows.select(*keys, F.col(member).alias("__m"))
+    salt = _salt_col([member_id("__m")], PAIR_SALTS)
+    fan = _salt_fan(PAIR_SALTS)
+    a = sides.select(*keys, F.col("__m").alias("a"), salt.alias("__sa"), fan.alias("__sb"))
+    b = sides.select(*keys, F.col("__m").alias("b"), salt.alias("__sb"), fan.alias("__sa"))
+    return (
+        a.join(b, [*keys, "__sa", "__sb"])
+        .filter(member_id("a") < member_id("b"))
+        .select(*keys, "a", "b")
     )

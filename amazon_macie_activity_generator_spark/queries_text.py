@@ -65,6 +65,7 @@ from amazon_macie_activity_generator_spark.operators.dedup import (
     word_shingles_expr,
 )
 from amazon_macie_activity_generator_spark.operators.sampling import split_threshold_hex
+from amazon_macie_activity_generator_spark.operators.skew import member_pairs, salted_self_pairs
 from amazon_macie_activity_generator_spark.operators.text import (
     PII_PATTERNS,
     STOPWORDS,
@@ -1741,12 +1742,13 @@ def q_dedup_containment(
     ONE g-keyed ``sort_array(collect_list(doc_id))`` aggregation, capped
     at df <= 1000 (boilerplate-shingle guard), with light pairs
     (df <= 64) exploding in-task over the sorted list — no join. Grams
-    with df > 64 go through a two-sided SALTED pair join — each posting
-    list is split into S=8 hash buckets and pairs form per
-    (g, salt_a, salt_b) cell, so the worst task builds (1000/8)^2 ≈ 16k
-    pairs instead of ~500k from one 1000-df shingle. Pair set identical
-    to the plain inverted-index self-join; counts are exact integers;
-    the divisions are rounded to 6 dp."""
+    with df > 64 go through the two-sided salted pair join
+    ``skew.salted_self_pairs`` — each posting list is split into
+    ``PAIR_SALTS`` = 8 hash buckets and pairs form per (g, salt_a, salt_b)
+    cell, so the worst task builds (1000/8)^2 ≈ 16k pairs instead of
+    ~500k from one 1000-df shingle. Pair set identical to the plain
+    inverted-index self-join; counts are exact integers; the divisions
+    are rounded to 6 dp."""
     # spread the one-input-split table across cores (r13, the _docs
     # rule): tokenize + shingle explode is the CPU cost and otherwise
     # runs entirely on the scan's single task
@@ -1763,8 +1765,8 @@ def q_dedup_containment(
     # r13 (guide §2.4): gather the posting list per shingle with ONE
     # g-keyed aggregation — df IS size(ds), so the old separate df
     # aggregate and the df join back onto the gram table are gone, and
-    # light pairs explode in-task over the sorted list (the
-    # _banded_self_pairs construction) instead of a two-sided self-join.
+    # light pairs explode in-task over the sorted list
+    # (skew.member_pairs) instead of a two-sided self-join.
     # Persist barrier: the gathered table feeds the size table, the
     # light explode, and both salted heavy sides.
     # df semantics pinned to the oracle: its DISTINCT collapses ALL
@@ -1790,45 +1792,19 @@ def q_dedup_containment(
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("sz"))
     )
-    n_salt = 8
     light_pairs = (
         grouped.filter(F.size("ds") <= heavy_df)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) -> "
-                    "transform(slice(ds, i + 2, size(ds)), "
-                    "y -> struct(x AS da, y AS db))))"
-                )
-            ).alias("pr")
-        )
-        .select("pr.da", "pr.db")
+        .select(F.explode(member_pairs("ds")).alias("pr"))
+        .select(F.col("pr.a").alias("da"), F.col("pr.b").alias("db"))
     )
     # heavy grams (64 < df <= 1000) keep the two-sided salted join: a
     # single 1000-df gram would otherwise form its ~500k pairs in one
-    # task; the salt splits it into n_salt^2 cells exactly as before
+    # task; the salt splits it into PAIR_SALTS^2 cells
     heavy = grouped.filter(F.size("ds") > heavy_df).select(
         "g", F.explode("ds").alias("doc_id")
     )
-
-    def _salt(c):
-        return F.pmod(F.xxhash64(c, F.lit("containment-salt")), F.lit(n_salt)).cast("int")
-
-    fan = F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-    ha = (
-        heavy.select(F.col("doc_id").alias("da"), "g")
-        .withColumn("sa", _salt(F.col("da")))
-        .withColumn("sb", fan)
-    )
-    hb = (
-        heavy.select(F.col("doc_id").alias("db"), "g")
-        .withColumn("sb", _salt(F.col("db")))
-        .withColumn("sa", fan)
-    )
-    heavy_pairs = (
-        ha.join(hb, ["g", "sa", "sb"])
-        .filter(F.col("da") < F.col("db"))
-        .select("da", "db")
+    heavy_pairs = salted_self_pairs(heavy, ["g"], "doc_id").select(
+        F.col("a").alias("da"), F.col("b").alias("db")
     )
     shared = (
         light_pairs.unionAll(heavy_pairs)
@@ -2167,15 +2143,14 @@ def q_source_overlap(
 
     r13 (guide §2.4): the per-shingle source set is gathered with ONE
     (shingle)-keyed ``collect_set`` aggregation and pairs explode
-    in-task over the sorted set (the copurchase_pairs construction in
-    queries_warehouse.py). The previous form — distinct (source, shingle) rows,
-    a df-count aggregate joined back as the cap filter, then a
-    shingle-keyed SELF-JOIN — shuffled the fat shingle strings four
-    times (distinct, df aggregate, both join sides); this shuffles them
-    once, the distinct folds into the set-union semantics of
-    ``collect_set``, the cap filter is ``size(ss) <= cap`` on the
-    aggregate itself, and the per-source totals explode from the same
-    persisted set table. In-task fan-out is C(|ss|, 2) <= C(cap, 2),
+    in-task over the sorted set (``skew.member_pairs``). The previous
+    form — distinct (source, shingle) rows, a df-count aggregate joined
+    back as the cap filter, then a shingle-keyed SELF-JOIN — shuffled
+    the fat shingle strings four times (distinct, df aggregate, both join
+    sides); this shuffles them once, the distinct folds into the
+    set-union semantics of ``collect_set``, the cap filter is
+    ``size(ss) <= cap`` on the aggregate itself, and the per-source
+    totals explode from the same persisted set table. In-task fan-out is C(|ss|, 2) <= C(cap, 2),
     exactly the old per-shingle join bound.
     """
     # spread the one-input-split table across cores (r13, the _docs
@@ -2212,18 +2187,10 @@ def q_source_overlap(
         "source_overlap",
     )
     pairs = (
-        srcs.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ss, (x, i) -> "
-                    "transform(slice(ss, i + 2, size(ss)), "
-                    "y -> struct(x AS sa, y AS sb))))"
-                )
-            ).alias("pr")
-        )
+        srcs.select(F.explode(member_pairs("ss")).alias("pr"))
         .groupBy(
-            F.col("pr.sa").alias("source_a"),
-            F.col("pr.sb").alias("source_b"),
+            F.col("pr.a").alias("source_a"),
+            F.col("pr.b").alias("source_b"),
         )
         # source sets are sets, so each co-occurring pair appears once
         # per shared shingle: count(*) IS the number of distinct shared

@@ -456,7 +456,10 @@ def q_topk_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids, candidates re-rank by exact cosine. Scale shape is the
     IVF one: corpus assigned once (16-row broadcast centroid table),
     candidate join keyed on the cluster id, never all-pairs."""
-    from amazon_macie_activity_generator_spark.operators.similarity import dot_expr, norm_expr
+    from amazon_macie_activity_generator_spark.operators.similarity import (
+        cosine_from_norms,
+        norm_expr,
+    )
 
     emb = (
         load_table(spark, sf_dir, "embeddings")
@@ -513,13 +516,10 @@ def q_topk_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(probes.withColumn("__qn", norm_expr(F.col("qv")))),
         "cluster",
     ).filter(F.col("query_id") != F.col("vec_id"))
-    denom = F.col("__cn") * F.col("__qn")
     scored = cand.select(
         "query_id", "vec_id",
         F.round(
-            F.when(denom == 0, F.lit(0.0)).otherwise(
-                dot_expr(F.col("v"), F.col("qv")) / denom),
-            4,
+            cosine_from_norms(F.col("v"), F.col("qv"), F.col("__cn"), F.col("__qn")), 4
         ).alias("sim"),
     ).dropDuplicates(["query_id", "vec_id"])
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col("vec_id"))
@@ -917,7 +917,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's row_number.
     """
     from amazon_macie_activity_generator_spark.operators.similarity import (
-        dot_expr,
+        cosine_from_norms,
         norm_expr,
     )
 
@@ -939,11 +939,8 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             norm_expr(F.col("embedding")).alias("qn"),
         )
     )  # broadcast side: built from the raw scan, no spread shuffle
-    denom = F.col("nrm") * F.col("qn")
     sim = F.round(
-        F.when(denom == 0, F.lit(0.0)).otherwise(
-            dot_expr(F.col("embedding"), F.col("qv")) / denom),
-        4,
+        cosine_from_norms(F.col("embedding"), F.col("qv"), F.col("nrm"), F.col("qn")), 4
     )
     scored = (
         emb.crossJoin(F.broadcast(anchors))

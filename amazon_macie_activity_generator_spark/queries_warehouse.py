@@ -48,6 +48,7 @@ from amazon_macie_activity_generator_spark.cache import begin_scope, scoped_pers
 from amazon_macie_activity_generator_spark.functions.jsonx import extract_int_prop, sql_int_prop
 from amazon_macie_activity_generator_spark.functions.rounding import sql_round_fixed
 from amazon_macie_activity_generator_spark.operators.interpolate import MAX_GRID_SLOTS
+from amazon_macie_activity_generator_spark.operators.skew import member_pairs
 from amazon_macie_activity_generator_spark.operators.sessionize import (
     sessionize,
     sessionize_stateful,
@@ -1874,25 +1875,17 @@ def _order_part_pairs(li: DataFrame) -> DataFrame:
     broadcast/sort-merge join. ``collect_set`` per order is the same
     dedup as ``dropDuplicates`` (l_partkey is non-null in this schema)
     in ONE scan + ONE order-keyed shuffle with map-side partial
-    aggregation, and the C(w, 2) pair fan-out happens in-task over the
-    sorted set (w <= 7 in TPC-H-shaped data, so the explode is O(1) per
-    order). At 100 TB this halves the scans and shuffles AND removes the
-    join: the old plan's broadcast side was op itself — order-count
-    sized, un-broadcastable at scale, where it would degrade to a
-    sort-merge join shuffling the projection a third time."""
+    aggregation, and the C(w, 2) pair fan-out (``skew.member_pairs``)
+    happens in-task over the sorted set (w <= 7 in TPC-H-shaped data, so
+    the explode is O(1) per order). At 100 TB this halves the scans and
+    shuffles AND removes the join: the old plan's broadcast side was op
+    itself — order-count sized, un-broadcastable at scale, where it would
+    degrade to a sort-merge join shuffling the projection a third time."""
     return (
         li.groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> "
-                    "transform(slice(ps, i + 2, size(ps)), "
-                    "y -> struct(x AS p1, y AS p2))))"
-                )
-            ).alias("pr")
-        )
-        .select("pr.p1", "pr.p2")
+        .select(F.explode(member_pairs("ps")).alias("pr"))
+        .select(F.col("pr.a").alias("p1"), F.col("pr.b").alias("p2"))
     )
 
 
@@ -1907,23 +1900,18 @@ def _order_part_pairs_sym(li: DataFrame) -> DataFrame:
     ObjectHashAggregate exchanges feeding the same downstream dedup
     (pagerank job timeline showed the two gathers as back-to-back ~1.5 s
     cache-fill jobs). Emitting struct(x,y) and struct(y,x) from the SAME
-    in-task C(w,2) explode produces the identical multiset — each
-    unordered pair of each order exactly once per direction — with ONE
-    scan and ONE gather shuffle; at 100 TB this halves the heaviest scan
-    and shuffle of the graph family."""
+    in-task C(w,2) explode (``skew.member_pairs``) produces the identical
+    multiset — each unordered pair of each order exactly once per
+    direction — with ONE scan and ONE gather shuffle; at 100 TB this
+    halves the heaviest scan and shuffle of the graph family."""
+    a, b = F.col("pr.a"), F.col("pr.b")
     return (
         li.groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> "
-                    "flatten(transform(slice(ps, i + 2, size(ps)), "
-                    "y -> array(struct(x AS src, y AS dst), "
-                    "struct(y AS src, x AS dst))))))"
-                )
-            ).alias("e")
-        )
+        .select(F.explode(member_pairs("ps")).alias("pr"))
+        .select(F.explode(F.array(
+            F.struct(a.alias("src"), b.alias("dst")), F.struct(b.alias("src"), a.alias("dst"))
+        )).alias("e"))
         .select("e.src", "e.dst")
     )
 

@@ -18,6 +18,9 @@ Usage:
   python scripts/sf1_drive.py --build [--k 10]
   python scripts/sf1_drive.py --chunk 0 [--chunk-size 35]   # per fresh JVM
   python scripts/sf1_drive.py --summarize
+
+Every mode takes ``--work-dir DIR`` (default /tmp/spark_graft_sf1): the
+built tables go to DIR/data and the drive appends to DIR/results.jsonl.
 """
 
 from __future__ import annotations
@@ -32,15 +35,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from amazon_macie_activity_generator_spark.session import get_spark  # noqa: E402
 
-WORK = "/tmp/spark_graft_sf1"
-DATA = os.path.join(WORK, "data")
-RESULTS = os.path.join(WORK, "results.jsonl")
+DEFAULT_WORK_DIR = "/tmp/spark_graft_sf1"
 ID_OFFSET = 10_000_000  # events' user offset lives in scale_probe.USER_OFFSET
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
-def build(sf_dir: str, k: int) -> None:
+def build(sf_dir: str, k: int, work_dir: str) -> None:
     import shutil
 
     from pyspark.sql import functions as F
@@ -52,10 +53,11 @@ def build(sf_dir: str, k: int) -> None:
 
     spark = get_spark("sf1-drive")
     spark.sparkContext.setLogLevel("ERROR")
-    os.makedirs(DATA, exist_ok=True)
+    data = os.path.join(work_dir, "data")
+    os.makedirs(data, exist_ok=True)
     # documents / embeddings / events / lineitem + small-table copies:
     # the proven volume-mode recipe (disjoint keys AND content)
-    build_scaled_dir(spark, sf_dir, DATA, k, stress=False)
+    build_scaled_dir(spark, sf_dir, data, k, stress=False)
 
     # the probe leaves dims at 1x; scale them too, with offsets CONSISTENT
     # with lineitem/orders so every FK keeps a parent
@@ -70,7 +72,7 @@ def build(sf_dir: str, k: int) -> None:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        out.write.mode("overwrite").parquet(os.path.join(DATA, f"{table}.parquet"))
+        out.write.mode("overwrite").parquet(os.path.join(data, f"{table}.parquet"))
 
     scale("customer", {"c_custkey": ID_OFFSET})
     scale("supplier", {"s_suppkey": ID_OFFSET})
@@ -89,12 +91,12 @@ def build(sf_dir: str, k: int) -> None:
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    out.write.mode("overwrite").parquet(os.path.join(DATA, "lineitem_tmp.parquet"))
-    shutil.rmtree(os.path.join(DATA, "lineitem.parquet"))
-    os.rename(os.path.join(DATA, "lineitem_tmp.parquet"),
-              os.path.join(DATA, "lineitem.parquet"))
+    out.write.mode("overwrite").parquet(os.path.join(data, "lineitem_tmp.parquet"))
+    shutil.rmtree(os.path.join(data, "lineitem.parquet"))
+    os.rename(os.path.join(data, "lineitem_tmp.parquet"),
+              os.path.join(data, "lineitem.parquet"))
     for t in TABLES:
-        n = spark.read.parquet(os.path.join(DATA, f"{t}.parquet")).count()
+        n = spark.read.parquet(os.path.join(data, f"{t}.parquet")).count()
         print(json.dumps({"table": t, "rows": n}), flush=True)
     spark.stop()
 
@@ -151,7 +153,9 @@ def _duck_with_timeout(con, sql: str, seconds: int):
     return out["df"], None, False
 
 
-def drive_chunk(chunk: int, chunk_size: int, only: list[str] | None = None) -> None:
+def drive_chunk(
+    chunk: int, chunk_size: int, work_dir: str, only: list[str] | None = None
+) -> None:
     import duckdb
 
     import __spark_entry__ as entrymod
@@ -168,24 +172,25 @@ def drive_chunk(chunk: int, chunk_size: int, only: list[str] | None = None) -> N
     spark = get_spark("sf1-drive")
     spark.sparkContext.setLogLevel("ERROR")
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    data = os.path.join(work_dir, "data")
 
     def fresh_con():
         c = duckdb.connect()
         for t in TABLES:
             # Spark writes tables as part-file directories; the copied
             # dims stay single files — glob accordingly
-            p = os.path.join(DATA, f"{t}.parquet")
+            p = os.path.join(data, f"{t}.parquet")
             src = f"{p}/*.parquet" if os.path.isdir(p) else p
             c.execute(f"CREATE VIEW {t} AS FROM '{src}'")
         return c
 
     con = fresh_con()
-    with open(RESULTS, "a") as out:
+    with open(os.path.join(work_dir, "results.jsonl"), "a") as out:
         for name in names:
             rec: dict = {"name": name, "chunk": chunk}
             try:
                 t0 = time.perf_counter()
-                sdf = qs[name](spark, DATA).toPandas()
+                sdf = qs[name](spark, data).toPandas()
                 rec["spark_s"] = round(time.perf_counter() - t0, 2)
                 t0 = time.perf_counter()
                 ddf, err, hung = _duck_with_timeout(
@@ -232,10 +237,11 @@ def drive_chunk(chunk: int, chunk_size: int, only: list[str] | None = None) -> N
     spark.stop()
 
 
-def summarize() -> None:
+def summarize(work_dir: str) -> None:
     # latest row per entry wins (re-drives append); rows from before the
     # r10 status field are classified by the same rules they'd get today
-    recs = [json.loads(line) for line in open(RESULTS)]
+    results = os.path.join(work_dir, "results.jsonl")
+    recs = [json.loads(line) for line in open(results)]
     latest: dict[str, dict] = {r["name"]: r for r in recs}
     # Re-driven entries leave their stale rows in the file — mark them
     # superseded IN PLACE so the committed jsonl self-describes and a
@@ -246,7 +252,7 @@ def summarize() -> None:
     if stale:
         for r in stale:
             r["superseded"] = True
-        with open(RESULTS, "w") as out:
+        with open(results, "w") as out:
             for r in recs:
                 out.write(json.dumps(r) + "\n")
     agree = [r for r in latest.values() if r.get("agree")]
@@ -301,15 +307,17 @@ def main() -> None:
                     help="comma-separated entry names to (re-)drive (fresh "
                     "JVM; results.jsonl keeps the latest row per entry)")
     ap.add_argument("--summarize", action="store_true")
+    ap.add_argument("--work-dir", default=DEFAULT_WORK_DIR,
+                    help="holds the built tables (data/) and results.jsonl")
     args = ap.parse_args()
     if args.build:
-        build(args.sf_dir, args.k)
+        build(args.sf_dir, args.k, args.work_dir)
     elif args.summarize:
-        summarize()
+        summarize(args.work_dir)
     elif args.entries:
-        drive_chunk(-1, 0, only=args.entries.split(","))
+        drive_chunk(-1, 0, args.work_dir, only=args.entries.split(","))
     elif args.chunk is not None:
-        drive_chunk(args.chunk, args.chunk_size)
+        drive_chunk(args.chunk, args.chunk_size, args.work_dir)
     else:
         ap.print_help()
 

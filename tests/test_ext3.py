@@ -312,7 +312,7 @@ def test_banded_self_pairs_salted_branch_equivalence(spark):
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    salted = _banded_self_pairs(banded, heavy_bucket=8, n_salt=4)
+    salted = _banded_self_pairs(banded, heavy_bucket=8)
     expected = {(r.id_a, r.id_b) for r in plain.collect()}
     got = {(r.id_a, r.id_b) for r in salted.collect()}
     assert got == expected

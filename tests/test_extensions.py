@@ -616,7 +616,7 @@ def test_embedding_near_dup_salted_equals_plain(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     plain = embedding_near_dup(df, threshold=0.9, planes=6, heavy_bucket=10**9)
-    salted = embedding_near_dup(df, threshold=0.9, planes=6, heavy_bucket=4, n_salt=4)
+    salted = embedding_near_dup(df, threshold=0.9, planes=6, heavy_bucket=4)
     p = {(r.id_a, r.id_b): r.sim for r in plain.collect()}
     s = {(r.id_a, r.id_b): r.sim for r in salted.collect()}
     assert p == s

@@ -1,0 +1,132 @@
+"""The pair former in ``operators/skew.py``: ``member_pairs`` (the in-task
+C(n, 2) explode over a sorted member array) and ``salted_self_pairs``
+(the salted self-join for keys past a gather's size bound), checked
+against their plain definitions, plus a source guard that keeps them the
+package's only copies of either construction."""
+
+from __future__ import annotations
+
+import itertools
+import pathlib
+import re
+
+from pyspark.sql import functions as F
+
+from amazon_macie_activity_generator_spark.operators.skew import (
+    member_pairs,
+    salted_self_pairs,
+)
+
+PKG = "amazon_macie_activity_generator_spark"
+ROOT = pathlib.Path(__file__).resolve().parent.parent / PKG
+
+# the explode's inner slice: every later member of the array, from
+# index i + 1 (1-based i + 2) on — in Python or in a SQL string
+PAIR_EXPLODE = re.compile(r"slice\([^()]*,\s*\w+\s*\+\s*2\s*,")
+# the replicated side of a salted join: sequence(0, <salt count> - 1)
+SALT_FAN = re.compile(
+    r"sequence\(\s*(?:F\.lit\(\s*)?0\s*\)?\s*,\s*(?:F\.lit\(\s*)?[\w.]*salt\w*\s*-\s*1",
+    re.IGNORECASE,
+)
+
+
+def pair_former_copies(root: pathlib.Path = ROOT) -> list[str]:
+    """Every C(n, 2) pair explode or salt fan in a package module other
+    than ``operators/skew.py``, as ``path:line what``."""
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "operators" / "skew.py":
+            continue
+        text = path.read_text()
+        for what, pattern in (("pair explode", PAIR_EXPLODE), ("salt fan", SALT_FAN)):
+            for m in pattern.finditer(text):
+                line = text.count("\n", 0, m.start()) + 1
+                hits.append(f"{path.relative_to(root.parent)}:{line} {what}")
+    return hits
+
+
+def test_pair_formation_lives_only_in_skew():
+    assert pair_former_copies() == []
+
+
+def test_guard_finds_pasted_copies(tmp_path):
+    pkg = tmp_path / PKG
+    (pkg / "operators").mkdir(parents=True)
+    pasted = (
+        'F.expr("flatten(transform(ids, (x, i) -> "\n'
+        '       "transform(slice(ids, i + 2, size(ids)), y -> struct(x, y))))")\n'
+        "F.transform(arr, lambda x, i: F.slice(\n    arr, i + 2, F.size(arr)))\n"
+        "fan = F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))\n"
+        "# not a fan: F.sequence(F.lit(0), F.lit(bands - 1)), F.slice(tk, i + 1, k)\n"
+    )
+    (pkg / "mod.py").write_text(pasted)
+    (pkg / "operators" / "skew.py").write_text(pasted)
+    assert pair_former_copies(pkg) == [
+        f"{PKG}/mod.py:2 pair explode",
+        f"{PKG}/mod.py:3 pair explode",
+        f"{PKG}/mod.py:5 salt fan",
+    ]
+
+
+def test_member_pairs_matches_combinations(spark):
+    arrays = [[], [5], [3, 9], [1, 2, 4, 8, 16, 32, 64], None]
+    df = spark.createDataFrame(list(enumerate(arrays)), "k int, arr array<long>")
+    got = {r.k: r.pr for r in df.select("k", member_pairs("arr").alias("pr")).collect()}
+    for k, arr in enumerate(arrays):
+        if arr is None:
+            assert got[k] is None
+        else:
+            assert [(p.a, p.b) for p in got[k]] == list(itertools.combinations(arr, 2))
+    exploded = df.select(F.explode(member_pairs("arr")).alias("pr"))
+    assert exploded.count() == 0 + 0 + 1 + 21
+
+
+def test_member_pairs_carries_struct_members(spark):
+    df = spark.createDataFrame([([(1, "x"), (4, "y"), (6, "z")],)],
+                               "ms array<struct<id: long, tag: string>>")
+    pairs = df.select(F.explode(member_pairs("ms")).alias("pr")).select(
+        "pr.a.id", "pr.a.tag", "pr.b.id", "pr.b.tag"
+    )
+    assert [tuple(r) for r in pairs.collect()] == [
+        (1, "x", 4, "y"), (1, "x", 6, "z"), (4, "y", 6, "z"),
+    ]
+
+
+def _keyed_rows(spark):
+    rows = [(0, 111, i) for i in range(70)]        # one 70-member key
+    rows += [(1, 222, 100 + i) for i in range(5)]  # a small key
+    rows += [(2, 333, 200)]                        # a singleton
+    rows += [(0, 444, 100 + i) for i in range(3)]  # same ids, second key
+    return spark.createDataFrame(rows, "band int, bh long, id long")
+
+
+def test_salted_self_pairs_equals_plain_self_join(spark):
+    rows = _keyed_rows(spark)
+    plain = (
+        rows.withColumnRenamed("id", "a")
+        .join(rows.withColumnRenamed("id", "b"), ["band", "bh"])
+        .filter(F.col("a") < F.col("b"))
+    )
+    salted = salted_self_pairs(rows, ["band", "bh"], "id")
+    assert salted.columns == ["band", "bh", "a", "b"]
+    got = sorted(tuple(r) for r in salted.collect())
+    assert got == sorted(tuple(r) for r in plain.select("band", "bh", "a", "b").collect())
+    # each pair once: C(70,2) + C(5,2) + C(3,2), none from the singleton
+    assert len(got) == 70 * 69 // 2 + 10 + 3
+
+
+def test_salted_self_pairs_orders_struct_members_by_id(spark):
+    rows = _keyed_rows(spark).select(
+        "band", "bh", F.struct("id", (-F.col("id")).alias("neg")).alias("m")
+    )
+    salted = salted_self_pairs(rows, ["band", "bh"], "m").select(
+        "band", "bh", "a.id", "a.neg", "b.id", "b.neg"
+    )
+    got = sorted(tuple(r) for r in salted.collect())
+    plain = sorted(
+        (band, bh, a, -a, b, -b)
+        for (band, bh), ids in (((0, 111), range(70)), ((1, 222), range(100, 105)),
+                                ((0, 444), range(100, 103)))
+        for a, b in itertools.combinations(ids, 2)
+    )
+    assert got == plain
