@@ -20,16 +20,20 @@ Four tiers, cheapest-first, all shuffle-disciplined for 100 TB:
   inverted-index join keyed on the gram (the verifier for the LSH
   tiers, or standalone with blocking).
 
-Everything is built from JVM-side expressions (transform/aggregate/
-xxhash64) — no Python in the hot path.
+Pairs are built from JVM-side expressions (transform/aggregate/
+xxhash64); Python runs only as vectorised Arrow batch kernels (the
+simhash vote fold, connected components' per-task union-find).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from amazon_macie_activity_generator_spark.operators.skew import (
     member_pairs,
@@ -634,21 +638,6 @@ def simhash_near_pairs(sig_df: DataFrame, max_hamming: int = 3) -> DataFrame:
 
 # ------------------------------------------------- connected components
 
-def _without_size_estimate(df: DataFrame) -> DataFrame:
-    """``df`` over the same rows, planned with Spark's default size
-    estimate instead of one derived from its plan. A checkpoint keeps
-    its plan's estimate and a join estimates the product of its inputs,
-    so a loop that joins its previous checkpoint squares the estimate
-    every round; past about 18 rounds the planner spends seconds, then
-    minutes, then the whole heap multiplying integers of millions of
-    digits. The rows go through the JVM's public ``createDataFrame(
-    JavaRDD[Row], schema)`` — no Python, no extra job."""
-    spark = df.sparkSession
-    return DataFrame(
-        spark._jsparkSession.createDataFrame(df._jdf.javaRDD(), df._jdf.schema()), spark
-    )
-
-
 def connected_components(
     edges: DataFrame,
     src_col: str = "id_a",
@@ -660,113 +649,110 @@ def connected_components(
     document. The step that turns candidate pairs into actual dedup
     decisions (keep group_id, drop the rest).
 
-    Min-label propagation with pointer jumping and hooking, so the
-    rounds grow with log(diameter), not with the diameter (measured on
-    chains below; no bound is proven for every id order). Every node
-    starts labeled with itself. A
-    round gives each node the min of its own label, its neighbors'
-    labels and its label's label (the jump), and gives each node's
-    label the labels of the node's neighbors (the hook). A chain whose
-    ids ascend from its minimum converges in ceil(log2 diameter) + 2
-    rounds, the last (unchanged) one included: 6 for 16 nodes, 16 for
-    10,000; ``max_iter`` rounds resolve such a chain up to diameter
-    2^(max_iter-2). Without the hook, other id orders fall back toward
-    one round per hop (a shuffled 1,000-node chain: 250-730 rounds);
-    with it a shuffled 10,000-node chain takes about 20.
+    Local contraction (Łącki et al., "Connected Components at Scale via
+    Local Contractions", 2018). A round sends each edge ``(a, b)`` to the
+    tasks of both its ends (``explode(array(a, b))``, then ``rebalance``
+    on that key), so a node's whole neighbourhood meets in one task. Each
+    task solves its subgraph in one Arrow pass (a numpy union-find) and
+    emits ``(v, m)``, ``m`` the min id of ``v``'s component there. A
+    ``groupBy(v)`` gathers each node's sorted centres ``ms``; the round's
+    ``localCheckpoint`` observes how many nodes have more than one. With
+    none, the result is ``(v, ms[0])``: each edge's ends then share their
+    one label, so it is constant on a component, whose min labels itself.
+    Otherwise the next edges are ``(v, ms[0])`` (``(v, v)`` included, so
+    no node is lost) and ``(c, ms[0])`` for each other centre ``c`` of
+    ``v``: each new edge stays inside a component, and each old edge's
+    ends stay joined through the centre they shared.
 
-    Per round: two joins against the label table — the edge join, then
-    ONE label lookup that serves the edge, hook and jump rows — and one
-    groupBy on the node id, all shuffled on node ids. Each node's own
-    row alone carries its old label into that groupBy, so the round's
-    change count is an observed metric of the round's checkpoint — no
-    second join, no extra count job. ``localCheckpoint`` cuts lineage
-    so plans don't grow per iteration."""
-    # both directions from ONE evaluation of the (possibly expensive)
-    # edge pipeline: explode a 2-element array instead of a self-union
-    bidir = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
-                    F.struct(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")),
-                )
-            ).alias("e")
+    Progress: a node's smallest centre never grows (its edge to it lands
+    in some task), and a node that is no centre keeps a single edge, to a
+    smaller node, so it is never a centre again: the contracted graph of
+    centres only shrinks. A graph that AQE coalesces into one task
+    resolves in one round. No bound is proven for every partitioning; a
+    shuffled 10,000-node chain over 16 unmerged tasks takes 9 rounds.
+
+    Per-task memory: a task holds its partition's edges plus a few int64
+    arrays per edge and node. ``rebalance`` lets AQE split a skewed
+    partition (a hub's edges) into advisory-size pieces, which bounds a
+    Python worker's input; a split neighbourhood can cost a round, never
+    correctness. A round has no join, so its plan stays the same size.
+
+    ``max_iter`` bounds the rounds: if nodes still see more than one
+    centre after it, the operator raises ``RuntimeError`` ("did not
+    converge in N rounds") rather than return a split group."""
+
+    def local_minima(batches):
+        # The mapInArrow body: (v, m) for every node v of the task's edges
+        # (a, b), m the min id of v's component in the task's subgraph.
+        # Ids are ranked by Arrow's sort, which orders longs, ints and
+        # strings as Spark does, and a vectorised union-find runs on the
+        # ranks: each edge whose ends have different roots hooks the
+        # larger root to the smaller, then pointer jumping flattens the
+        # forest, until every edge joins one root. Parents only point to
+        # smaller ranks, so a component's min is its root. An edge with a
+        # NULL end joins nothing; a NULL end is the node (NULL, NULL).
+        # Nested, so it pickles by value: workers need not import this
+        # package.
+        batches = list(batches)
+        if not batches:
+            return
+        table = pa.Table.from_batches(batches)
+        a, b = table.column("a").combine_chunks(), table.column("b").combine_chunks()
+        ends = pa.concat_arrays([a, b])
+        nodes = pc.unique(ends.drop_null())
+        nodes = nodes.take(pc.sort_indices(nodes))
+        joined = pc.and_(a.is_valid(), b.is_valid())
+        u, w = (
+            pc.index_in(x.filter(joined), value_set=nodes).to_numpy().astype(np.int64)
+            for x in (a, b)
         )
-        .select("e.src", "e.dst")
-        .distinct()
-        .localCheckpoint()
+        parent = np.arange(len(nodes))
+        while True:
+            ru, rw = parent[u], parent[w]
+            lo, hi = np.minimum(ru, rw), np.maximum(ru, rw)
+            split = lo != hi
+            if not split.any():
+                break
+            np.minimum.at(parent, hi[split], lo[split])
+            while not np.array_equal(jumped := parent[parent], parent):
+                parent = jumped
+        v, m = nodes, nodes.take(parent)
+        if ends.null_count:
+            v, m = (pa.concat_arrays([x, pa.nulls(1, x.type)]) for x in (v, m))
+        yield pa.RecordBatch.from_arrays([v, m], names=["v", "m"])
+
+    id_type = edges.select(F.array(src_col, dst_col)).schema[0].dataType.elementType
+    local_min = StructType([StructField("v", id_type), StructField("m", id_type)])
+    round_edges = edges.select(
+        F.col(src_col).cast(id_type).alias("a"), F.col(dst_col).cast(id_type).alias("b")
     )
-    labels = (
-        bidir.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint()
-    )
-    null_label = F.lit(None).cast(labels.schema["label"].dataType)
-    # Every Column of a round is built here, once: a Column is an
-    # unresolved expression, so the rounds reuse them and only the
-    # DataFrame calls repeat — the same plans, without rebuilding each
-    # expression tree over py4j every round.
-    # A request looks up label(key) and sends its value — val, else
-    # label(key) — to node and to label(key). Edge (s, d) requests with
-    # key d and val label(s): d gets its neighbor's label and label(d)
-    # is hooked to it. Node v requests with key label(v) and no val: v
-    # gets label(label(v)), the jump (its second row hands
-    # label(label(v)) to itself, a no-op).
-    edge_on = F.col("src") == F.col("lab.id")
-    edge_requests = [
-        F.col("dst").alias("key"), F.col("dst").alias("node"), F.col("lab.label").alias("val")
-    ]
-    jump_requests = [
-        F.col("label").alias("key"), F.col("id").alias("node"), null_label.alias("val")
-    ]
-    key_on = F.col("key") == F.col("lab.id")
-    sent = F.coalesce("val", "lab.label")
-    deliver = F.explode(
-        F.array(
-            F.struct(F.col("node").alias("id"), sent.alias("label")),
-            F.struct(F.col("lab.label").alias("id"), sent.alias("label")),
-        )
-    ).alias("r")
-    delivered = [F.col("r.id"), F.col("r.label"), null_label.alias("old")]
-    own = [F.col("id"), F.col("label"), F.col("label").alias("old")]
-    node_id = F.col("id")
-    merge = [F.min("label").alias("label"), F.max("old").alias("old")]
-    changed_count = F.count_if(F.col("label") != F.col("old")).alias("changed")
-    id_label = [F.col("id"), F.col("label")]
-    changed = 0
+    conflicts = 0
     for _ in range(max_iter):
-        lab = labels.alias("lab")
-        requests = (
-            bidir.join(lab, edge_on)
-            .select(*edge_requests)
-            .unionByName(labels.select(*jump_requests))
-        )
-        received = requests.join(lab, key_on).select(deliver).select(*delivered)
-        merged = (
-            labels.select(*own).unionByName(received).groupBy(node_id).agg(*merge)
-        )
         obs = Observation()
-        labels = (
-            _without_size_estimate(merged)
-            .observe(obs, changed_count)
-            .select(*id_label)
+        centres = (
+            round_edges.select(F.explode(F.array("a", "b")).alias("k"), "a", "b")
+            .hint("rebalance", "k")
+            .select("a", "b")
+            .mapInArrow(local_minima, local_min)
+            .groupBy("v")
+            .agg(F.sort_array(F.collect_set("m")).alias("ms"))
+            .observe(obs, F.count_if(F.size("ms") > 1).alias("conflicts"))
             .localCheckpoint()
         )
-        changed = obs.get["changed"]
-        if changed == 0:
-            break
-    if changed != 0:
-        # no silent caps: returning intermediate labels would split one
-        # duplicate cluster into many groups and downstream keep-one
-        # dedup would silently retain duplicates
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing): it needs O(log diameter) "
-            f"rounds, and max_iter={max_iter} bounds the diameter at about "
-            f"2^{max_iter - 2} — raise max_iter"
+        conflicts = obs.get["conflicts"]
+        if conflicts == 0:
+            return centres.select(F.col("v").alias("id"), F.get("ms", 0).alias("group_id"))
+        round_edges = centres.select(
+            F.explode(F.concat(F.array("v"), F.slice("ms", 2, F.size("ms")))).alias("a"),
+            F.get("ms", 0).alias("b"),
         )
-    return labels.select(F.col("id"), F.col("label").alias("group_id"))
+    # no silent caps: returning intermediate labels would split one
+    # duplicate cluster into many groups and downstream keep-one dedup
+    # would silently retain duplicates
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds "
+        f"({conflicts} nodes still see more than one centre) — raise max_iter"
+    )
 
 
 # ----------------------------------------------------------- n-gram Jaccard

@@ -606,7 +606,7 @@ def embedding_near_dup(
         tagged.filter(F.col("bsz") <= heavy_bucket)
         .groupBy("bucket")
         .agg(F.sort_array(F.collect_list(member)).alias("ms"))
-        .select(F.explode(member_pairs("ms")).alias("pr"))
+        .select(F.explode(member_pairs("ms", "id")).alias("pr"))
         .select(*flat(F.col("pr.a"), F.col("pr.b")))
     )
     heavy_pairs = salted_self_pairs(

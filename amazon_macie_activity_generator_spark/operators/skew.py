@@ -14,8 +14,8 @@ training-data pipelines).
 - ``salted_agg``: two-stage aggregation — partial agg on (key, salt),
   final agg on key. For algebraic aggregates (sum/count/min/max) the
   result is identical; the first stage caps any single reducer's input.
-- ``member_pairs``: every ``i < j`` pair of a sorted member array, as an
-  in-task C(n, 2) explode — the light path of a bucket gather
+- ``member_pairs``: every ``i < j`` pair of distinct ids in a sorted
+  member array, as an in-task C(n, 2) explode — the light path of a bucket gather
   (``sort_array(collect_list(id))`` per key, then ``F.explode``), which
   forms a bucket's pairs with one shuffle and no join.
 - ``salted_self_pairs``: the heavy path — for keys whose member list is
@@ -100,20 +100,23 @@ def salted_agg(
     )
 
 
-def member_pairs(arr: str) -> Column:
-    """``array<struct<a, b>>`` of every ``i < j`` pair of the sorted array
-    column ``arr``: ``[x0, x1, x2]`` gives ``(x0, x1), (x0, x2), (x1, x2)``.
-    Members are scalar ids or structs whose first field is the id, so an
-    id-sorted array yields ``a.id <= b.id`` pairs; callers ``F.explode``
-    the result. A NULL array gives NULL (no rows once exploded).
+def member_pairs(arr: str, id_field: str | None = None) -> Column:
+    """``array<struct<a, b>>`` of every ``i < j`` pair of the id-sorted
+    array column ``arr`` whose ids differ: ``[x0, x1, x2]`` gives
+    ``(x0, x1), (x0, x2), (x1, x2)``. Members are scalar ids, or structs
+    whose id is the field ``id_field``; pairs have ``a.id < b.id``, so a
+    duplicate id never pairs with itself and a NULL id pairs with nothing
+    — the pair set of ``salted_self_pairs``. Callers ``F.explode`` the
+    result. A NULL array gives NULL (no rows once exploded).
 
     Written as SQL text so its lambda variables keep fixed names: a
     Python-lambda higher-order function draws its variable names from a
     per-JVM counter, which would renumber the lambdas of every plan built
     after it in the same session."""
+    x, y = ("x", "y") if id_field is None else (f"x.`{id_field}`", f"y.`{id_field}`")
     return F.expr(
-        f"flatten(transform(`{arr}`, (x, i) -> "
-        f"transform(slice(`{arr}`, i + 2, size(`{arr}`)), y -> struct(x AS a, y AS b))))"
+        f"flatten(transform(`{arr}`, (x, i) -> transform(filter("
+        f"slice(`{arr}`, i + 2, size(`{arr}`)), y -> {y} > {x}), y -> struct(x AS a, y AS b))))"
     )
 
 

@@ -294,10 +294,11 @@ def _make_sql_dedup_groups(rounds: int = 24) -> str:
     jump reaches r_t past a label that is itself r_t away), so a 6-node
     chain needs 4 changing rounds, a 17-node chain 5, and ``rounds=24``
     covers diameter <= 2^23. Other id orders can need more rounds (the
-    jump alone gains little when the min within reach is nearby; the
-    engine's loop adds a hook for them). The per-round cost is one edge join +
-    one self join over the node-sized label table (linear, the same
-    shape the engine's label-propagation loop shuffles). An unconverged
+    jump alone gains little when the min within reach is nearby). The
+    per-round cost is one edge join + one self join over the node-sized
+    label table. The engine does not run this loop: its
+    ``connected_components`` contracts each task's subgraph with an Arrow
+    union-find per round, so the two agree on the result only. An unconverged
     oracle cannot pass silently: the driver value-hashes the full
     result."""
     parts = [

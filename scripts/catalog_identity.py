@@ -49,6 +49,10 @@ MASKS = [
     (r"RDD\[\d+\]", "RDD[N]", "RDD ids (checkpoint and existing-RDD scans)"),
     (r"(file:)?/tmp/[^\s,\]\)]*", "<tmp>", "temp-directory paths"),
     (r"\b([A-Za-z]\w*?)_[0-9a-f]{8}\b", r"\1_<uuid>", "uuid-suffixed memory-sink names"),
+    # PySpark names a Python lambda's variables x_1, x_2, ... from one
+    # per-JVM counter, so a lambda added to one entry renumbers the
+    # lambdas of every entry built after it in the same session
+    (r"\b(lambda \w+?)_\d+(?=#N)", r"\1_N", "counter-numbered lambda variables"),
 ]
 
 
@@ -56,14 +60,18 @@ def _sha(text: str) -> str:
     return hashlib.sha256(text.encode()).hexdigest()[:16]
 
 
+def mask(text: str) -> str:
+    """``text`` with every ``MASKS`` pattern replaced, in order."""
+    for pattern, repl, _what in MASKS:
+        text = re.sub(pattern, repl, text)
+    return text
+
+
 def masked_plan(df, checkout: str) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain(mode="formatted")
-    text = buf.getvalue().replace(checkout, "<checkout>")
-    for pattern, repl, _what in MASKS:
-        text = re.sub(pattern, repl, text)
-    return text
+    return mask(buf.getvalue().replace(checkout, "<checkout>"))
 
 
 def rows_sha(pdf) -> str:

@@ -45,11 +45,12 @@ _EAGER_CAPS = {
     "streaming_left_join": 6,
     "streaming_append_windows": 6,
     "sessionize_stateful": 8,
-    # connected-components convergence loops: localCheckpoint
-    # materialization per round (data-dependent, O(log diameter) round
-    # count); 19-21 measured at sf0.001, 32-33 with one round per hop
-    "dedup_groups": 26,
-    "dedup_keep_best": 26,
+    # connected-components contraction rounds: one localCheckpoint per
+    # round (data-dependent round count); 7 and 8 measured at sf0.001 in
+    # each of six builds, 18-21 with the pointer-jumping join loop and
+    # 32-33 with one round per hop
+    "dedup_groups": 9,
+    "dedup_keep_best": 10,
     # driver-side model state embedded as plan literals: IVF centroids,
     # auto-planes occupancy count, k-means Lloyd iterations
     "embedding_near_dup": 16,

@@ -3,7 +3,9 @@ text heuristics, sessionization properties, multimodal plumbing."""
 
 from __future__ import annotations
 
+import contextlib
 import random
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -251,6 +253,51 @@ def _union_find_groups(pairs):
     return {x: find(x) for x in parent}
 
 
+@contextlib.contextmanager
+def _scoped_conf(spark, conf):
+    """Set session ``conf`` for the ``with`` body, then restore it."""
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _spread(partitions):
+    """Rounds on ``partitions`` shuffle partitions that AQE may not merge:
+    the neighbourhoods of one graph land in different tasks."""
+    return {
+        "spark.sql.shuffle.partitions": str(partitions),
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+
+
+@contextlib.contextmanager
+def _rounds(df_type):
+    """Per contraction round (one ``localCheckpoint`` each): the seconds
+    spent planning it and the size of its physical plan in lines."""
+    seen = []
+    checkpoint = df_type.localCheckpoint
+
+    def timed(self, *args, **kwargs):
+        t0 = time.perf_counter()
+        plan = self._jdf.queryExecution().executedPlan().toString()
+        seen.append((time.perf_counter() - t0, len(plan.splitlines())))
+        return checkpoint(self, *args, **kwargs)
+
+    df_type.localCheckpoint = timed
+    try:
+        yield seen
+    finally:
+        df_type.localCheckpoint = checkpoint
+
+
 def test_connected_components_small_graph(spark):
     from amazon_macie_activity_generator_spark.operators.dedup import connected_components
 
@@ -266,28 +313,80 @@ def test_connected_components_small_graph(spark):
         "self_loop": [(30, 30), (31, 31), (31, 32)],
         "empty": [],
     }
-    for name, pairs in graphs.items():
-        edges = spark.createDataFrame(pairs, "id_a long, id_b long")
-        got = {r.id: r.group_id for r in connected_components(edges).collect()}
-        assert got == _union_find_groups(pairs), name
+    # coalesced (the session default: a small graph is one task), then
+    # spread over 1, 4 and 16 tasks per round
+    for conf in ({}, _spread(1), _spread(4), _spread(16)):
+        with _scoped_conf(spark, conf):
+            for name, pairs in graphs.items():
+                edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+                got = {r.id: r.group_id for r in connected_components(edges).collect()}
+                assert got == _union_find_groups(pairs), (name, conf)
     assert _union_find_groups(graphs["two_clusters"]) == {1: 1, 2: 1, 3: 1, 9: 1, 5: 5, 7: 5}
 
 
+def test_connected_components_keeps_null_ends_and_id_types(spark):
+    # pinned to the pointer-jumping loop's output: a NULL end joins
+    # nothing and the NULL id is its own (NULL, NULL) row; int and
+    # string ids keep their type, strings order as Spark orders them
+    from amazon_macie_activity_generator_spark.operators.dedup import connected_components
+
+    cases = [
+        ("long", [(1, None), (None, 2), (2, 3), (None, None), (7, None)],
+         [(1, 1), (2, 2), (3, 2), (7, 7), (None, None)]),
+        ("int", [(40, 17), (17, 93), (8, 61), (5, None)],
+         [(17, 17), (40, 17), (5, 5), (61, 8), (8, 8), (93, 17), (None, None)]),
+        ("string", [("b", "a"), ("c", "b"), ("x", "y"), ("B", "b"), ("é", "z"), (None, "q")],
+         [("B", "B"), ("a", "B"), ("b", "B"), ("c", "B"), ("q", "q"), ("x", "x"),
+          ("y", "x"), ("z", "z"), ("é", "z"), (None, None)]),
+    ]
+    for conf in ({}, _spread(4)):
+        with _scoped_conf(spark, conf):
+            for typ, pairs, want in cases:
+                got = connected_components(
+                    spark.createDataFrame(pairs, f"id_a {typ}, id_b {typ}"))
+                assert got.schema.simpleString() == (
+                    f"struct<id:{typ},group_id:{typ}>".replace("long", "bigint"))
+                assert sorted(map(tuple, got.collect()), key=str) == want, (typ, conf)
+
+
+def test_connected_components_splits_a_hub(spark):
+    # a 2,000-leaf star whose hub is not its min: with a tiny advisory
+    # size, rebalance splits the hub's partition by map output, so no
+    # task sees the whole neighbourhood; the rounds still resolve it
+    from amazon_macie_activity_generator_spark.operators.dedup import connected_components
+
+    star = spark.createDataFrame(
+        [(500, leaf) for leaf in range(2000) if leaf != 500], "id_a long, id_b long"
+    ).repartition(8)
+    with _scoped_conf(spark, {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k"}):
+        keyed = star.select(F.explode(F.array("id_a", "id_b")).alias("k"), "id_a", "id_b")
+        hub_tasks = (
+            keyed.hint("rebalance", "k")
+            .select("k", F.spark_partition_id().alias("p"))
+            .filter("k = 500")
+            .select("p")
+            .distinct()
+            .count()
+        )
+        assert hub_tasks > 1
+        with _rounds(type(star)) as rounds:
+            got = connected_components(star).groupBy("group_id").count().collect()
+    assert [(r.group_id, r["count"]) for r in got] == [(0, 2000)]
+    assert len(rounds) >= 2
+
+
 def test_connected_components_log_rounds_on_16_node_chain(spark):
-    # ascending ids: ceil(log2 15) + 2 = 6 rounds; one round per hop
-    # would need 16
+    # the coalesced 16-node chain is one task, so round 1 resolves it
     from amazon_macie_activity_generator_spark.operators.dedup import connected_components
 
     chain = spark.createDataFrame([(i, i + 1) for i in range(15)], "id_a long, id_b long")
-    got = {r.id: r.group_id for r in connected_components(chain, max_iter=6).collect()}
+    got = {r.id: r.group_id for r in connected_components(chain, max_iter=1).collect()}
     assert got == {i: 0 for i in range(16)}
 
 
 @pytest.mark.parametrize("order", ["ascending", "shuffled"])
 def test_connected_components_converges_on_10k_node_chain(spark, order):
-    # default max_iter=25: ascending ids take 16 rounds; shuffled ids
-    # take about 20 and need the hook (label jumps alone take hundreds of
-    # rounds) and a planner that does not slow down round after round
+    # default max_iter=25, default (coalescing) conf: 6 rounds either way
     from amazon_macie_activity_generator_spark.operators.dedup import connected_components
 
     ids = list(range(10_000))
@@ -298,19 +397,39 @@ def test_connected_components_converges_on_10k_node_chain(spark, order):
     assert [(r.group_id, r["count"]) for r in got] == [(0, 10_000)]
 
 
+def test_connected_components_rounds_on_spread_10k_node_chain(spark):
+    # 16 tasks per round, none merged: the shuffled chain takes 9 rounds
+    # (the pointer-jumping join loop took about 20), and every round after
+    # the first plans the same plan in about the same time — no join, so
+    # no size estimate compounds round over round
+    from amazon_macie_activity_generator_spark.operators.dedup import connected_components
+
+    ids = list(range(10_000))
+    random.Random(0).shuffle(ids)
+    chain = spark.createDataFrame(list(zip(ids, ids[1:])), "id_a long, id_b long")
+    with _scoped_conf(spark, _spread(16)), _rounds(type(chain)) as rounds:
+        got = connected_components(chain).groupBy("group_id").count().collect()
+    assert [(r.group_id, r["count"]) for r in got] == [(0, 10_000)]
+    assert 2 <= len(rounds) <= 9
+    plan_s, plan_lines = zip(*rounds[1:])
+    assert len(set(plan_lines)) == 1
+    assert max(plan_s) < 1.0
+
+
 def test_connected_components_raises_on_non_convergence(spark):
-    # a 6-node chain has diameter 5; max_iter=2 cannot converge and
-    # returning intermediate labels would split one cluster into many —
-    # the operator must fail loud, not cap silently
+    # one round over 16 unmerged tasks cannot resolve a 100-node chain:
+    # each task holds only part of it, so nodes see more than one centre;
+    # returning those labels would split one cluster into many — the
+    # operator must fail loud, not cap silently
     import pytest as _pytest
 
     from amazon_macie_activity_generator_spark.operators.dedup import connected_components
 
     chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(5)], "id_a long, id_b long"
+        [(i, i + 1) for i in range(99)], "id_a long, id_b long"
     )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=2)
+    with _scoped_conf(spark, _spread(16)), _pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(chain, max_iter=1)
 
 
 def test_salted_join_rejects_small_side_preserving_hows(spark):

@@ -84,7 +84,7 @@ def test_member_pairs_matches_combinations(spark):
 def test_member_pairs_carries_struct_members(spark):
     df = spark.createDataFrame([([(1, "x"), (4, "y"), (6, "z")],)],
                                "ms array<struct<id: long, tag: string>>")
-    pairs = df.select(F.explode(member_pairs("ms")).alias("pr")).select(
+    pairs = df.select(F.explode(member_pairs("ms", "id")).alias("pr")).select(
         "pr.a.id", "pr.a.tag", "pr.b.id", "pr.b.tag"
     )
     assert [tuple(r) for r in pairs.collect()] == [
@@ -130,3 +130,29 @@ def test_salted_self_pairs_orders_struct_members_by_id(spark):
         for a, b in itertools.combinations(ids, 2)
     )
     assert got == plain
+
+
+def test_light_path_equals_salted_path_on_duplicate_ids(spark):
+    # ids 1, 1, 2 in one bucket: the gather-and-explode path and the
+    # salted self-join give the same pairs, and 1 never pairs with itself
+    rows = spark.createDataFrame(
+        [(0, 7, 1, "x"), (0, 7, 1, "y"), (0, 7, 2, "z")], "band int, bh long, id long, tag string"
+    )
+    gathered = rows.groupBy("band", "bh").agg(
+        F.sort_array(F.collect_list("id")).alias("ids"),
+        F.sort_array(F.collect_list(F.struct("id", "tag"))).alias("ms"),
+    )
+    light = gathered.select(F.explode(member_pairs("ids")).alias("pr")).select("pr.a", "pr.b")
+    salted = salted_self_pairs(rows, ["band", "bh"], "id").select("a", "b")
+    assert sorted(map(tuple, light.collect())) == sorted(map(tuple, salted.collect())) == [
+        (1, 2), (1, 2),
+    ]
+    light_m = gathered.select(F.explode(member_pairs("ms", "id")).alias("pr")).select(
+        "pr.a.id", "pr.a.tag", "pr.b.id", "pr.b.tag"
+    )
+    salted_m = salted_self_pairs(
+        rows.select("band", "bh", F.struct("id", "tag").alias("m")), ["band", "bh"], "m"
+    ).select("a.id", "a.tag", "b.id", "b.tag")
+    assert sorted(map(tuple, light_m.collect())) == sorted(map(tuple, salted_m.collect())) == [
+        (1, "x", 2, "z"), (1, "y", 2, "z"),
+    ]
