@@ -93,6 +93,23 @@ def attach_series_stats(
     return df.join(F.broadcast(stats), on=by, how="left")
 
 
+def anomaly_window(spec: dict, n: int) -> tuple[int, int, int, int, int] | None:
+    """``(start, end, width, stride, counts)`` of ``spec`` over ``n``
+    slots, or None when it selects nothing (counts <= 0 or an empty
+    clamped range). Both ends clamp into [0, n-1]: an unclamped negative
+    start would waste hash draws on slots that cannot exist (under-
+    injecting) and shift the stride anchor off-grid. ``stride`` =
+    max(width // counts, 1) spaces the first ``counts`` slots of stride
+    mode evenly."""
+    start = max(0, min(int(spec.get("start", 0)), n - 1))
+    end = max(0, min(int(spec.get("end", n - 1)), n - 1))
+    counts = int(spec.get("counts", 0))
+    if counts <= 0 or start > n - 1 or end < start:
+        return None
+    width = end - start + 1
+    return start, end, width, max(width // counts, 1), counts
+
+
 def anomaly_hit_expr(
     spec: dict,
     n_points: int,
@@ -103,20 +120,14 @@ def anomaly_hit_expr(
 ) -> Column | None:
     """Predicate: is slot ``t`` an anomaly slot for this spec? None when
     the spec selects nothing (counts<=0 / empty clamped range)."""
-    t = F.col(t_col)
-    # clamp BOTH ends into [0, n_points-1]: an unclamped negative start
-    # would waste hash draws on slots that cannot exist (under-injecting)
-    # and shift the stride anchor off-grid
-    start = max(0, min(int(spec.get("start", 0)), n_points - 1))
-    end = max(0, min(int(spec.get("end", n_points - 1)), n_points - 1))
-    counts = int(spec.get("counts", 0))
-    if counts <= 0 or start > n_points - 1 or end < start:
+    window = anomaly_window(spec, n_points)
+    if window is None:
         return None
-    width = end - start + 1
+    start, end, width, stride, counts = window
+    t = F.col(t_col)
 
     if mode == "stride":
         # deterministic: evenly strided, first `counts` slots in range
-        stride = max(width // counts, 1)
         return (
             (t >= F.lit(start)) & (t <= F.lit(end))
             & (F.pmod(t - F.lit(start), F.lit(stride)) == 0)

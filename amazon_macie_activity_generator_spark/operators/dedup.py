@@ -5,17 +5,18 @@ Four tiers, cheapest-first, all shuffle-disciplined for 100 TB:
 - exact: hash-groupBy on the full text (one shuffle on a hashed key;
   canonical doc = min id, map-side combinable).
 - MinHash + LSH: shingle -> per-shingle hashes -> column-expression
-  minhash signature -> banded bucket gather. Candidate generation never
-  compares all pairs: the only shuffle is groupBy(band, band_hash),
-  within-bucket pairs explode in-task over each bucket's sorted member
-  list (``skew.member_pairs``; buckets past 512 members take
-  ``skew.salted_self_pairs``), and candidates are verified with exact
-  shingle Jaccard (``_verified_jaccard``).
+  minhash signature -> banded bucket table. Both hash families (xxhash64
+  and the md5 oracle bridge) share one front end,
+  ``_minhash_base_and_bands``. Candidate generation never compares all
+  pairs: bucket pairs form through ``skew.bucket_pairs`` (members
+  counted per (band, band_hash), buckets up to 512 gathered and
+  exploded in-task, larger ones salted), and candidates are verified
+  with exact shingle Jaccard (``_verified_jaccard``).
 - SimHash: 64-bit signature as a zero-shuffle map-side projection
   (JVM token hashing + vectorized Arrow bit-vote fold); near-dup =
   small Hamming distance, banded by 16-bit chunks (pigeonhole:
   distance<=3 guarantees one of 4 chunks matches exactly); candidates
-  form through the same bucket gather as MinHash.
+  form through the same bucket pairs as MinHash.
 - n-gram Jaccard: exact set similarity on word n-grams, as an
   inverted-index join keyed on the gram (the verifier for the LSH
   tiers, or standalone with blocking).
@@ -27,6 +28,8 @@ simhash vote fold, connected components' per-task union-find).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -35,10 +38,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from amazon_macie_activity_generator_spark.operators.skew import (
-    member_pairs,
-    salted_self_pairs,
-)
+from amazon_macie_activity_generator_spark.operators.skew import bucket_pairs
 
 # Java regex \s is [ \t\n\x0B\f\r]; RE2 (DuckDB's regex engine) \s
 # OMITS \x0B (vertical tab), so the engine defaults silently diverge on
@@ -153,64 +153,18 @@ def minhash_signature(text: Column, num_hashes: int = 64, shingle_k: int = 3) ->
     return F.element_at(sig, 1)
 
 
-def minhash_bands(sig: Column, bands: int, rows: int) -> Column:
-    """array<struct<band:int, bh:long>> — one hash per band of `rows`
-    signature entries (Leskovec et al., MMDS ch.3 banding)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band"),
-            F.xxhash64(F.slice(sig, b * rows + 1, rows), b).alias("bh"),
-        ),
-    )
-
-
 def _banded_self_pairs(banded: DataFrame, heavy_bucket: int = 512) -> DataFrame:
-    """Candidate pairs (id_a < id_b) from an (id, band, bh) bucket table,
-    with the giant-bucket skew guard the LSH join needs at scale.
-
-    r13 (guide §2.4): bucket membership is gathered with ONE
-    (band, bh)-keyed aggregation — ``sort_array(collect_list(id))`` —
-    and pairs explode in-task over the sorted list
-    (``operators/skew.member_pairs``). The previous form tagged bucket
-    sizes with a partitioned window and SELF-JOINED the banded table on
-    (band, bh): one shuffle for the window plus a re-shuffle of each join
-    side. This form shuffles the banded table once, with map-side partial
-    aggregation, and forms the same pairs with no join at all. In-task
-    fan-out is bounded by C(``heavy_bucket``, 2) (~131k pairs at the 512
-    default, trivially fine); buckets larger than ``heavy_bucket``
-    (boilerplate / exact-duplicate docs — a bucket of d identical docs
-    forms d^2/2 pairs) are re-exploded to rows and go through
-    ``operators/skew.salted_self_pairs``, which forms pairs per
-    (band, bh, salt_a, salt_b) cell. Pair set identical to the plain
-    self-join (pinned by tests/test_ext3.py::
+    """Candidate pairs (id_a < id_b), each once, from an (id, band, bh)
+    bucket table: ``skew.bucket_pairs`` keyed on (band, bh), so buckets
+    past ``heavy_bucket`` members (boilerplate or exact-duplicate docs,
+    d^2/2 pairs each) take the salted self-join and no gather holds more
+    than ``heavy_bucket`` ids. Pair set identical to the plain self-join
+    (pinned by tests/test_ext3.py::
     test_banded_self_pairs_salted_branch_equivalence)."""
-    from amazon_macie_activity_generator_spark.cache import scoped_persist
-
-    # Persist barrier: the grouped bucket table feeds the light pair
-    # explode and both salted heavy sides (uncached, each consumer would
-    # recompute banded and the aggregation). Lifecycle: tracked in
-    # cache.py's registry, newest 4 kept; release_all()/clearCache()
-    # drops the rest in a long-lived service.
-    grouped = scoped_persist(
-        banded.groupBy("band", "bh").agg(
-            F.sort_array(F.collect_list("id")).alias("ids")
-        ),
-        "_banded_self_pairs",
-        keep=4,
+    pairs = bucket_pairs(banded, ["band", "bh"], "id", heavy_bucket)
+    return pairs.select(F.col("a").alias("id_a"), F.col("b").alias("id_b")).dropDuplicates(
+        ["id_a", "id_b"]
     )
-    light_pairs = (
-        grouped.filter(F.size("ids") <= heavy_bucket)
-        .select(F.explode(member_pairs("ids")).alias("pr"))
-        .select(F.col("pr.a").alias("id_a"), F.col("pr.b").alias("id_b"))
-    )
-    heavy = grouped.filter(F.size("ids") > heavy_bucket).select(
-        "band", "bh", F.explode("ids").alias("id")
-    )
-    heavy_pairs = salted_self_pairs(heavy, ["band", "bh"], "id").select(
-        F.col("a").alias("id_a"), F.col("b").alias("id_b")
-    )
-    return light_pairs.unionAll(heavy_pairs).dropDuplicates(["id_a", "id_b"])
 
 
 def _jaccard(a: str, b: str) -> Column:
@@ -239,6 +193,53 @@ def _verified_jaccard(
     )
 
 
+def _minhash_base_and_bands(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_k: int,
+    sig: Column,
+    bands: int,
+    rows: int,
+    band_hash: Callable[[Column, Column], Column],
+) -> tuple[DataFrame, DataFrame]:
+    """The MinHash front end of both families: the persisted base
+    (id, shingles, sig), ``sig`` being the family's signature over
+    ``text_col``, and the narrow banded table (id, band, bh), ``bh`` =
+    ``band_hash(rows signature entries, band)`` for each of ``bands``
+    bands (Leskovec et al., MMDS ch. 3 banding).
+
+    The lazy persist is the plan barrier: every caller reads the base
+    from at least two branches (the bucket pairs and the shingle
+    verify), and without the InMemoryRelation Catalyst's CollapseProject
+    inlines the signature into every band slice — a ~100x recomputation
+    (measured 424 s -> ~2 s at sf0.1). Per-partition cache locking keeps
+    concurrent branches from computing a partition twice, and the build
+    stays action-free, so the bench timer sees the real cost."""
+    from amazon_macie_activity_generator_spark.cache import scoped_persist
+
+    base = scoped_persist(
+        df.select(
+            F.col(id_col).alias("id"),
+            word_shingles_expr(F.col(text_col), shingle_k).alias("shingles"),
+            sig.alias("sig"),
+        ),
+        "minhash_base",
+        keep=4,  # incremental dedup holds corpus + batch bases in one plan
+    )
+    band_structs = F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.struct(
+            b.cast("int").alias("band"),
+            band_hash(F.slice(F.col("sig"), b * rows + 1, rows), b).alias("bh"),
+        ),
+    )
+    banded = base.select("id", F.explode(band_structs).alias("b")).select(
+        "id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
+    )
+    return base, banded
+
+
 def dedup_minhash_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -251,43 +252,15 @@ def dedup_minhash_candidates(
     """X2 — candidate near-dup pairs via LSH banding, verified with exact
     shingle Jaccard. Returns (id_a, id_b, jaccard) with id_a < id_b.
 
-    Scale: the self-join is on (band, bh) buckets — skew from giant
+    Scale: candidates form per (band, bh) bucket — skew from giant
     buckets (boilerplate / exact-duplicate docs) is the known hazard;
-    buckets above 512 docs go through the two-sided salted join in
-    ``_banded_self_pairs`` (pair-set-preserving), and AQE skew-join
-    covers residual sort-merge skew.
-    """
-    rows = num_hashes // bands
-    # Materialize (id, shingles, sig) ONCE. Without this barrier Catalyst's
-    # CollapseProject inlines the 64-hash signature expression into every
-    # band slice on both join sides — a ~100x recomputation blowup
-    # (measured: 424s -> ~2s at sf0.1). At cluster scale this table is the
-    # thing you'd write to storage between passes anyway.
-    from amazon_macie_activity_generator_spark.cache import scoped_persist
-
-    base = scoped_persist(
-        df.select(
-            F.col(id_col).alias("id"),
-            word_shingles_expr(F.col(text_col), shingle_k).alias("shingles"),
-            minhash_signature(F.col(text_col), num_hashes, shingle_k).alias("sig"),
-        ),
-        "dedup_minhash_candidates",
-        keep=2,
+    buckets above 512 docs go through the salted self-join in
+    ``_banded_self_pairs`` (pair-set-preserving)."""
+    base, banded = _minhash_base_and_bands(
+        df, text_col, id_col, shingle_k,
+        minhash_signature(F.col(text_col), num_hashes, shingle_k),
+        bands, num_hashes // bands, F.xxhash64,
     )
-    # Lazy persist: the InMemoryRelation is a plan barrier whether or not
-    # it is materialized, so CollapseProject still can't inline the
-    # signature into the join sides, and BlockManager's per-partition
-    # locking keeps concurrent branches from double-computing a cached
-    # partition. Keeping the build action-free means the bench timer sees
-    # the real cost (an eager count() here hid ~3 s at sf0.1 in the
-    # unbenched build phase).
-
-    # narrow banded table: (id, band, bh) — nothing fat crosses the shuffle
-    banded = base.select(
-        "id", F.explode(minhash_bands(F.col("sig"), bands, rows)).alias("b")
-    ).select("id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
-
-    # exact-Jaccard verification only for candidates (small set)
     return _verified_jaccard(_banded_self_pairs(banded), base, jaccard_threshold)
 
 
@@ -324,47 +297,19 @@ def minhash_signature_md5(text: Column, num_hashes: int = 16, shingle_k: int = 3
 
 
 def _md5_base_and_bands(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_k: int,
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int, bands: int, shingle_k: int
 ) -> tuple[DataFrame, DataFrame]:
-    """Shared md5-LSH front end: (persisted base with shingles + signature,
-    exploded band-bucket table). The lazy persist is the plan barrier —
-    every caller reads the base from at least two branches (banded join +
-    shingle verify), and the InMemoryRelation keeps CollapseProject from
-    inlining the md5x16 signature into each; per-partition cache locking
-    keeps concurrent branches from double-computing it at runtime."""
-    rows = num_hashes // bands
-    from amazon_macie_activity_generator_spark.cache import scoped_persist
-
-    # (r13: an Arrow/hashlib twin of the md5 signature was measured here
-    # and REVERTED — the JVM md5 expression chain runs 0.64 vs 0.72 s on
-    # the isolated stage at sf0.1; unlike the simhash nibble-parse fold,
-    # the minhash expression's cost IS the md5 calls, which codegen runs
-    # as fast as hashlib without the Arrow serialization.)
-    base = scoped_persist(
-        df.select(
-            F.col(id_col).alias("id"),
-            word_shingles_expr(F.col(text_col), shingle_k).alias("shingles"),
-            minhash_signature_md5(F.col(text_col), num_hashes, shingle_k).alias("sig"),
-        ),
-        "_md5_base_and_bands",
-        keep=4,  # incremental dedup holds corpus + batch bases in one plan
+    """The MinHash front end with the md5 family: band hash = md5 of the
+    band's digests joined by '|'. (r13: an Arrow/hashlib twin of the md5
+    signature was measured and reverted — the JVM md5 expression chain
+    runs 0.64 vs 0.72 s on the isolated stage at sf0.1; the signature's
+    cost IS the md5 calls, which codegen runs as fast as hashlib without
+    the Arrow serialization.)"""
+    return _minhash_base_and_bands(
+        df, text_col, id_col, shingle_k,
+        minhash_signature_md5(F.col(text_col), num_hashes, shingle_k),
+        bands, num_hashes // bands, lambda part, _b: F.md5(F.concat_ws("|", part)),
     )
-    band_structs = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band"),
-            F.md5(F.concat_ws("|", F.slice(F.col("sig"), b * rows + 1, rows))).alias("bh"),
-        ),
-    )
-    banded = base.select("id", F.explode(band_structs).alias("b")).select(
-        "id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
-    )
-    return base, banded
 
 
 def dedup_minhash_md5_pairs(
@@ -470,26 +415,48 @@ def simhash64(
     return _simhash64_expr(df, text_col, id_col)
 
 
-def _simhash64_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def _vote_fold(md5_tokens: bool):
+    """The 63-bit Charikar vote fold as one vectorised Arrow kernel (a
+    pandas UDF over one array column). Each row is a document's xxhash64
+    token hashes or, with ``md5_tokens``, its tokens, digested here with
+    hashlib (byte-identical to JVM md5): the digest's first 64 bits,
+    MSB-first, become a little-endian uint64, so vote bit b is MSB-first
+    bit b of the digest — the oracle's ``// [8,4,2,1] % 2`` nibble parse.
+
+    Whole-batch fold: every document's hashes are flattened into one
+    contiguous uint64 vector and each bit's ones are segment-summed with
+    ``np.add.reduceat`` — no per-row Python loop, and the per-bit pass
+    keeps peak memory at one vector of total-token length (an N x 63 bit
+    matrix reduced along its rows measured 6x slower). Bit set iff votes
+    = 2*ones - n are STRICTLY > 0, so empty and NULL rows fold to 0."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
-    def vote_fold(hashes: pd.Series) -> pd.Series:
-        # Whole-batch vectorized fold: flatten every doc's hash array into
-        # one contiguous vector and segment-sum the bit counts with
-        # np.add.reduceat — no per-row Python loop, and the per-bit pass
-        # keeps peak memory at one int64 vector of total-token length
-        # (vs. an N x 63 matrix). Measured ~5x over the row-loop numpy
-        # form on the sf0.1 corpus.
-        out = np.zeros(len(hashes), dtype=np.int64)
+    def vote_fold(rows: pd.Series) -> pd.Series:
+        import hashlib
+
+        out = np.zeros(len(rows), dtype=np.int64)
         lens = np.fromiter(
-            (0 if h is None else len(h) for h in hashes), dtype=np.int64, count=len(hashes)
+            (0 if r is None else len(r) for r in rows), dtype=np.int64, count=len(rows)
         )
         nz = lens > 0
         if nz.any():
-            flat = np.concatenate(
-                [np.asarray(h, dtype=np.int64) for h, n in zip(hashes, lens) if n]
-            ).astype(np.uint64)
+            if md5_tokens:
+                digests = np.frombuffer(
+                    b"".join(
+                        hashlib.md5(tok.encode("utf-8")).digest()
+                        for r, n in zip(rows, lens) if n
+                        for tok in r
+                    ),
+                    dtype=np.uint8,
+                ).reshape(-1, 16)
+                flat = np.packbits(
+                    np.unpackbits(digests[:, :8], axis=1), axis=1, bitorder="little"
+                ).view("<u8").ravel()
+            else:
+                flat = np.concatenate(
+                    [np.asarray(r, dtype=np.int64) for r, n in zip(rows, lens) if n]
+                ).astype(np.uint64)
             seg_lens = lens[nz]
             offsets = np.zeros(len(seg_lens), dtype=np.int64)
             np.cumsum(seg_lens[:-1], out=offsets[1:])
@@ -498,13 +465,16 @@ def _simhash64_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
                 ones = np.add.reduceat(
                     (flat >> np.uint64(b)) & np.uint64(1), offsets
                 ).astype(np.int64)
-                # votes = ones - zeros = 2*ones - n; bit set iff votes > 0
                 sig |= (2 * ones > seg_lens).astype(np.uint64) << np.uint64(b)
             out[nz] = sig.astype(np.int64)
         return pd.Series(out)
 
+    return vote_fold
+
+
+def _simhash64_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     hs = F.transform(tokens_expr(F.col(text_col)), lambda tk: F.xxhash64(tk))
-    return df.select(F.col(id_col).alias("id"), vote_fold(hs).alias("simhash"))
+    return df.select(F.col(id_col).alias("id"), _vote_fold(False)(hs).alias("simhash"))
 
 
 def _simhash64_expr(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -548,8 +518,8 @@ def simhash64_md5(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     production scale (the ``minhash_signature_md5`` convention).
 
     The digests come from Python hashlib (byte-identical to JVM md5) and
-    the vote fold runs as the same vectorized Arrow batch kernel as
-    ``_simhash64_arrow``. The ``dedup_simhash_md5`` oracle re-derives the
+    the vote fold is ``_vote_fold``, the Arrow batch kernel
+    ``_simhash64_arrow`` runs. The ``dedup_simhash_md5`` oracle re-derives the
     signatures in DuckDB, and tests/test_extensions.py pins the
     degenerate ones.
 
@@ -560,48 +530,8 @@ def simhash64_md5(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     empty-token AND null-text docs fold to signature 0 in both engines
     (the null coalesce below and the oracle's ``coalesce(sig, 0)`` pin
     the null case)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def md5_vote_fold(tok_lists: pd.Series) -> pd.Series:
-        import hashlib
-
-        # Whole-batch vectorized fold (the _simhash64_arrow structure):
-        # md5-digest every token of the batch into ONE (T, 16) byte
-        # matrix, unpack to bits, and segment-sum per doc with
-        # np.add.reduceat. Hex-nibble bit order == np.unpackbits order:
-        # vote bit b is bit (3 - b%4) of hex nibble b//4, which IS
-        # MSB-first bit b of the digest bytes, so bits[:, :63] maps
-        # 1:1 onto the oracle's [8,4,2,1]-divisor parse.
-        out = np.zeros(len(tok_lists), dtype=np.int64)
-        lens = np.fromiter(
-            (0 if t is None else len(t) for t in tok_lists),
-            dtype=np.int64, count=len(tok_lists),
-        )
-        nz = lens > 0
-        if nz.any():
-            digests = b"".join(
-                hashlib.md5(tok.encode("utf-8")).digest()
-                for toks, n in zip(tok_lists, lens) if n
-                for tok in toks
-            )
-            bits = np.unpackbits(
-                np.frombuffer(digests, dtype=np.uint8).reshape(-1, 16), axis=1
-            )[:, :63]
-            seg_lens = lens[nz]
-            offsets = np.zeros(len(seg_lens), dtype=np.int64)
-            np.cumsum(seg_lens[:-1], out=offsets[1:])
-            ones = np.add.reduceat(bits, offsets, axis=0).astype(np.int64)
-            # votes = ones - zeros = 2*ones - n; bit set iff votes > 0
-            sig = (
-                (2 * ones > seg_lens[:, None]).astype(np.uint64)
-                << np.arange(63, dtype=np.uint64)[None, :]
-            ).sum(axis=1)
-            out[nz] = sig.astype(np.int64)
-        return pd.Series(out)
-
     toks = F.coalesce(tokens_expr(F.col(text_col)), F.array())
-    return df.select(F.col(id_col).alias("id"), md5_vote_fold(toks).alias("simhash"))
+    return df.select(F.col(id_col).alias("id"), _vote_fold(True)(toks).alias("simhash"))
 
 
 def simhash_near_pairs(sig_df: DataFrame, max_hamming: int = 3) -> DataFrame:

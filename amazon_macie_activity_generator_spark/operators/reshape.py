@@ -26,6 +26,10 @@ JSON_OPTS = {"ignoreNullFields": "false"}
 
 SOURCE_NAME = "amazon-macie-activity-generator"  # payload `source`, main.py:824
 
+# payload `timestamp` format, ISO-8601 UTC to the second (R4 envelope,
+# main.py:804-828); both dispatchers format the slot time with it
+TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss'Z'"
+
 
 def pivot_slot_rows(
     df: DataFrame,
@@ -102,9 +106,7 @@ def payload_envelope(
     routing-only keys ``generators``/``client`` (main.py:813-820)."""
     tgt = {k: v for k, v in target.items() if k not in ("generators", "client")}
     tgt_struct = F.struct(*[F.lit(v).alias(k) for k, v in sorted(tgt.items())])
-    ts = timestamp if timestamp is not None else F.date_format(
-        F.current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss'Z'"
-    )
+    ts = timestamp if timestamp is not None else F.date_format(F.current_timestamp(), TS_FORMAT)
     return df.select(
         F.to_json(
             F.struct(

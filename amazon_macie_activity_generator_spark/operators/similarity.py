@@ -16,6 +16,10 @@ Two paths:
   (centroids on the driver, broadcast into the assignment UDF),
   inverted lists keyed by cluster, nprobe probing, exact re-rank.
 
+``embedding_near_dup`` finds near-duplicate pairs with the same SRP
+buckets: pairs form per bucket through ``skew.bucket_pairs`` (the one
+size rule of every LSH bucket table), then an exact cosine filter.
+
 Cosine accumulates in float64 in deterministic index order (matters for
 cross-engine oracle parity).
 """
@@ -27,10 +31,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from amazon_macie_activity_generator_spark.operators.skew import (
-    member_pairs,
-    salted_self_pairs,
-)
+from amazon_macie_activity_generator_spark.operators.skew import bucket_pairs
 
 
 def _dvec(col: Column) -> Column:
@@ -553,12 +554,13 @@ def embedding_near_dup(
       entry pins 8 for its DuckDB twin).
     - Buckets larger than ``heavy_bucket`` (near-identical embedding
       clusters, or an under-planed corpus) go through the two-sided
-      salted self-join ``operators/skew.salted_self_pairs`` — pairs form
+      salted self-join of ``operators/skew.bucket_pairs`` — pairs form
       per (bucket, salt_a, salt_b) cell, so one popular bucket cannot pin
-      its d^2/2 pair formation to a single task.  Pair set is identical
-      to the plain join.  Bucket sizes come from a
-      bucket-keyed aggregate (<= 2^planes rows, broadcast back), never a
-      window shuffle of the vector-carrying rows."""
+      its d^2/2 pair formation to a single task, and no gather holds
+      more than ``heavy_bucket`` members.  Pair set is identical to the
+      plain join.  Bucket sizes come from a count window over the
+      bucket, whose shuffle of the vector-carrying rows the gather
+      reuses."""
     # NULL vectors have no geometry: excluded up front (mirrored as
     # WHERE embedding IS NOT NULL in the oracle). NULL ids are excluded
     # too — pair-set-equivalent to the old l.id < r.id join condition,
@@ -582,37 +584,14 @@ def embedding_near_dup(
         keep=2,
     )
     base.count()  # eager: every downstream branch must read the cache, not race it
-    bsz = base.groupBy("bucket").agg(F.count(F.lit(1)).alias("bsz"))
-    tagged = base.join(F.broadcast(bsz), "bucket")
-    heavy = tagged.filter(F.col("bsz") > heavy_bucket)
-    # r14 (guide §2.4): light-bucket pairs come from ONE bucket-keyed
-    # sort_array(collect_list) gather + the in-task C(n,2) explode
-    # (skew.member_pairs) over the id-sorted member list, instead
-    # of a self-join on bucket — the join shuffled the vector-carrying
-    # rows TWICE (both sides hash(bucket)) and sorted both; the gather
-    # shuffles them once and forms the identical id_a < id_b pair set
-    # in-task. In-task payload is bounded by the bsz tag: only buckets
-    # <= heavy_bucket (4096 default, ~2 MB of 64-dim members) gather;
-    # bigger buckets (near-identical clusters) keep the two-sided salted
-    # join (skew.salted_self_pairs), so no aggregation buffer ever holds
-    # an unbounded member array.
-    member = F.struct("id", "v", "nrm").alias("m")
-
-    def flat(a: Column, b: Column) -> list[Column]:
-        return [a["id"].alias("id_a"), b["id"].alias("id_b"), a["v"].alias("va"),
-                b["v"].alias("vb"), a["nrm"].alias("na"), b["nrm"].alias("nb")]
-
-    light_pairs = (
-        tagged.filter(F.col("bsz") <= heavy_bucket)
-        .groupBy("bucket")
-        .agg(F.sort_array(F.collect_list(member)).alias("ms"))
-        .select(F.explode(member_pairs("ms", "id")).alias("pr"))
-        .select(*flat(F.col("pr.a"), F.col("pr.b")))
+    # pairs form per SRP bucket under skew.bucket_pairs' size rule; the
+    # member struct carries each side's vector and norm to the verify
+    # stage, so the pairs need no join back to the base
+    members = base.select("bucket", F.struct("id", "v", "nrm").alias("m"))
+    pairs = bucket_pairs(members, ["bucket"], "m", heavy_bucket).select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), F.col("a.v").alias("va"),
+        F.col("b.v").alias("vb"), F.col("a.nrm").alias("na"), F.col("b.nrm").alias("nb"),
     )
-    heavy_pairs = salted_self_pairs(
-        heavy.select("bucket", member), ["bucket"], "m"
-    ).select(*flat(F.col("a"), F.col("b")))
-    pairs = light_pairs.unionAll(heavy_pairs)
     # Verify stage: JVM-side left-fold dot. Measured against the Arrow
     # pair-dot alternative (pair_dot_arrow) on an 8x corpus probe: the
     # expression form won 4.0 s vs 9.6 s end-to-end — at dim=64 moving

@@ -22,14 +22,19 @@ training-data pipelines).
   past the caller's size bound, a two-sided salted self-join that splits
   each key into ``PAIR_SALTS`` hash cells, so one hot key's d^2/2 pairs
   spread over PAIR_SALTS^2 join cells instead of landing in one task.
+- ``bucket_pairs``: both paths behind one size rule — count each key's
+  members (a window over the key), gather and explode the keys with at
+  most ``heavy`` members, salt the rest. Every LSH bucket table
+  (MinHash, SimHash, SRP) forms its candidate pairs with it.
 
-Each caller keeps its own gather, size bound and persist; only the pair
-formation lives here.
+Gathers that are not bucket tables (a capped posting list, a capped
+source set, the TPC-H order pairs) bound their own lists and call the
+two pair formers directly.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -146,3 +151,38 @@ def salted_self_pairs(rows: DataFrame, keys: list[str], member: str) -> DataFram
         .filter(member_id("a") < member_id("b"))
         .select(*keys, "a", "b")
     )
+
+
+def bucket_pairs(rows: DataFrame, keys: list[str], member: str, heavy: int) -> DataFrame:
+    """``(keys..., a, b)`` with ``a < b``: one row per key and pair of
+    members of ``rows`` that share it — the rows of
+    ``rows.join(rows, keys).filter(a < b)``, formed under one size rule.
+
+    Each key's members are counted first, by a count window over
+    ``keys``: one shuffle of the rows by key, which the gather's
+    ``groupBy`` then reuses, and no size table to join back or
+    broadcast. (A map-side-combined count joined back measured slower:
+    its size table was broadcast once per branch, 21 jobs per MinHash
+    entry where the window takes 15, sf0.1 on 4 cores.) A key's rows
+    meet in one task for the count, which holds them in the window's
+    spillable buffer — linear in the key's size; its d^2/2 pairs are
+    what the salting spreads.
+    Keys with at most ``heavy`` members gather
+    ``sort_array(collect_list(member))`` and pair in-task with
+    ``member_pairs``; no gather buffer holds more than ``heavy``
+    members. Larger keys go to ``salted_self_pairs``. ``member`` is a
+    scalar id column or a struct column whose first field is the id;
+    NULL keys and NULL ids form no pairs."""
+    dtype = rows.schema[member].dataType
+    id_field = dtype.fields[0].name if isinstance(dtype, StructType) else None
+    size = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    tagged = rows.dropna(subset=keys).select(*keys, member, size.alias("__size"))
+    light = (
+        tagged.filter(F.col("__size") <= heavy)
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(member)).alias("__ms"))
+        .select(*keys, F.explode(member_pairs("__ms", id_field)).alias("__pr"))
+        .select(*keys, F.col("__pr.a").alias("a"), F.col("__pr.b").alias("b"))
+    )
+    heavy_rows = tagged.filter(F.col("__size") > heavy).drop("__size")
+    return light.unionAll(salted_self_pairs(heavy_rows, keys, member))

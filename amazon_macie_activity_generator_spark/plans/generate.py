@@ -35,7 +35,11 @@ from amazon_macie_activity_generator_spark.config import Blueprint, GeneratorSpe
 from amazon_macie_activity_generator_spark.formula import eval_recurrence
 from amazon_macie_activity_generator_spark.functions.rng import hash_gauss, hash_int
 from amazon_macie_activity_generator_spark.operators import generators as G
-from amazon_macie_activity_generator_spark.operators.anomalies import anomaly_value_expr, series_stat_aggs
+from amazon_macie_activity_generator_spark.operators.anomalies import (
+    anomaly_value_expr,
+    anomaly_window,
+    series_stat_aggs,
+)
 from amazon_macie_activity_generator_spark.operators.noise import noise_enabled
 from amazon_macie_activity_generator_spark.operators.scaling import scale_expr
 from amazon_macie_activity_generator_spark.sources.real_series import real_values
@@ -141,22 +145,18 @@ def _anomaly_layer(
     formulas need are a window over the CURRENT (post-previous-layer)
     series — main.py:628 recomputes int(np.max(datapoints)) inside the
     per-spec loop, so multi-spec magnitudes compound ((max+1)^2 + 1)^2.
-    Clamps and draws mirror ``anomaly_hit_expr`` exactly."""
+    Clamps and strides come from ``anomaly_window``; the draws mirror
+    ``anomaly_hit_expr`` exactly."""
     spec_rows, formulas = [], {}  # formula -> its index in this layer
     for g in gens:
         if len(g.anomalies) <= layer:
             continue
         spec = g.anomalies[layer]
-        n = g.num_points
-        start = max(0, min(int(spec.get("start", 0)), n - 1))
-        end = max(0, min(int(spec.get("end", n - 1)), n - 1))
-        counts = int(spec.get("counts", 0))
-        if counts <= 0 or start > n - 1 or end < start:
+        window = anomaly_window(spec, g.num_points)
+        if window is None:
             continue
-        width = end - start + 1
-        stride = max(width // counts, 1)
         k = formulas.setdefault(spec.get("formula"), len(formulas))
-        spec_rows.append((g.id, start, end, width, stride, counts, k))
+        spec_rows.append((g.id, *window, k))
     if not spec_rows:
         return df
 

@@ -35,6 +35,7 @@ from pyspark.util import inheritable_thread_target
 
 from amazon_macie_activity_generator_spark.config import Blueprint, TargetSpec
 from amazon_macie_activity_generator_spark.operators.reshape import (
+    TS_FORMAT,
     payload_envelope,
     slot_row_json,
 )
@@ -62,12 +63,12 @@ def select_target_series(fact: DataFrame, target: TargetSpec) -> DataFrame:
     return fact if not gens else fact.filter(F.col("series_id").isin(gens))
 
 
-def dispatch_group(fact: DataFrame, target: TargetSpec, ts_format: str = "yyyy-MM-dd'T'HH:mm:ss'Z'") -> DataFrame:
+def dispatch_group(fact: DataFrame, target: TargetSpec) -> DataFrame:
     """R2 path (group_datapoints=true targets, main.py:784-802): all of a
     slot's selected series in ONE payload. The slot timestamp rides along
     through the groupBy (first() of a per-slot-constant column — no join)."""
     sel = select_target_series(fact, target).withColumn(
-        "tss", F.date_format("ts", ts_format)
+        "tss", F.date_format("ts", TS_FORMAT)
     )
     dp = F.struct(F.col("series_id").alias("generator_id"), F.col("value").alias("value"))
     grouped = sel.groupBy("t").agg(
@@ -88,7 +89,7 @@ def dispatch_single(fact: DataFrame, target: TargetSpec) -> DataFrame:
     )
     one = sliced.select(
         "t",
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("tss"),
+        F.date_format("ts", TS_FORMAT).alias("tss"),
         F.array(
             F.struct(
                 F.col("series_id").alias("generator_id"),

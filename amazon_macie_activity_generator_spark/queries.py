@@ -47,7 +47,7 @@ from amazon_macie_activity_generator_spark.formula import translate_formula
 from amazon_macie_activity_generator_spark.functions.rng import counter_offset, counter_unit
 from amazon_macie_activity_generator_spark.operators import generators as G
 from amazon_macie_activity_generator_spark.operators.align import zero_fill
-from amazon_macie_activity_generator_spark.operators.anomalies import apply_anomalies
+from amazon_macie_activity_generator_spark.operators.anomalies import anomaly_window, apply_anomalies
 from amazon_macie_activity_generator_spark.operators.reshape import (
     JSON_OPTS,
     group_datapoints,
@@ -446,12 +446,8 @@ def flagship_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_flagship() -> str:
     """The composed oracle, generated from the SAME spec constants the
     Spark side uses (one source of truth), with apply_anomalies'
-    clamp/stride rules mirrored: both ends clamped into [0, n_points-1],
-    stride = max(width // counts, 1)."""
-    start = max(0, min(int(_FLAGSHIP_ANOM["start"]), _FLAGSHIP_N - 1))
-    end = max(0, min(int(_FLAGSHIP_ANOM["end"]), _FLAGSHIP_N - 1))
-    counts = int(_FLAGSHIP_ANOM["counts"])
-    stride = max((end - start + 1) // counts, 1)
+    clamp/stride rules taken from ``anomaly_window``."""
+    start, end, _width, stride, counts = anomaly_window(_FLAGSHIP_ANOM, _FLAGSHIP_N)
     pivot_cols = ",\n".join(
         f"       CAST(COALESCE(max(CASE WHEN series_id = '{sid}' THEN value END), 0) AS DOUBLE) AS {sid}"
         for sid in EVENT_TYPES

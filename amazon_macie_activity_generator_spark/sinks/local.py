@@ -19,7 +19,7 @@ import os
 from collections.abc import Iterator
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from amazon_macie_activity_generator_spark.functions.fake import (
@@ -80,6 +80,27 @@ def write_payload_lines(payloads: DataFrame, path: str, payload_col: str = "payl
     ).text(path)
 
 
+# ------------------------------------------------- K5/K6 activity rows
+
+def _activities(
+    df: DataFrame, value_col: str, key_cols: tuple[str, ...]
+) -> tuple[DataFrame, Column]:
+    """One row per unit of value, ``(key_cols..., act_idx)`` with act_idx
+    1..int(value), and the activity's xxhash64 key — the reference's
+    per-unit loop (``range(value)``, main.py:1053-1057 and 977-1020).
+
+    Reference parity: ``range(value)`` emits NOTHING for value < 1
+    (T9 zero skip, main.py:1031-1034) — but Spark's sequence(1, v) steps
+    DOWNWARD when v < 1 (sequence(1, -5) is [1..-5]), so the guard must
+    be v >= 1 on the truncated int, not value != 0."""
+    n_acts = F.col(value_col).cast("int")
+    acts = df.filter(n_acts >= 1).select(
+        *key_cols,
+        F.explode(F.sequence(F.lit(1), n_acts)).alias("act_idx"),
+    )
+    return acts, F.xxhash64(*[F.col(c) for c in key_cols], F.col("act_idx"))
+
+
 # ------------------------------------------------- K5 S3 GET activities
 
 def s3_get_activity_rows(
@@ -95,16 +116,7 @@ def s3_get_activity_rows(
     up to 1,000 listed real keys; when fewer exist than needed, synthesize
     fake uuid keys for the shortfall — errors on fake keys are swallowed
     by design (touch_bucket_object, main.py:970-975)."""
-    # reference parity: range(value) emits NOTHING for value < 1 — but
-    # Spark's sequence(1, v) steps DOWNWARD when v < 1 (sequence(1, -5)
-    # is [1..-5]), so the guard must be v >= 1 on the truncated int,
-    # not value != 0
-    n_acts = F.col(value_col).cast("int")
-    acts = df.filter(n_acts >= 1).select(  # T9 zero skip, main.py:1031-1034
-        *key_cols,
-        F.explode(F.sequence(F.lit(1), n_acts)).alias("act_idx"),
-    )
-    key = F.xxhash64(*[F.col(c) for c in key_cols], F.col("act_idx"))
+    acts, key = _activities(df, value_col, key_cols)
     if real_keys:
         pool = real_keys[:1000]  # S3_LIST_OBJECTS_MAX, main.py:57
         chosen = choice(key, "getkey", pool)
@@ -127,12 +139,7 @@ def s3_put_activity_rows(
     content-type/ACL from the configured lists."""
     content_types = target.get("content_types", [target.get("content_type", "text/plain")])
     acls = target.get("acls", [target.get("acl", "private")])
-    n_acts = F.col(value_col).cast("int")
-    acts = df.filter(n_acts >= 1).select(  # T9 + the v>=1 guard (see K5 above)
-        *key_cols,
-        F.explode(F.sequence(F.lit(1), n_acts)).alias("act_idx"),
-    )
-    key = F.xxhash64(*[F.col(c) for c in key_cols], F.col("act_idx"))
+    acts, key = _activities(df, value_col, key_cols)
     doc = fake_document(
         key,
         fake_types=target.get("fake_types"),

@@ -1,8 +1,10 @@
 """The pair former in ``operators/skew.py``: ``member_pairs`` (the in-task
-C(n, 2) explode over a sorted member array) and ``salted_self_pairs``
-(the salted self-join for keys past a gather's size bound), checked
-against their plain definitions, plus a source guard that keeps them the
-package's only copies of either construction."""
+C(n, 2) explode over a sorted member array), ``salted_self_pairs``
+(the salted self-join for keys past a gather's size bound) and
+``bucket_pairs`` (both behind one size rule), checked against their
+plain definitions, plus source guards that keep them the package's only
+copies of either construction and ``bucket_pairs`` the only pair former
+of the LSH bucket tables."""
 
 from __future__ import annotations
 
@@ -13,6 +15,7 @@ import re
 from pyspark.sql import functions as F
 
 from amazon_macie_activity_generator_spark.operators.skew import (
+    bucket_pairs,
     member_pairs,
     salted_self_pairs,
 )
@@ -45,6 +48,27 @@ def pair_former_copies(root: pathlib.Path = ROOT) -> list[str]:
     return hits
 
 
+# the modules whose LSH bucket tables (MinHash, SimHash, SRP) must form
+# their pairs through skew.bucket_pairs
+LSH_MODULES = ("operators/dedup.py", "operators/similarity.py")
+GATHER = re.compile(r"\bcollect_list\(")
+PAIR_FORMER_CALL = re.compile(r"\b(member_pairs|salted_self_pairs)\(")
+
+
+def own_bucket_gathers(root: pathlib.Path = ROOT) -> list[str]:
+    """Every LSH module that gathers with its own ``collect_list`` and
+    calls a pair former next to it instead of ``bucket_pairs``, as
+    ``path: collect_list + <former>``."""
+    hits = []
+    for rel in LSH_MODULES:
+        path = root / rel
+        text = path.read_text()
+        if GATHER.search(text):
+            for former in sorted({m.group(1) for m in PAIR_FORMER_CALL.finditer(text)}):
+                hits.append(f"{path.relative_to(root.parent)}: collect_list + {former}")
+    return hits
+
+
 def test_pair_formation_lives_only_in_skew():
     assert pair_former_copies() == []
 
@@ -65,6 +89,29 @@ def test_guard_finds_pasted_copies(tmp_path):
         f"{PKG}/mod.py:2 pair explode",
         f"{PKG}/mod.py:3 pair explode",
         f"{PKG}/mod.py:5 salt fan",
+    ]
+
+
+def test_lsh_bucket_tables_pair_through_bucket_pairs():
+    assert own_bucket_gathers() == []
+
+
+def test_bucket_guard_finds_own_gathers(tmp_path):
+    pkg = tmp_path / PKG
+    (pkg / "operators").mkdir(parents=True)
+    (pkg / "operators" / "dedup.py").write_text(
+        'g = b.groupBy("band", "bh").agg(F.sort_array(F.collect_list("id")).alias("ids"))\n'
+        'light = g.select(F.explode(member_pairs("ids")))\n'
+        'heavy = salted_self_pairs(rows, ["band", "bh"], "id")\n'
+    )
+    # a pair former with no gather of its own is not a bucket gather
+    (pkg / "operators" / "similarity.py").write_text(
+        'pairs = bucket_pairs(members, ["bucket"], "m", 4096)\n'
+        'n = F.size(F.collect_set("m"))\n'
+    )
+    assert own_bucket_gathers(pkg) == [
+        f"{PKG}/operators/dedup.py: collect_list + member_pairs",
+        f"{PKG}/operators/dedup.py: collect_list + salted_self_pairs",
     ]
 
 
@@ -156,3 +203,75 @@ def test_light_path_equals_salted_path_on_duplicate_ids(spark):
     assert sorted(map(tuple, light_m.collect())) == sorted(map(tuple, salted_m.collect())) == [
         (1, "x", 2, "z"), (1, "y", 2, "z"),
     ]
+
+
+HEAVY = 4
+
+
+def _sized_rows(spark):
+    """Keys holding HEAVY - 1, HEAVY and HEAVY + 1 members, with a NULL
+    id, a duplicate id, a NULL key and a singleton among them."""
+    rows = [(1, i) for i in range(HEAVY - 1)]           # heavy - 1
+    rows += [(2, i) for i in (5, 6, 6, 7)]               # heavy, id 6 twice
+    rows += [(3, i) for i in (None, 10, 11, 12, 13)]     # heavy + 1, NULL id
+    rows += [(None, 20), (None, 21)]                     # NULL key
+    rows += [(4, 30)]                                    # singleton
+    assert [sum(r[0] == k for r in rows) for k in (1, 2, 3)] == [HEAVY - 1, HEAVY, HEAVY + 1]
+    return spark.createDataFrame(
+        [(k, i, f"t{i}") for k, i in rows], "k int, id long, tag string"
+    )
+
+
+def _plain_pairs(rows, member_id):
+    """The plain self-join: every two members of a key, smaller id first."""
+    a = rows.select("k", F.col("m").alias("a"))
+    b = rows.select("k", F.col("m").alias("b"))
+    return a.join(b, "k").filter(member_id("a") < member_id("b")).select("k", "a", "b")
+
+
+def test_bucket_pairs_equals_plain_self_join(spark):
+    rows = _sized_rows(spark)
+    for members, member_id in (
+        (rows.select("k", F.col("id").alias("m")), F.col),
+        (rows.select("k", F.struct("id", "tag").alias("m")), lambda c: F.col(c)["id"]),
+    ):
+        got = bucket_pairs(members, ["k"], "m", HEAVY)
+        assert got.columns == ["k", "a", "b"]
+        got = sorted(map(str, got.collect()))
+        plain = sorted(map(str, _plain_pairs(members, member_id).collect()))
+        assert got == plain
+        # C(3,2) at heavy - 1; C(4,2) - 1 at heavy (the duplicate 6 never
+        # pairs with itself); C(4,2) at heavy + 1 (the NULL id pairs with
+        # nothing); none from the NULL key or the singleton
+        assert len(got) == 3 + 5 + 6
+
+
+def _subtree(lines: list[str], i: int) -> list[str]:
+    """The lines of the tree-string node at line ``i`` and its inputs."""
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-|"))
+
+    end = i + 1
+    while end < len(lines) and depth(lines[end]) > depth(lines[i]):
+        end += 1
+    return lines[i:end]
+
+
+def test_bucket_pairs_gather_reads_only_light_keys(spark):
+    """In the executed plan, the rows under the collect_list aggregate
+    have passed a filter on the size tag at most ``heavy``: no gather
+    buffer can hold a heavy key's members."""
+    df = bucket_pairs(_sized_rows(spark), ["k"], "id", HEAVY)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    lines = plan.treeString().splitlines()
+    gathers = [i for i, ln in enumerate(lines) if "partial_collect_list" in ln]
+    assert gathers
+    light_filter = re.compile(rf"Filter .*__size#\d+L? <= {HEAVY}\)")
+    for i in gathers:
+        below = _subtree(lines, i)
+        assert any(light_filter.search(ln) for ln in below), "\n".join(below)
+        assert not any(re.search(r"__size#\d+L? > ", ln) for ln in below)
