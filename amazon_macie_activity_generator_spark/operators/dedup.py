@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from amazon_macie_activity_generator_spark.cache import scoped_persist
 from amazon_macie_activity_generator_spark.operators.skew import bucket_pairs
 
 # Java regex \s is [ \t\n\x0B\f\r]; RE2 (DuckDB's regex engine) \s
@@ -214,10 +215,10 @@ def _minhash_base_and_bands(
     verify), and without the InMemoryRelation Catalyst's CollapseProject
     inlines the signature into every band slice — a ~100x recomputation
     (measured 424 s -> ~2 s at sf0.1). Per-partition cache locking keeps
-    concurrent branches from computing a partition twice, and the build
-    stays action-free, so the bench timer sees the real cost."""
-    from amazon_macie_activity_generator_spark.cache import scoped_persist
-
+    concurrent branches from computing a partition twice. The base is
+    filled at build time, by ``bucket_pairs``' size check over the
+    banded table: the signature runs once there and the pairs and the
+    verify read the cache."""
     base = scoped_persist(
         df.select(
             F.col(id_col).alias("id"),

@@ -7,8 +7,9 @@ Two paths:
   so no global sort. The right baseline, and exact.
 - ``lsh_bucket_topk``: scale path 1 — random-hyperplane LSH (Charikar
   '02 SRP): seeded deterministic Rademacher planes, bucket id = sign-bit
-  string (one numpy matmul in an Arrow UDF; pure-expression twin kept
-  under test), candidates = bucket collisions under multi-probe (all
+  string (one numpy matmul in an Arrow UDF, ``srp_buckets_arrow``;
+  the DuckDB oracles re-derive the same buckets from the planes as
+  sign-bit masks), candidates = bucket collisions under multi-probe (all
   Hamming-1 neighbors), exact cosine re-rank within candidates. At
   100 TB: corpus bucketing is one narrow pass; queries join only their
   probe buckets instead of the full corpus.
@@ -31,6 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from amazon_macie_activity_generator_spark.cache import scoped_persist
 from amazon_macie_activity_generator_spark.operators.skew import bucket_pairs
 
 
@@ -558,9 +560,11 @@ def embedding_near_dup(
       per (bucket, salt_a, salt_b) cell, so one popular bucket cannot pin
       its d^2/2 pair formation to a single task, and no gather holds
       more than ``heavy_bucket`` members.  Pair set is identical to the
-      plain join.  Bucket sizes come from a count window over the
-      bucket, whose shuffle of the vector-carrying rows the gather
-      reuses."""
+      plain join.  ``bucket_pairs``' size check (the largest bucket's
+      member count, one eager aggregation) reads the persisted SRP base
+      and fills its cache, so the SRP Arrow UDF runs once, at build, and
+      a corpus whose buckets all fit ``heavy_bucket`` is paired by one
+      plain gather with no count window or salted branch."""
     # NULL vectors have no geometry: excluded up front (mirrored as
     # WHERE embedding IS NOT NULL in the oracle). NULL ids are excluded
     # too — pair-set-equivalent to the old l.id < r.id join condition,
@@ -572,8 +576,6 @@ def embedding_near_dup(
     budf = srp_buckets_arrow([srp_planes(dim, planes, "srp")])
     # norm per ROW here, not per pair inside the pair explode — computing
     # it per PAIR would do O(pairs * dim) redundant work
-    from amazon_macie_activity_generator_spark.cache import scoped_persist
-
     base = scoped_persist(
         df.select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
@@ -583,8 +585,8 @@ def embedding_near_dup(
         "embedding_near_dup",
         keep=2,
     )
-    base.count()  # eager: every downstream branch must read the cache, not race it
-    # pairs form per SRP bucket under skew.bucket_pairs' size rule; the
+    # pairs form per SRP bucket under skew.bucket_pairs' size rule (its
+    # size check fills the base's cache before any pair is formed); the
     # member struct carries each side's vector and norm to the verify
     # stage, so the pairs need no join back to the base
     members = base.select("bucket", F.struct("id", "v", "nrm").alias("m"))

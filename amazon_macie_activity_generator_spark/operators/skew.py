@@ -22,10 +22,13 @@ training-data pipelines).
   past the caller's size bound, a two-sided salted self-join that splits
   each key into ``PAIR_SALTS`` hash cells, so one hot key's d^2/2 pairs
   spread over PAIR_SALTS^2 join cells instead of landing in one task.
-- ``bucket_pairs``: both paths behind one size rule — count each key's
-  members (a window over the key), gather and explode the keys with at
-  most ``heavy`` members, salt the rest. Every LSH bucket table
-  (MinHash, SimHash, SRP) forms its candidate pairs with it.
+- ``bucket_pairs``: both paths behind one size rule, planned from one
+  eager size check — the largest key's member count, from a
+  map-side-combined count per key. When no key has more than ``heavy``
+  members the plan is the plain gather and explode alone; otherwise a
+  count window over the key tags each row, keys of at most ``heavy``
+  members gather and explode, and the rest are salted. Every LSH bucket
+  table (MinHash, SimHash, SRP) forms its candidate pairs with it.
 
 Gathers that are not bucket tables (a capped posting list, a capped
 source set, the TPC-H order pairs) bound their own lists and call the
@@ -156,33 +159,54 @@ def salted_self_pairs(rows: DataFrame, keys: list[str], member: str) -> DataFram
 def bucket_pairs(rows: DataFrame, keys: list[str], member: str, heavy: int) -> DataFrame:
     """``(keys..., a, b)`` with ``a < b``: one row per key and pair of
     members of ``rows`` that share it — the rows of
-    ``rows.join(rows, keys).filter(a < b)``, formed under one size rule.
-
-    Each key's members are counted first, by a count window over
-    ``keys``: one shuffle of the rows by key, which the gather's
-    ``groupBy`` then reuses, and no size table to join back or
-    broadcast. (A map-side-combined count joined back measured slower:
-    its size table was broadcast once per branch, 21 jobs per MinHash
-    entry where the window takes 15, sf0.1 on 4 cores.) A key's rows
-    meet in one task for the count, which holds them in the window's
-    spillable buffer — linear in the key's size; its d^2/2 pairs are
-    what the salting spreads.
-    Keys with at most ``heavy`` members gather
+    ``rows.join(rows, keys).filter(a < b)``, formed under one size rule:
+    keys with at most ``heavy`` members gather
     ``sort_array(collect_list(member))`` and pair in-task with
-    ``member_pairs``; no gather buffer holds more than ``heavy``
-    members. Larger keys go to ``salted_self_pairs``. ``member`` is a
+    ``member_pairs``, larger keys go to ``salted_self_pairs``, and no
+    gather buffer holds more than ``heavy`` members. ``member`` is a
     scalar id column or a struct column whose first field is the id;
-    NULL keys and NULL ids form no pairs."""
+    NULL keys and NULL ids form no pairs.
+
+    The plan is chosen from one eager size check, the way AQE picks a
+    join from runtime sizes. It reads the largest member count of any
+    non-NULL key as the top row of a map-side-combined count per key
+    (one small shuffle of (key, partial count) rows; each task's top row
+    merges on the driver).
+
+    - Largest key at most ``heavy`` (the common case): the plain gather
+      and explode, one shuffle of the rows by key. No window, no union
+      and no salted branch are planned.
+    - Some key past ``heavy``: a count window over ``keys`` tags each
+      row with its key's size; the light keys gather from the window's
+      shuffle and the heavy ones are salted. A key's rows meet in one
+      task for the count, held in the window's spillable buffer — linear
+      in the key's size; its d^2/2 pairs are what the salting spreads.
+
+    The check runs Spark jobs at build time, so callers feed a persisted
+    frame: the check then fills the cache and the pairs read it, instead
+    of computing the rows twice. The cache also keeps the rows the plan
+    was chosen for, so the unfiltered gather does not meet a key that
+    grew past ``heavy`` on a recomputation."""
     dtype = rows.schema[member].dataType
     id_field = dtype.fields[0].name if isinstance(dtype, StructType) else None
+    rows = rows.dropna(subset=keys).select(*keys, member)
+    # the top row by count, not a global F.max: the driver merges each
+    # task's top row, so the check needs no second exchange (one job less)
+    top = rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n")).orderBy(F.desc("__n")).first()
+
+    def gather(light: DataFrame) -> DataFrame:
+        return (
+            light.groupBy(*keys)
+            .agg(F.sort_array(F.collect_list(member)).alias("__ms"))
+            .select(*keys, F.explode(member_pairs("__ms", id_field)).alias("__pr"))
+            .select(*keys, F.col("__pr.a").alias("a"), F.col("__pr.b").alias("b"))
+        )
+
+    if top is None or top["__n"] <= heavy:
+        return gather(rows)
     size = F.count(F.lit(1)).over(Window.partitionBy(*keys))
-    tagged = rows.dropna(subset=keys).select(*keys, member, size.alias("__size"))
-    light = (
-        tagged.filter(F.col("__size") <= heavy)
-        .groupBy(*keys)
-        .agg(F.sort_array(F.collect_list(member)).alias("__ms"))
-        .select(*keys, F.explode(member_pairs("__ms", id_field)).alias("__pr"))
-        .select(*keys, F.col("__pr.a").alias("a"), F.col("__pr.b").alias("b"))
-    )
+    tagged = rows.select(*keys, member, size.alias("__size"))
     heavy_rows = tagged.filter(F.col("__size") > heavy).drop("__size")
-    return light.unionAll(salted_self_pairs(heavy_rows, keys, member))
+    return gather(tagged.filter(F.col("__size") <= heavy)).unionAll(
+        salted_self_pairs(heavy_rows, keys, member)
+    )

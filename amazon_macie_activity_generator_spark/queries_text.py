@@ -335,8 +335,8 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan barrier: the InMemoryRelation keeps the signature expression
     from inlining into both banded self-join sides, and per-partition
     cache locking keeps the two branches from double-computing it at
-    runtime — no eager count() needed, so the build phase stays
-    action-free and the bench timer sees the real cost."""
+    runtime. ``bucket_pairs``' size check fills it at build, so the
+    signature runs once, before the pairs are planned."""
     begin_scope("dedup_simhash", spark)
     sig = scoped_persist(simhash64(_docs_aug(spark, sf_dir)), "dedup_simhash")
     return simhash_near_pairs(sig, max_hamming=3)

@@ -42,12 +42,21 @@ from amazon_macie_activity_generator_spark.operators.similarity import (
 from amazon_macie_activity_generator_spark.sources.tables import load_table
 
 
+def _spread(df: DataFrame) -> DataFrame:
+    """``df`` spread across cores, hashed on vec_id: the embeddings
+    table arrives as one input split locally, and the SRP bucket/cosine
+    projections are CPU-bound (at real scale maxPartitionBytes provides
+    the splits). Spread a frame once, after every union, so a Python
+    UDF over it runs in one wave of ``defaultParallelism`` tasks: a
+    union of two spread frames has twice the partitions, and each Python
+    task pays a fixed set-up cost in its worker (PySpark re-scans the
+    worker's import path on every task)."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, "vec_id")
+
+
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings, spread across cores: the table arrives as one input
-    split locally, and the SRP bucket/cosine projections are CPU-bound
-    (at real scale maxPartitionBytes provides the splits)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.repartition(emb.sparkSession.sparkContext.defaultParallelism, "vec_id")
+    """embeddings, spread across cores (``_spread``)."""
+    return _spread(load_table(spark, sf_dir, "embeddings"))
 
 
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,8 +66,9 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket ids, the bucket self-join, and the exact-cosine filter in
     DuckDB. Corpus is augmented with slightly-perturbed copies
     (vec_id+1000000, first component nudged) so near-dup pairs exist to
-    find."""
-    emb = _emb(spark, sf_dir)
+    find. The copies are unioned in before the corpus is spread, so the
+    SRP Arrow UDF runs in one wave of ``defaultParallelism`` tasks."""
+    emb = load_table(spark, sf_dir, "embeddings")
     pert = emb.filter(F.col("vec_id") % 20 == 0).select(
         (F.col("vec_id") + 1000000).alias("vec_id"),
         F.concat(
@@ -70,7 +80,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dim pinned to the corpus schema (64): the oracle's plane masks are
     # 64-dim literals already, and skipping _infer_dim drops an eager
     # full-corpus aggregation from every build (r14, guide §1.2)
-    return embedding_near_dup(emb.unionByName(pert), threshold=0.9, planes=8, dim=64)
+    return embedding_near_dup(_spread(emb.unionByName(pert)), threshold=0.9, planes=8, dim=64)
 
 
 def _srp_mask_values(planes: int = 10, tables: int | None = 4, dim: int = 64) -> str:

@@ -51,9 +51,20 @@ _EAGER_CAPS = {
     # 32-33 with one round per hop
     "dedup_groups": 9,
     "dedup_keep_best": 10,
+    # bucket_pairs' size check: the largest LSH bucket's member count,
+    # one eager aggregation that plans the pair gather (and fills the
+    # persisted signature base it reads); 5 measured at sf0.001 on
+    # local[4] for each entry in each of three builds (1 for the
+    # MinHash/SimHash builds before the check, 6 for embedding_near_dup
+    # with its former eager base count)
+    "dedup_minhash": 6,
+    "dedup_minhash_md5": 6,
+    "dedup_simhash": 6,
+    "dedup_simhash_md5": 6,
+    "split_leakage": 6,
+    "embedding_near_dup": 6,
     # driver-side model state embedded as plan literals: IVF centroids,
-    # auto-planes occupancy count, k-means Lloyd iterations
-    "embedding_near_dup": 16,
+    # k-means Lloyd iterations
     "topk_cosine_ivf": 16,
     "topk_recall_ivf": 8,
     "kmeans_assign": 8,

@@ -1,10 +1,11 @@
 """The pair former in ``operators/skew.py``: ``member_pairs`` (the in-task
 C(n, 2) explode over a sorted member array), ``salted_self_pairs``
 (the salted self-join for keys past a gather's size bound) and
-``bucket_pairs`` (both behind one size rule), checked against their
-plain definitions, plus source guards that keep them the package's only
-copies of either construction and ``bucket_pairs`` the only pair former
-of the LSH bucket tables."""
+``bucket_pairs`` (both behind one size rule, planned from one size
+check), checked against their plain definitions and their executed
+plans, plus source guards that keep them the package's only copies of
+either construction and ``bucket_pairs`` the only pair former of the LSH
+bucket tables; and the one-wave SRP stage of embedding_near_dup."""
 
 from __future__ import annotations
 
@@ -19,6 +20,7 @@ from amazon_macie_activity_generator_spark.operators.skew import (
     member_pairs,
     salted_self_pairs,
 )
+from amazon_macie_activity_generator_spark.queries_vectors import q_embedding_near_dup
 
 PKG = "amazon_macie_activity_generator_spark"
 ROOT = pathlib.Path(__file__).resolve().parent.parent / PKG
@@ -258,6 +260,37 @@ def _subtree(lines: list[str], i: int) -> list[str]:
     return lines[i:end]
 
 
+def _executed_lines(df) -> list[str]:
+    """The executed plan of ``df``, collected already, as tree-string lines."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan.treeString().splitlines()
+
+
+def test_bucket_pairs_without_heavy_keys_is_one_gather(spark):
+    """Keys of HEAVY - 1 and HEAVY members (no key past the bound): the
+    size check plans the plain gather alone — no count window, no salted
+    branch, one collect_list — and its rows are the plain self-join's."""
+    rows = _sized_rows(spark).filter(F.col("k").isNull() | (F.col("k") != 3))
+    for members, member_id in (
+        (rows.select("k", F.col("id").alias("m")), F.col),
+        (rows.select("k", F.struct("id", "tag").alias("m")), lambda c: F.col(c)["id"]),
+    ):
+        df = bucket_pairs(members, ["k"], "m", HEAVY)
+        assert df.columns == ["k", "a", "b"]
+        got = sorted(map(str, df.collect()))
+        assert got == sorted(map(str, _plain_pairs(members, member_id).collect()))
+        lines = _executed_lines(df)
+        plan = "\n".join(lines)
+        assert not any(re.match(r"[\s:+|-]*Window\b", ln) for ln in lines), plan
+        assert not re.search(r"__(size|salt|sa|sb)\b", plan), plan
+        assert sum("partial_collect_list" in ln for ln in lines) == 1, plan
+        # C(3,2) at heavy - 1; C(4,2) - 1 at heavy (the duplicate 6 never
+        # pairs with itself); none from the NULL key or the singleton
+        assert len(got) == 3 + 5
+
+
 def test_bucket_pairs_gather_reads_only_light_keys(spark):
     """In the executed plan, the rows under the collect_list aggregate
     have passed a filter on the size tag at most ``heavy``: no gather
@@ -275,3 +308,18 @@ def test_bucket_pairs_gather_reads_only_light_keys(spark):
         below = _subtree(lines, i)
         assert any(light_filter.search(ln) for ln in below), "\n".join(below)
         assert not any(re.search(r"__size#\d+L? > ", ln) for ln in below)
+
+
+def test_embedding_near_dup_srp_runs_in_one_wave(spark, sf_dir):
+    """The perturbed copies join the corpus before it is spread across
+    cores, so the SRP Arrow UDF runs in at most ``defaultParallelism``
+    tasks (each Python task pays a fixed set-up cost in its worker): the
+    partitions of the SRP base, which the build's size check fills."""
+    spark.catalog.clearCache()
+    q_embedding_near_dup(spark, sf_dir)
+    srp = [i for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+           if "ArrowEvalPython" in i.name()]
+    assert len(srp) == 1
+    assert srp[0].numCachedPartitions() == srp[0].numPartitions()
+    assert srp[0].numPartitions() <= spark.sparkContext.defaultParallelism
+    spark.catalog.clearCache()
