@@ -544,7 +544,14 @@ def simhash_near_pairs(sig_df: DataFrame, max_hamming: int = 3) -> DataFrame:
     giant-bucket salted-join guard as the MinHash path. This matters MORE
     for simhash: every exact-duplicate (and every empty) document has the
     identical signature, so all four chunks collide and a d-sized
-    boilerplate cluster would otherwise build d^2/2 pairs in one task."""
+    boilerplate cluster would otherwise build d^2/2 pairs in one task.
+
+    Feed a persisted ``sig_df``, as ``q_dedup_simhash`` does.
+    ``bucket_pairs`` runs a size check over the chunk table before it
+    plans the pairs, so an unpersisted frame computes its signatures
+    twice, once for the check and once for the pairs; and a frame whose
+    recomputation can differ may then put more than the bound's 512 ids
+    into a gather that the check planned from the first computation."""
     chunks = F.array(*[
         F.struct(
             F.lit(c).alias("band"),

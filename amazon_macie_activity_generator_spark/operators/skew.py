@@ -23,12 +23,12 @@ training-data pipelines).
   each key into ``PAIR_SALTS`` hash cells, so one hot key's d^2/2 pairs
   spread over PAIR_SALTS^2 join cells instead of landing in one task.
 - ``bucket_pairs``: both paths behind one size rule, planned from one
-  eager size check — the largest key's member count, from a
-  map-side-combined count per key. When no key has more than ``heavy``
-  members the plan is the plain gather and explode alone; otherwise a
-  count window over the key tags each row, keys of at most ``heavy``
-  members gather and explode, and the rest are salted. Every LSH bucket
-  table (MinHash, SimHash, SRP) forms its candidate pairs with it.
+  eager size check — the largest key's member count, from a count per
+  key. When no key has more than ``heavy`` members the plan is the plain
+  gather and explode alone; otherwise a count window over the key tags
+  each row, keys of at most ``heavy`` members gather and explode, and
+  the rest are salted. Every LSH bucket table (MinHash, SimHash, SRP)
+  forms its candidate pairs with it.
 
 Gathers that are not bucket tables (a capped posting list, a capped
 source set, the TPC-H order pairs) bound their own lists and call the
@@ -169,18 +169,24 @@ def bucket_pairs(rows: DataFrame, keys: list[str], member: str, heavy: int) -> D
 
     The plan is chosen from one eager size check, the way AQE picks a
     join from runtime sizes. It reads the largest member count of any
-    non-NULL key as the top row of a map-side-combined count per key
-    (one small shuffle of (key, partial count) rows; each task's top row
-    merges on the driver).
+    non-NULL key as the top row of a count per key (each task's top row
+    merges on the driver). The check is not small: in a band table
+    almost every key is a singleton, so the map-side combine barely
+    shrinks the rows and the check shuffles about one (key, count) row
+    per input row, as many rows as the gather does.
 
-    - Largest key at most ``heavy`` (the common case): the plain gather
-      and explode, one shuffle of the rows by key. No window, no union
-      and no salted branch are planned.
+    - Largest key at most ``heavy``: the plain gather and explode, one
+      shuffle of the rows by key. No window, no union and no salted
+      branch are planned. The check costs less than the sort and window
+      it replaces: on a 2M-row band table of singletons (4 cores) the
+      build+exec took 1.7-1.9 s against 2.7-2.9 s for the window path.
     - Some key past ``heavy``: a count window over ``keys`` tags each
       row with its key's size; the light keys gather from the window's
       shuffle and the heavy ones are salted. A key's rows meet in one
       task for the count, held in the window's spillable buffer — linear
       in the key's size; its d^2/2 pairs are what the salting spreads.
+      Here the check is spent on top of the window path: 3.1-3.3 s
+      against 2.8-3.0 s on the same table with one 1,000-member key.
 
     The check runs Spark jobs at build time, so callers feed a persisted
     frame: the check then fills the cache and the pairs read it, instead
